@@ -20,7 +20,41 @@ def bgzf_block(payload: bytes) -> bytes:
 BGZF_EOF = bytes.fromhex(
     "1f8b08040000000000ff0600424302001b0003000000000000000000")
 
-def encode_record(fields, refs):
+def reg2bin(beg, end):
+    """SAM spec 5.3: the BAI bin of the 0-based half-open span [beg, end)."""
+    end -= 1
+    if beg >> 14 == end >> 14: return ((1 << 15) - 1) // 7 + (beg >> 14)
+    if beg >> 17 == end >> 17: return ((1 << 12) - 1) // 7 + (beg >> 17)
+    if beg >> 20 == end >> 20: return ((1 << 9) - 1) // 7 + (beg >> 20)
+    if beg >> 23 == end >> 23: return ((1 << 6) - 1) // 7 + (beg >> 23)
+    if beg >> 26 == end >> 26: return ((1 << 3) - 1) // 7 + (beg >> 26)
+    return 0
+
+def csi_reg2bin(beg, end, min_shift, depth):
+    """CSI spec: the bin of [beg, end) for a (min_shift, depth) index."""
+    end -= 1
+    s, t = min_shift, ((1 << (depth * 3)) - 1) // 7
+    for lvl in range(depth, 0, -1):
+        if beg >> s == end >> s:
+            return t + (beg >> s)
+        s += 3
+        t -= 1 << ((lvl - 1) * 3)
+    return 0
+
+def record_bin(pos0, flag, cigar_pairs, csi_depth):
+    """The BAM record's bin field: an unmapped or zero-length record spans
+    one base, so an unplaced one (pos -1) gets reg2bin(-1, 0) = 4680.
+    Past 2^29 it is the CSI bin, cut to the field's 16 bits."""
+    rlen = 0 if flag & 4 else sum(
+        int(n) for n, op in cigar_pairs if op in "MDN=X")
+    end = pos0 + max(1, rlen)
+    if pos0 < 0:
+        return reg2bin(-1, 0)
+    if end <= 1 << 29:
+        return reg2bin(pos0, end)
+    return csi_reg2bin(pos0, end, 14, csi_depth) & 0xffff
+
+def encode_record(fields, refs, csi_depth=5):
     qname, flag, rname, pos, mapq, cigar, rnext, pnext, tlen, seq, qual = fields[:11]
     tags = fields[11:]
     ref_id = refs.index(rname) if rname in refs else -1
@@ -33,9 +67,11 @@ def encode_record(fields, refs):
     name = qname.encode() + b"\0"
     cigar_ops = b""
     n_cigar = 0
+    cigar_pairs = []
     if cigar != "*":
         import re
-        for num, op in re.findall(r"(\d+)([MIDNSHP=X])", cigar):
+        cigar_pairs = re.findall(r"(\d+)([MIDNSHP=X])", cigar)
+        for num, op in cigar_pairs:
             cigar_ops += struct.pack("<I", (int(num) << 4) | "MIDNSHP=X".index(op))
             n_cigar += 1
     packed = bytearray()
@@ -61,7 +97,8 @@ def encode_record(fields, refs):
         else:
             raise ValueError(f"unsupported tag type {typ}")
     body = struct.pack("<iiBBHHHiiii",
-        ref_id, int(pos) - 1, len(name), int(mapq), 0, n_cigar, int(flag),
+        ref_id, int(pos) - 1, len(name), int(mapq),
+        record_bin(int(pos) - 1, int(flag), cigar_pairs, csi_depth), n_cigar, int(flag),
         len(seq), next_ref_id, int(pnext) - 1, int(tlen)) + name + cigar_ops + bytes(packed) + qual_b + tag_bytes
     return struct.pack("<i", len(body)) + body
 
@@ -85,8 +122,12 @@ def main(sam_path, bam_path):
     for name, ln in zip(refs, ref_lens):
         nb = name.encode() + b"\0"
         payload += struct.pack("<i", len(nb)) + nb + struct.pack("<i", ln)
+    # the depth a CSI index of this dictionary would use (min_shift 14)
+    csi_depth = 5
+    while max(ref_lens, default=0) > 1 << (14 + 3 * csi_depth):
+        csi_depth += 1
     for rec in records:
-        payload += encode_record(rec, refs)
+        payload += encode_record(rec, refs, csi_depth)
     with open(bam_path, "wb") as f:
         # split payload across blocks to exercise multi-block reading
         step = 200

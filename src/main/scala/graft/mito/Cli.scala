@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
   *
   *   graft.mito.Cli --prefix S1 --out out.sam --ld mitomap.ld
   *     --numt NUMTs.txt --model <dir> [--prob 0.5] [--threads 4]
-  *     [--ld-mode join|broadcast]
   */
 object Cli {
 
@@ -24,16 +23,19 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val opts = parse(args.toList, Map.empty)
-    def req(k: String): String =
-      opts.getOrElse(k, sys.error(s"missing required option --$k"))
-    val prob = opts.getOrElse("prob", "0.5").toDouble
-    require(prob >= 0.0 && prob <= 1.0, s"--prob must be in [0,1], got $prob")
     val threads = opts.getOrElse("threads", "4").toInt
     require(threads > 0, s"--threads must be positive, got $threads")
 
-    val spark = SparkSession.builder()
+    val spark = session("graft-mito-classify", threads)
+    try println(classify(spark, opts))
+    finally spark.stop()
+  }
+
+  /** The local session every mito CLI runs in. */
+  private[mito] def session(appName: String, threads: Int): SparkSession =
+    SparkSession.builder()
       .master(s"local[$threads]")
-      .appName("graft-mito-classify")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", threads.toString)
       // ObjectHashAggregate (collect_list/typed aggs) falls back to
       // SORT-based aggregation after 128 keys by default — a silent 2x on
@@ -46,15 +48,20 @@ object Cli {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
-      val cfg = MitoPipeline.Config(
-        prefix = req("prefix"), out = req("out"),
-        ldFile = req("ld"), numtFile = req("numt"),
-        prob = prob, ldMode = opts.getOrElse("ld-mode", "join"))
-      val model = RandomForestClassificationModel.load(req("model"))
-      val kept = MitoPipeline.run(spark, cfg, model).count()
-      println(s"wrote $kept alignments to ${cfg.out}")
-    } finally spark.stop()
+
+  /** Classifies one sample and returns the line [[main]] prints. The count
+    * is the one the sink produced while writing, so nothing runs twice. */
+  private[mito] def classify(spark: SparkSession, opts: Map[String, String]): String = {
+    def req(k: String): String =
+      opts.getOrElse(k, sys.error(s"missing required option --$k"))
+    val prob = opts.getOrElse("prob", "0.5").toDouble
+    require(prob >= 0.0 && prob <= 1.0, s"--prob must be in [0,1], got $prob")
+    val cfg = MitoPipeline.Config(
+      prefix = req("prefix"), out = req("out"),
+      ldFile = req("ld"), numtFile = req("numt"), prob = prob)
+    val model = RandomForestClassificationModel.load(req("model"))
+    val kept = MitoPipeline.run(spark, cfg, model)
+    s"wrote $kept alignments to ${cfg.out}"
   }
 }
 
@@ -71,13 +78,7 @@ object FastqToUbamCli {
       opts.getOrElse(k, sys.error(s"missing required option --$k"))
     val threads = opts.getOrElse("threads", "4").toInt
     require(threads > 0, s"--threads must be positive, got $threads")
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-fastq-to-ubam")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cli.session("graft-fastq-to-ubam", threads)
     try {
       val rg = opts.getOrElse("rg", "sample1")
       val n = MitoPipeline.fastqToUbam(spark, req("r1"), req("r2"),

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * (defect D2/B1, SURVEY §4.2) does not exist here, so Catalyst sees the
   * whole pipeline. Column semantics are the *intended* ones (B1 corrected):
   * NTMapQ←MAPQ, NTNumAlignments←NH, NTEditDist←NM, NTScore←NUMT interval
-  * overlap.
+  * overlap. The dimension tables (LD and NUMT) are read on the driver and
+  * enter the plan as a literal expression (NUMT) or a broadcast index
+  * probed in one projection (LD, [[mtFeatures]]).
   */
 object Features {
 
@@ -68,49 +70,32 @@ object Features {
         // canonical order so downstream scoring is deterministic
         sort_array(flatten(collect_list(col("variants")))).as("variants"))
 
-  /** MT features, faithful LD mode: broadcast map + per-row scoring of the
-    * distinct variant pair-multisets (reference `BamReader.scala:147-154`,
-    * `combinations(2)` semantics — see Ld's doc). */
-  def mtFeaturesBroadcast(alignments: DataFrame,
-      ldBc: Broadcast[Map[(String, String), Int]]): DataFrame = {
-    val pairScore = udf { vs: Seq[String] => Ld.scorePairs(ldBc.value, vs) }
+  /** MT features (Read, MTMapQ, MTNumAlignments, MTEditDist, LD): the
+    * per-read aggregate, then each read's variant list scored against the
+    * LD index in the projection right after it ([[Ld.score]]; reference
+    * `BamReader.scala:147-154`). One plan, one evaluation of the scan and
+    * the aggregate, nothing persisted. `ld` is probed inside tasks:
+    * `() => bc.value` over a broadcast [[Ld.Index]] (as
+    * [[MitoPipeline.run]] does), or a constant for a small index. */
+  def mtFeatures(alignments: DataFrame, ld: () => Ld.Index): DataFrame =
     mtPerRead(alignments)
-      .withColumn("LD", pairScore(col("variants")))
+      .withColumn("LD", Ld.score(col("variants"), ld))
       .drop("variants")
-  }
 
-  /** MT features, scalable LD mode: per-row pair generation + broadcast-join
-    * + re-agg (SURVEY §7.4) — no driver-resident map required.
-    *
-    * The per-read aggregate feeds both the feature columns and the pair
-    * scoring branch; it is persisted (memory, spilling to disk) so the
-    * scan→parse→aggregate pipeline executes ONCE — without it Catalyst
-    * prunes the two branches differently and re-evaluates the whole
-    * sub-plan per branch (2× the dominant cost at scale). One row per
-    * read, so the cached frame is orders of magnitude smaller than the
-    * alignment input. */
-  def mtFeaturesJoin(alignments: DataFrame, ld: DataFrame): DataFrame = {
-    val perRead = mtPerRead(alignments)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.synchronized { persisted += perRead }
-    perRead
-      .join(Ld.pairScores(perRead.select(col("Read"), col("variants")), ld),
-        Seq("Read"), "left")
-      .withColumn("LD", coalesce(col("LD"), lit(0)))
-      .drop("variants")
-  }
+  /** [[mtFeatures]] over an index built from a broadcast LD map. */
+  def mtFeaturesBroadcast(alignments: DataFrame,
+      ldBc: Broadcast[Map[(String, String), Int]]): DataFrame =
+    mtFeatures(alignments, constant(Ld.index(ldBc.value)))
 
-  /** The intermediate frames [[mtFeaturesJoin]] persists (Spark's cache
-    * manager dedupes identical plans, so repeated calls on the same inputs
-    * share one entry — the set only grows across DISTINCT inputs). A
-    * long-lived session calls [[releaseCaches]] once the join outputs are
-    * materialized; one-shot drivers can rely on context shutdown. */
-  private val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  /** [[mtFeatures]] over an index built from an [[Ld.load]] frame. */
+  def mtFeaturesJoin(alignments: DataFrame, ld: DataFrame): DataFrame =
+    mtFeatures(alignments, constant(Ld.index(Ld.toMap(ld))))
 
-  def releaseCaches(): Unit = persisted.synchronized {
-    persisted.foreach(_.unpersist(blocking = false))
-    persisted.clear()
-  }
+  private def constant(i: Ld.Index): () => Ld.Index = () => i
+
+  /** Nothing is persisted by this object any more. */
+  @deprecated("mtFeatures persists nothing; there is nothing to release", "")
+  def releaseCaches(): Unit = ()
 
   /** Feature join (reference J1, `MTClassifierModel.scala:83` — inner on
     * Read; the comment said left join, the code was inner; we keep inner as
@@ -125,29 +110,21 @@ object Features {
     * no single-partition window). Empty input → typed null columns
     * (reference P5 path).
     *
-    * r16: the pooled stats are ONE two-column aggregate over `df`, not an
-    * aggregate over a union of two single-column prunings. The union form
-    * evaluated the whole upstream pipeline once per arm (scan → synthesis →
-    * parse → per-read aggregate → feature join, ×2 on top of the output
-    * branch — x02's plan carried three copies of the pipeline and ~24
-    * exchanges); the single-pass form leaves exactly two evaluations: the
-    * MapQ-pruned stats pass and the full output branch (plan: 2 Exchange
-    * fewer, one scan pair eliminated). Numerically: the MapQ sums are
-    * integer-valued (sums of int mapQ), so Σx/Σx² through decimal-exact
-    * [[graft.functions.Det.dsum]] are EXACT and `mu` is bit-identical to
-    * the old pooled avg; `sigma` uses the same exact-sums formulation as
-    * [[graft.functions.Det.dstddev]] (vs the old order-dependent central-
-    * moment stddev_samp whose ulps varied with partitioning anyway — no
-    * declared query exposes sigma directly: x02 drops the normalized
-    * columns, the classify gates consume them through wide-margin trees).
+    * The pooled stats are ONE two-column aggregate over `df`: an aggregate
+    * over a union of two single-column prunings evaluated the upstream
+    * pipeline once per arm. The MapQ sums are integer-valued, so Σx and Σx²
+    * through decimal-exact [[graft.functions.Det.dsum]] are exact and `mu`
+    * is bit-identical to a pooled avg; `sigma` uses the exact-sums
+    * formulation of [[graft.functions.Det.dstddev]].
     *
-    * The input still feeds two plan branches and is deliberately NOT
-    * persisted here: Catalyst prunes the stats arm down to the MapQ
-    * columns only (the LD/variant subtrees are eliminated), so the
-    * "duplicate" branch is far cheaper than materializing the full feature
-    * row — measured 25% slower on the corpus-scale pipeline (x02) with a
-    * persist. Callers that re-consume the FULL normalized frame
-    * (MitoPipeline.run) persist the result instead. */
+    * The input feeds two plan branches and is not persisted here: Catalyst
+    * prunes the stats arm down to the MapQ columns, and a persist measured
+    * 25% slower on the corpus-scale pipeline (x02).
+    *
+    * [[Classify.Formula]] reads no MapQ column, so scoring does not need
+    * this pass: [[MitoPipeline.run]] and `runCohort` score the
+    * un-normalized frame, and only the training frame
+    * ([[MitoPipeline.features]]) is normalized. */
   def normalizeMapQ(df: DataFrame): DataFrame = {
     import graft.functions.Det.dsum
     val mt = col("MTMapQ").cast(DoubleType)

@@ -1,66 +1,131 @@
 package graft.mito
 
-import org.apache.spark.broadcast.Broadcast
+import java.io.{ObjectInputStream, ObjectOutputStream}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import graft.sources.HadoopIO
 
 /** Linkage-disequilibrium scoring.
   *
-  * The LD table is a headerless 3-column TSV (Variant1, Variant2, R) —
-  * reference `src/universal/mitomap.ld`; the reference read it with
-  * header=true and silently ate the first row (defect B2, `LD.scala:41-44`).
-  * We read it headerless with an explicit schema. R is quantized
-  * `(R*100000).toInt` and zero entries dropped (`LD.scala:26,47-49`).
+  * The LD table is a headerless 3-column TSV (Variant1, Variant2, R):
+  * reference `src/universal/mitomap.ld`. The reference read it with
+  * header=true and silently ate the first row (defect B2, `LD.scala:41-44`);
+  * [[read]] keeps every line. R is quantized `(R*100000).toInt` and zero
+  * entries dropped (`LD.scala:26,47-49`).
   *
-  * Two formulations of per-read pairwise scoring
-  * (`BamReader.scala:147-153,198-203` — `variants.flatten.combinations(2)`
-  * summed against the broadcast map). `combinations(2)` yields each
-  * DISTINCT pair-multiset once: a variant reported by both mates collapses,
-  * and a self-pair {v,v} appears (once) iff v occurs at least twice. Both
-  * modes implement exactly those semantics (FeaturesSpec pins a
-  * duplicate-across-mates fixture):
+  * The table is a dimension (the reference's has 88,237 rows, under 2 MB),
+  * so it is read on the driver with no Spark job, built into one
+  * canonical-pair [[Index]] and broadcast once per run, as the reference
+  * loads it into a driver map and probes it per read (`LD.scala:40-51`,
+  * `BamReader.scala:198-203`). [[score]] is the one scoring path: a read's
+  * variant list summed with `combinations(2)` semantics
+  * (`BamReader.scala:147-153`). Each DISTINCT pair-multiset counts once: a
+  * variant reported by both mates collapses, and a self-pair {v,v} appears
+  * (once) iff v occurs at least twice.
   *
-  *  - faithful: broadcast `Map[(String,String),Int]`, probed symmetrically
-  *    in a UDF over the distinct pair-multisets;
-  *  - scalable: generate the distinct pair-multisets per row with
-  *    higher-order array functions (no extra shuffle, no driver map) →
-  *    explode → broadcast-join the canonicalized (least/greatest) LD
-  *    table → sum per read. At 100 TB the map may not fit a closure; the
-  *    join formulation shuffles only exploded pairs (bounded per read)
-  *    and keeps the LD dim broadcast. Both produce identical scores
-  *    (FeaturesSpec asserts it).
+  * Duplicate and reversed rows follow the reference's map: within one
+  * orientation the last row wins, and (b, a) is probed only when (a, b) is
+  * absent. Variant lists arrive sorted, so every probe is (lo, hi) and the
+  * index keeps, per canonical pair, the (lo, hi) row when the table has
+  * one and the (hi, lo) row otherwise. [[scorePairs]] over [[toMap]] is
+  * the map-based reference the specs compare the index against.
   */
 object Ld {
-
-  val schema: StructType = StructType(Seq(
-    StructField("Variant1", StringType, nullable = false),
-    StructField("Variant2", StringType, nullable = false),
-    StructField("R", DoubleType, nullable = false)))
 
   /** Dim-load counter: the cohort gate (x80) asserts an N-sample run
     * loads the LD dim exactly once, not N times. */
   val loadCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Headerless LD TSV → (Variant1, Variant2, R_q:int) with zeros dropped. */
-  def load(spark: SparkSession, path: String): DataFrame = {
+  /** The LD reader: headerless TSV → ((Variant1, Variant2), R_q) in file
+    * order, zero R_q dropped. As with Spark's permissive CSV reader, extra
+    * fields are ignored and a row with no parsable R is dropped. */
+  def read(path: String): Vector[((String, String), Int)] = {
     loadCount.incrementAndGet()
-    spark.read.option("sep", "\t").schema(schema).csv(path)
-      .select(col("Variant1"), col("Variant2"),
-        (col("R") * 100000).cast(IntegerType).as("R_q"))
-      .where(col("R_q") =!= 0)
+    HadoopIO.readLines(path, HadoopIO.driverConf()).flatMap { line =>
+      val f = line.split("\t", -1)
+      val rq =
+        if (f.length < 3) 0
+        else try (f(2).toDouble * 100000).toInt
+        catch { case _: NumberFormatException => 0 }
+      if (rq == 0) None else Some((f(0), f(1)) -> rq)
+    }
   }
 
-  /** Driver map for the faithful broadcast mode (88k rows ≈ few MB). */
+  /** [[read]] as a local DataFrame (Variant1, Variant2, R_q). */
+  def load(spark: SparkSession, path: String): DataFrame =
+    spark.createDataFrame(read(path).map { case ((a, b), r) => (a, b, r) })
+      .toDF("Variant1", "Variant2", "R_q")
+
+  /** Driver map of a [[load]] frame; a repeated (a, b) keeps its last row. */
   def toMap(ld: DataFrame): Map[(String, String), Int] =
     ld.collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
 
-  /** Symmetric probe (reference `LD.scala:59-67`). */
+  /** Canonical-pair index over LD rows given in file order (or a map). */
+  def index(rows: Iterable[((String, String), Int)]): Index = {
+    val t = new java.util.HashMap[String, Integer]()
+    // reversed rows first, so a row in canonical orientation overwrites
+    rows.foreach { case ((a, b), r) => if (a.compareTo(b) > 0) t.put(key(b, a), r) }
+    rows.foreach { case ((a, b), r) => if (a.compareTo(b) <= 0) t.put(key(a, b), r) }
+    new Index(t)
+  }
+
+  private def key(lo: String, hi: String): String = lo + "\t" + hi
+
+  /** R_q per unordered variant pair. Serialized as a flat (key, R_q)
+    * sequence; the hash table is rebuilt on deserialization. */
+  final class Index private[Ld] (
+      @transient private var table: java.util.HashMap[String, Integer])
+      extends Serializable {
+
+    /** R_q of the pair {a, b}; 0 when the table has no row for it. */
+    def lookup(a: String, b: String): Int = {
+      val v = table.get(if (a.compareTo(b) <= 0) key(a, b) else key(b, a))
+      if (v == null) 0 else v.intValue
+    }
+
+    /** Σ over the distinct pair-multisets of `vs` (see the object doc). */
+    def score(vs: Seq[String]): Int =
+      if (vs == null) 0
+      else {
+        val d = vs.distinct.toArray
+        var s = 0
+        var i = 0
+        while (i < d.length) {
+          var j = i + 1
+          while (j < d.length) { s += lookup(d(i), d(j)); j += 1 }
+          i += 1
+        }
+        // a value occurring twice or more adds its self-pair once
+        if (d.length != vs.length) vs.diff(d).distinct.foreach(v => s += lookup(v, v))
+        s
+      }
+
+    private def writeObject(out: ObjectOutputStream): Unit = {
+      out.writeInt(table.size)
+      table.forEach((k, v) => { out.writeUTF(k); out.writeInt(v) })
+    }
+
+    private def readObject(in: ObjectInputStream): Unit = {
+      val n = in.readInt()
+      table = new java.util.HashMap[String, Integer](n * 4 / 3 + 1)
+      (0 until n).foreach(_ => table.put(in.readUTF(), in.readInt()))
+    }
+  }
+
+  /** LD score of a variant-list column. `ld` runs inside tasks: pass
+    * `() => bc.value` to probe a broadcast index, or a constant to ship a
+    * small index in the task closure. */
+  def score(variants: Column, ld: () => Index): Column =
+    udf { vs: Seq[String] => ld().score(vs) }.apply(variants)
+
+  /** Symmetric map probe (reference `LD.scala:59-67`). */
   def lookup(m: Map[(String, String), Int], a: String, b: String): Int =
     m.getOrElse((a, b), m.getOrElse((b, a), 0))
 
-  /** Σ over the distinct pair-multisets of `vs` (the `combinations(2)`
-    * semantics — see the object doc). */
+  /** The reference's per-read sum over a driver map: the specs' oracle for
+    * [[Index.score]]. */
   def scorePairs(m: Map[(String, String), Int], vs: Seq[String]): Int = {
     val d = vs.distinct
     var s = 0
@@ -77,57 +142,5 @@ object Ld {
       dup.foreach(v => s += lookup(m, v, v))
     }
     s
-  }
-
-  /** Faithful mode: per-row UDF over the collected variant lists. */
-  def pairScoreUdf(bc: Broadcast[Map[(String, String), Int]]): Column = {
-    val f = udf { variantLists: Seq[Seq[String]] =>
-      scorePairs(bc.value, variantLists.flatten)
-    }
-    f(col("variantLists"))
-  }
-
-  /** Distinct pair-multisets of a variants array, generated per row with
-    * higher-order functions (no shuffle): cross pairs of the distinct
-    * values plus a self-pair for every value occurring ≥2 times. Pairs are
-    * canonicalized (least, greatest) to match the canonicalized LD dim. */
-  private def pairsOfDistinct(variants: Column, d: Column): Column = concat(
-    flatten(transform(d, (x, i) =>
-      transform(slice(d, i + lit(2), size(d)), y =>
-        struct(least(x, y).as("v1"), greatest(x, y).as("v2"))))),
-    transform(
-      filter(d, x => size(filter(variants, e => e === x)) >= 2),
-      x => struct(x.as("v1"), x.as("v2"))))
-
-  /** Scalable mode: input (Read, variants:array<string>) → (Read, LD:int).
-    * Emits a row per read even when no pair scores (LD=0), matching the
-    * faithful mode. Evaluates its input once per branch — callers that
-    * also consume `perRead` elsewhere should persist it (see
-    * Features.mtFeaturesJoin). */
-  def pairScoreJoin(perRead: DataFrame, ld: DataFrame): DataFrame =
-    perRead.select(col("Read"))
-      .join(pairScores(perRead, ld), Seq("Read"), "left")
-      .select(col("Read"), coalesce(col("LD"), lit(0)).as("LD"))
-
-  /** Like pairScoreJoin but emits only reads with at least one scored pair
-    * — callers that already hold the per-read frame left-join this and
-    * coalesce, saving one branch over the input. */
-  def pairScores(perRead: DataFrame, ld: DataFrame): DataFrame = {
-    // materialize array_distinct behind a projection boundary: lambda
-    // expressions are excluded from subexpression elimination, so inlining
-    // `d` into the pair generator would recompute it per use
-    val pairs = perRead
-      .select(col("Read"), col("variants"),
-        array_distinct(col("variants")).as("d"))
-      .select(col("Read"),
-        explode(pairsOfDistinct(col("variants"), col("d"))).as("p"))
-      .select(col("Read"), col("p.v1").as("v1"), col("p.v2").as("v2"))
-    val canonLd = ld.select(
-      least(col("Variant1"), col("Variant2")).as("v1"),
-      greatest(col("Variant1"), col("Variant2")).as("v2"),
-      col("R_q"))
-    pairs.join(broadcast(canonLd), Seq("v1", "v2"))
-      .groupBy(col("Read"))
-      .agg(sum(col("R_q")).cast(IntegerType).as("LD"))
   }
 }

@@ -1,8 +1,10 @@
 package graft.mito
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sources.HadoopIO
 
 /** NUMT (nuclear-mitochondrial segment) reference intervals.
   *
@@ -23,22 +25,24 @@ object Numt {
 
   final case class Interval(chromosome: String, start: Int, end: Int, score: Float)
 
-  val schema: StructType = StructType(Seq(
-    StructField("chromosome", StringType, nullable = false),
-    StructField("nstart", IntegerType, nullable = false),
-    StructField("nend", IntegerType, nullable = false),
-    StructField("score", FloatType, nullable = false)))
-
   /** Dim-load counter: the cohort gate (x80) asserts an N-sample run
     * loads the NUMT dim exactly once, not N times. */
   val loadCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Reads the rows on the driver, with no Spark job. Extra fields are ignored; a row with a missing or unparsable
+    * field fails with its line number. */
   def load(spark: SparkSession, path: String): Seq[Interval] = {
     loadCount.incrementAndGet()
-    spark.read.option("sep", "\t").schema(schema).csv(path)
-      .collect()
-      .map(r => Interval(r.getString(0), r.getInt(1), r.getInt(2), r.getFloat(3)))
-      .toSeq
+    HadoopIO.readLines(path, spark.sparkContext.hadoopConfiguration).zipWithIndex
+      .filter(_._1.nonEmpty).map { case (line, i) =>
+        val f = line.split("\t", -1)
+        try Interval(f(0), f(1).toInt, f(2).toInt, f(3).toFloat)
+        catch {
+          case e @ (_: NumberFormatException | _: ArrayIndexOutOfBoundsException) =>
+            throw new IllegalArgumentException(
+              s"$path:${i + 1}: malformed NUMT row '$line'", e)
+        }
+      }
   }
 
   /** Per-alignment NUMT overlap score as a literal expression:

@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   *   <prefix>_MT_MD.sam  — mito-aligned, calmd -e'd (MD tags)
   *   <prefix>_NT.sam     — nuclear-aligned
   *   <prefix>_MT.sam     — mito-aligned, the records to filter & write
+  *
+  * Each sample is one feature query over two dimension tables read on the
+  * driver: the NUMT intervals fold into the NT scan as a literal
+  * expression, and the LD index is broadcast once per [[run]] (once per
+  * [[runCohort]]) and probed per read.
   */
 object MitoPipeline {
 
@@ -19,73 +24,89 @@ object MitoPipeline {
     out: String,
     ldFile: String,
     numtFile: String,
-    prob: Double = 0.5,
-    ldMode: String = "join") // "join" (scalable) | "broadcast" (faithful)
+    prob: Double = 0.5)
 
-  /** Feature frame for one sample (reference `MTClassifierModel.DF`,
-    * `MTClassifierModel.scala:71-87`). Inputs resolve `<prefix>_X.bam`
-    * first, then `<prefix>_X.sam` (Sam.readAuto). */
+  /** Normalized, labeled feature frame for one sample (reference
+    * `MTClassifierModel.DF`, `MTClassifierModel.scala:71-87`): the
+    * training input of [[TrainCli]]. Inputs resolve `<prefix>_X.bam`
+    * first, then `<prefix>_X.sam` (Sam.readAuto). The LD index ships in
+    * the task closure rather than a broadcast, so the returned frame holds
+    * no handle that needs releasing. */
   def features(spark: SparkSession, cfg: Config, label: Double): DataFrame = {
-    val numts = Numt.load(spark, cfg.numtFile)
-    val nt = Features.ntFeatures(Sam.readAuto(spark, cfg.prefix + "_NT"), numts)
-    val mtAlign = Sam.readAuto(spark, cfg.prefix + "_MT_MD")
-    val mt = cfg.ldMode match {
-      case "broadcast" =>
-        val bc = spark.sparkContext.broadcast(Ld.toMap(Ld.load(spark, cfg.ldFile)))
-        Features.mtFeaturesBroadcast(mtAlign, bc)
-      case _ =>
-        Features.mtFeaturesJoin(mtAlign, Ld.load(spark, cfg.ldFile))
-    }
-    Features.normalizeMapQ(Features.featureFrame(mt, nt, label))
+    val ld = Ld.index(Ld.read(cfg.ldFile))
+    Features.normalizeMapQ(featureFrame(spark, cfg.prefix,
+      Numt.load(spark, cfg.numtFile), () => ld, label))
   }
 
-  /** Classify `<prefix>_MT.sam` with a trained model and write the filtered
-    * single SAM (reference steps 6-10, `MTClassify.scala:159-204`). Returns
-    * the filtered alignment DataFrame (pre-sink) for inspection. */
+  /** One sample's feature frame over dims already read. */
+  private def featureFrame(spark: SparkSession, prefix: String,
+      numts: Seq[Numt.Interval], ld: () => Ld.Index, label: Double)
+      : DataFrame =
+    Features.featureFrame(
+      Features.mtFeatures(Sam.readAuto(spark, prefix + "_MT_MD"), ld),
+      Features.ntFeatures(Sam.readAuto(spark, prefix + "_NT"), numts),
+      label)
+
+  /** Reads the NUMT and LD dims once on the driver, broadcasts the LD
+    * index once, runs `body` over them, and destroys the broadcast. */
+  private def withDims[T](spark: SparkSession, ldFile: String,
+      numtFile: String)(body: (Seq[Numt.Interval], () => Ld.Index) => T): T = {
+    val numts = Numt.load(spark, numtFile)
+    val ld = spark.sparkContext.broadcast(Ld.index(Ld.read(ldFile)))
+    try body(numts, () => ld.value)
+    finally ld.destroy()
+  }
+
+  /** Classify `<prefix>_MT` with a trained model and write the filtered
+    * records to `cfg.out` (reference steps 6-10,
+    * `MTClassify.scala:159-204`): one feature query over the driver-read
+    * dims, scored without MapQ normalization (the model's formula reads no
+    * MapQ column). Returns the number of records written. */
   def run(spark: SparkSession, cfg: Config,
       model: org.apache.spark.ml.classification.RandomForestClassificationModel)
-      : DataFrame = {
-    // persist the feature frame: the empty guard (isEmpty) and the scoring
-    // pass both consume it — without the cache the guard alone executes the
-    // whole scan→agg→join→normalize DAG, then scoring runs it again (the
-    // reference had this same double evaluation, F5)
-    val feat = features(spark, cfg, label = 0.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val filtered = classifyAndWrite(spark, feat, cfg.prefix, cfg.out,
-      cfg.prob, model)
-    feat.unpersist(blocking = false) // sink written; release the cache
-    Features.releaseCaches() // incl. mtFeaturesJoin's per-read aggregate
-    filtered
-  }
+      : Long =
+    withDims(spark, cfg.ldFile, cfg.numtFile) { (numts, ld) =>
+      classifyAndWrite(spark,
+        featureFrame(spark, cfg.prefix, numts, ld, label = 0.5),
+        cfg.prefix, cfg.out, cfg.prob, model)
+    }
 
-  /** Steps 6-10 shared by [[run]] and [[runCohort]]: score the persisted
-    * feature frame, filter `<prefix>_MT`, write the single-file sink. */
-  private def classifyAndWrite(spark: SparkSession, feat: DataFrame,
+  /** Steps 6-10 shared by [[run]] and [[runCohort]]: score the feature
+    * frame, filter `<prefix>_MT`, write the single-file sink. Returns the
+    * sink's record count. */
+  private def classifyAndWrite(spark: SparkSession, features: DataFrame,
       prefix: String, out: String, prob: Double,
       model: org.apache.spark.ml.classification.RandomForestClassificationModel)
-      : DataFrame = {
+      : Long = {
     val srcBase = prefix + "_MT"
     val srcBam = srcBase + ".bam"
     val srcIsBam = graft.sources.HadoopIO.exists(srcBam,
       graft.sources.HadoopIO.driverConf())
     val toWrite = Sam.readAuto(spark, srcBase)
-    // empty-input / prob=0 pass-through guards (reference
-    // MTClassify.scala:159-161,194-197)
-    val filtered =
-      if (prob <= 0.0 || feat.isEmpty) toWrite
-      else {
-        val keys = Classify.mtReadKeys(Classify.score(model, feat), prob)
-        Classify.filterAlignments(toWrite, keys)
-      }
-    val (headerText, refs) =
-      if (srcIsBam) graft.sources.BamWriter.readHeader(srcBam)
-      else Sam.headerFromSam(spark, Sam.resolveSamText(srcBase))
-    if (out.endsWith(".bam"))
-      graft.sources.BamWriter.write(filtered, headerText, refs, out)
-    else
-      Sam.writeSingleSamWithHeader(
-        headerText.split("\n").filter(_.nonEmpty), filtered, out)
-    filtered
+    // persist the feature frame: the empty guard (isEmpty) and the scoring
+    // pass both consume it — without the cache the guard alone executes the
+    // whole scan→agg→join DAG, then scoring runs it again (the reference
+    // had this same double evaluation, F5)
+    val feat = features
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // empty-input / prob=0 pass-through guards (reference
+      // MTClassify.scala:159-161,194-197)
+      val filtered =
+        if (prob <= 0.0 || feat.isEmpty) toWrite
+        else {
+          val keys = Classify.mtReadKeys(Classify.score(model, feat), prob)
+          Classify.filterAlignments(toWrite, keys)
+        }
+      val (headerText, refs) =
+        if (srcIsBam) graft.sources.BamWriter.readHeader(srcBam)
+        else Sam.headerFromSam(spark, Sam.resolveSamText(srcBase))
+      if (out.endsWith(".bam"))
+        graft.sources.BamWriter.write(filtered, headerText, refs, out)
+      else
+        Sam.writeSingleSamWithHeader(
+          headerText.split("\n").filter(_.nonEmpty), filtered, out)
+    } finally feat.unpersist(blocking = false)
   }
 
   /** Paired FASTQ → unmapped BAM (the picard `FastqToSam` analogue) —
@@ -123,36 +144,24 @@ object MitoPipeline {
 
   /** COHORT mode — N samples, ONE session, SHARED dims: the reference is
     * one-sample-per-JVM (`MTClassify.main` takes a single prefix), so a
-    * cohort pays N dim loads and N JVM spins. Here the LD table is loaded,
-    * collected, and `sparkContext.broadcast` ONCE, the NUMT dim loaded
-    * once, and every sample's feature build closes over the SAME broadcast
-    * handle — N samples cost one dim load plus N sample-sized pipelines.
-    * [[graft.mito.Ld.loadCount]] / [[graft.mito.Numt.loadCount]] make the
-    * once-not-N contract observable (the x80 gate asserts the deltas are
-    * exactly 1 across an 8-sample cohort).
+    * cohort pays N dim loads and N JVM spins. Here both dims are read once
+    * and the LD index broadcast once, and every sample's feature query
+    * probes the SAME broadcast — N samples cost one dim load plus N
+    * sample-sized pipelines. [[graft.mito.Ld.loadCount]] /
+    * [[graft.mito.Numt.loadCount]] make the once-not-N contract
+    * observable (the x80 gate asserts the deltas are exactly 1 across an
+    * 8-sample cohort).
     *
-    * `samples` maps each input prefix to its output path. Uses the
-    * faithful broadcast LD mode — the cohort contract is a driver-sized
-    * LD dim; a corpus-sized dim would switch to the join mode per sample
-    * with the LD frame persisted once instead. */
+    * `samples` maps each input prefix to its output path. */
   def runCohort(spark: SparkSession, samples: Seq[(String, String)],
       ldFile: String, numtFile: String, prob: Double,
       model: org.apache.spark.ml.classification.RandomForestClassificationModel)
-      : Unit = {
-    val numts = Numt.load(spark, numtFile)
-    val ldBc = spark.sparkContext.broadcast(Ld.toMap(Ld.load(spark, ldFile)))
-    try samples.foreach { case (prefix, out) =>
-      val nt = Features.ntFeatures(Sam.readAuto(spark, prefix + "_NT"), numts)
-      val mt = Features.mtFeaturesBroadcast(
-        Sam.readAuto(spark, prefix + "_MT_MD"), ldBc)
-      val feat = Features
-        .normalizeMapQ(Features.featureFrame(mt, nt, label = 0.5))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      classifyAndWrite(spark, feat, prefix, out, prob, model)
-      feat.unpersist(blocking = false)
-    } finally {
-      ldBc.unpersist(blocking = false)
-      Features.releaseCaches()
+      : Unit =
+    withDims(spark, ldFile, numtFile) { (numts, ld) =>
+      samples.foreach { case (prefix, out) =>
+        classifyAndWrite(spark,
+          featureFrame(spark, prefix, numts, ld, label = 0.5),
+          prefix, out, prob, model)
+      }
     }
-  }
 }

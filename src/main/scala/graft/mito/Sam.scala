@@ -182,10 +182,9 @@ object Sam {
     * compressed reader (and any gzip tool) scans — WITH intra-file
     * splits. Both plain and compressed go through
     * [[graft.sources.TextSink]], so every task streams its own partition —
-    * no `coalesce(1)` collapsing the upstream compute to one task. */
+    * no `coalesce(1)` collapsing the upstream compute to one task.
+    * Returns the number of records written. */
   def writeSingleSamWithHeader(header: Seq[String], records: DataFrame,
-      out: String): Unit = {
+      out: String): Long =
     graft.sources.TextSink.write(header, records.select(col("line")), out)
-    ()
-  }
 }

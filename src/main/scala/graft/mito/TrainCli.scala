@@ -1,7 +1,5 @@
 package graft.mito
 
-import org.apache.spark.sql.SparkSession
-
 /** Training entry point — reference entry point 2 (SURVEY §3.2,
   * `MTClassifierModel.scala:187-281`): build labeled feature frames from an
   * mtDNA-amplified cohort (label 0.0) and a rho0 (mitochondria-free, label
@@ -21,21 +19,7 @@ object TrainCli {
       opts.getOrElse(k, sys.error(s"missing required option --$k"))
     val threads = opts.getOrElse("threads", "4").toInt
 
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-mito-train")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      // ObjectHashAggregate (collect_list/typed aggs) falls back to
-      // SORT-based aggregation after 128 keys by default — a silent 2x on
-      // every collect_list aggregation; per-key state here is tiny
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      // default 100-entry codegen class cache thrashes across a 50+-query
-      // session: every pass re-runs janino compilation and executes cold
-      // classes (static conf — must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cli.session("graft-mito-train", threads)
     try {
       def cfg(prefix: String) = MitoPipeline.Config(
         prefix = prefix, out = "", ldFile = req("ld"), numtFile = req("numt"))

@@ -1549,9 +1549,9 @@ object Dedup {
     * to a shuffle join — the correct choice at 100 TB corpus scale. */
   private[operators] def broadcastIfSmall(
       df: DataFrame, rows: Long, bytesPerRow: Long): DataFrame = {
-    val thresh = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      df.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
+    // the parsed conf: a threshold of -1 (broadcast disabled) is legal, and
+    // byteStringAsBytes throws on it
+    val thresh = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (thresh > 0 && rows * bytesPerRow <= thresh) broadcast(df) else df
   }
 

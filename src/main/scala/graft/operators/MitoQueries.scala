@@ -117,14 +117,12 @@ object MitoQueries {
       Numt.Interval("chr3", 0, 1000, 7f))
     val nt = Features.ntFeatures(Sam.parse(ntLines), numts)
     // small LD table over the synthesized variant space: positions p+2 for
-    // p in [0,1000), base G; pair (x, x+500) scored
-    // 1000-entry LD dim → faithful broadcast-map mode (single pass over the
-    // aggregated frame with no caching; the join mode persists its per-read
-    // aggregate and is meant for LD tables too big to broadcast)
-    val ldMap = (0 until 1000).map { p =>
+    // p in [0,1000), base G; pair (x, x+500) scored. 1000 entries: small
+    // enough to ship in the task closure
+    val ld = Ld.index((0 until 1000).map { p =>
       (s"${p + 2}G", s"${p + 502}G") -> 42000
-    }.toMap
-    val mt = Features.mtFeaturesBroadcast(mtAlign, s.sparkContext.broadcast(ldMap))
+    })
+    val mt = Features.mtFeatures(mtAlign, () => ld)
     // r17 (VERDICT r16 #3): stage the per-read feature frame (one narrow
     // row per read — 10 numeric columns, ~1/8 of the alignment input row
     // count) through an eager lineage truncation before normalizeMapQ.
@@ -793,7 +791,7 @@ object MitoQueries {
     * cohort pays N JVM spins and N dim loads. Here 8 samples (x08's
     * population partitioned into disjoint `l_orderkey % 32 = 4k + 2`
     * slices) run through `MitoPipeline.runCohort` in ONE session: the LD
-    * map is collected + broadcast once, the NUMT dim loaded once (both
+    * index is read + broadcast once, the NUMT dim loaded once (both
     * asserted via load counters — a regression to per-sample dim loads
     * fails the gate, not just slows it), and each sample's classified
     * single-file BAM is written then independently re-scanned. Output:

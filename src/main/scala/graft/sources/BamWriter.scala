@@ -185,10 +185,10 @@ object BamWriter {
             val pz = new BgzfOutputStream(os)
             while (rows.hasNext) {
               val r = rows.next()
-              if (!doIndex) pz.write(encode(r, refIndex))
+              if (!doIndex) pz.write(encode(r, refIndex, csiDepthB))
               else {
                 val (m0, u0) = pz.virtualPos
-                pz.write(encode(r, refIndex))
+                pz.write(encode(r, refIndex, csiDepthB))
                 val (m1, u1) = pz.virtualPos
                 val refId = refIndex.getOrElse(r.getString(2), -1)
                 val pos = r.getInt(3) - 1
@@ -340,7 +340,22 @@ object BamWriter {
     parts.map(_._2).sum
   }
 
-  private def encode(r: Row, refIndex: Map[String, Int]): Array[Byte] = {
+  /** The record's `bin` field (SAM spec §4.2.1): reg2bin over
+    * [pos, end), where an unmapped or zero-length record spans one base, so
+    * an unplaced record (pos -1) gets 4680. BAI bins address [0, 2^29);
+    * past that the field carries the CSI bin at the writer's depth, cut to
+    * the field's 16 bits. */
+  private def recordBin(pos: Int, flag: Int, cigar: String,
+      csiDepth: Int): Int = {
+    val rlen = if ((flag & 4) != 0) 0 else cigarRefLen(cigar)
+    val end = pos.toLong + math.max(1, rlen)
+    if (pos < 0) BaiIndex.reg2bin(-1, 0)
+    else if (end <= BaiIndex.MaxPos) BaiIndex.reg2bin(pos, end.toInt)
+    else CsiIndex.reg2bin(pos.toLong, end, 14, csiDepth) & 0xffff
+  }
+
+  private def encode(r: Row, refIndex: Map[String, Int], csiDepth: Int)
+      : Array[Byte] = {
     val readName = r.getString(0)
     val flag = r.getInt(1)
     // loud on an unknown contig (ADVICE r14): getOrElse(-1) silently
@@ -409,7 +424,8 @@ object BamWriter {
         32 + name.length + 4 * cigarOps.length + packed.length + seq.length + tags.size())
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     body.putInt(refId).putInt(start - 1)
-    body.put(name.length.toByte).put(mapq.toByte).putShort(0)
+    body.put(name.length.toByte).put(mapq.toByte)
+      .putShort(recordBin(start - 1, flag, cigar, csiDepth).toShort)
     body.putShort(cigarOps.length.toShort).putShort(flag.toShort)
     body.putInt(seq.length).putInt(nextRefId).putInt(pnext - 1).putInt(tlen)
     body.put(name)

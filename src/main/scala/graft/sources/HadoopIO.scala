@@ -57,6 +57,20 @@ object HadoopIO {
     fs(p, conf).open(p)
   }
 
+  /** Every line of a small text file, read on the driver. A compressed
+    * file is decoded by its extension, as Spark's text sources do. */
+  def readLines(pathStr: String, conf: Configuration): Vector[String] = {
+    val p = new Path(pathStr)
+    val raw = fs(p, conf).open(p)
+    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+      .getCodec(p)
+    val in = if (codec == null) raw else codec.createInputStream(raw)
+    val r = new java.io.BufferedReader(new java.io.InputStreamReader(in,
+      java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(r.readLine()).takeWhile(_ != null).toVector
+    finally r.close()
+  }
+
   /** Create/overwrite an output stream. */
   def create(pathStr: String, conf: Configuration): OutputStream = {
     val p = new Path(pathStr)

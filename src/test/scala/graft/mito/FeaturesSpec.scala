@@ -11,11 +11,28 @@ class FeaturesSpec extends SparkSpec {
   lazy val mtAlign = Sam.read(spark, resource("mito/sample_MT_MD.sam"))
 
   test("LD load: headerless (B2 fix), quantized, zeros dropped") {
-    val rows = ld.collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
-    assert(rows.size === 3) // two ~0 rows quantize to 0 and drop
-    assert(rows(("7G", "11C")) === 50000)
-    assert(rows(("105T", "7G")) === -20000)
-    assert(rows(("5C", "6T")) === 30000) // first line NOT eaten as header
+    val rows = ld.collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toSeq
+    // file order; the two ~0 rows quantize to 0 and drop, and the reversed
+    // (6T, 5C) row and the exact duplicate (7G, 11C) row are kept as rows
+    assert(rows === Seq(("7G", "11C") -> 50000, ("105T", "7G") -> -20000,
+      ("5C", "6T") -> 30000, ("6T", "5C") -> 10000, ("7G", "11C") -> 50000))
+    assert(rows.head === (("7G", "11C") -> 50000)) // first line NOT eaten as header
+  }
+
+  test("LD and NUMT readers match Spark's CSV reader on the fixtures") {
+    val viaCsv = spark.read.option("sep", "\t")
+      .schema("Variant1 STRING, Variant2 STRING, R DOUBLE")
+      .csv(resource("mito/ld.tsv"))
+      .select(col("Variant1"), col("Variant2"),
+        (col("R") * 100000).cast("int").as("R_q"))
+      .where(col("R_q") =!= 0)
+    assert(ld.schema.fieldNames.toSeq === viaCsv.schema.fieldNames.toSeq)
+    assert(ld.collect().toSeq === viaCsv.collect().toSeq)
+    val numtCsv = spark.read.option("sep", "\t")
+      .schema("chromosome STRING, nstart INT, nend INT, score FLOAT")
+      .csv(resource("mito/numts.tsv")).collect()
+      .map(r => Numt.Interval(r.getString(0), r.getInt(1), r.getInt(2), r.getFloat(3)))
+    assert(numts === numtCsv.toSeq)
   }
 
   test("LD symmetric lookup") {
@@ -70,16 +87,53 @@ class FeaturesSpec extends SparkSpec {
     assert(!rows.contains("r3") && !rows.contains("r4") && !rows.contains("r5"))
   }
 
-  test("LD pair scoring: broadcast (faithful) == join (scalable) == hand value") {
+  /** (Read → LD) from a feature frame. */
+  private def ldOf(mt: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    mt.select("Read", "LD").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+
+  /** The reference: Ld.scorePairs over the driver map, per read. */
+  private def reference(align: org.apache.spark.sql.DataFrame): Map[String, Int] = {
+    val m = Ld.toMap(ld)
+    Features.mtPerRead(align).select("Read", "variants").collect()
+      .map(r => r.getString(0) -> Ld.scorePairs(m, r.getSeq[String](1))).toMap
+  }
+
+  test("LD pair scoring: single path == Ld.scorePairs reference == hand value") {
+    val idx = Ld.index(Ld.read(resource("mito/ld.tsv")))
+    val viaIndex = ldOf(Features.mtFeatures(mtAlign, () => idx))
+    // r1 pairs: (11C,7G) → the (7G,11C) row 50000 (its duplicate counts
+    // once), (105T,7G) = -20000, (105T,11C) dropped as ~0 → 30000
+    assert(viaIndex("r1") === 30000)
+    assert(viaIndex("r2") === 0) // single variant, no pairs
+    assert(viaIndex === reference(mtAlign))
+    // both adapters land on the same path
     val bc = spark.sparkContext.broadcast(Ld.toMap(ld))
-    val viaBroadcast = Features.mtFeaturesBroadcast(mtAlign, bc)
-      .select("Read", "LD").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val viaJoin = Features.mtFeaturesJoin(mtAlign, ld)
-      .select("Read", "LD").collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    // r1 pairs: (7G,11C)=50000, (7G,105T)=-20000 sym, (11C,105T)=0 -> 30000
-    assert(viaBroadcast("r1") === 30000)
-    assert(viaBroadcast("r2") === 0) // single variant, no pairs
-    assert(viaBroadcast === viaJoin)
+    assert(ldOf(Features.mtFeaturesBroadcast(mtAlign, bc)) === viaIndex)
+    assert(ldOf(Features.mtFeaturesJoin(mtAlign, ld)) === viaIndex)
+    bc.destroy()
+  }
+
+  test("LD duplicate and reversed rows: the reference map's rule, not a sum") {
+    // the fixture holds (5C,6T)=0.3 and the reversed (6T,5C)=0.1, and
+    // (7G,11C)=0.5 twice. The map keeps the last row per orientation and
+    // probes (b,a) only when (a,b) is absent; summing every row of a
+    // canonical pair would give 40000 and 100000.
+    val idx = Ld.index(Ld.read(resource("mito/ld.tsv")))
+    val m = Ld.toMap(ld)
+    assert(idx.lookup("5C", "6T") === 30000 && Ld.lookup(m, "5C", "6T") === 30000)
+    assert(idx.lookup("6T", "5C") === 30000) // the index is symmetric
+    assert(idx.lookup("11C", "7G") === 50000 && Ld.lookup(m, "11C", "7G") === 50000)
+    import spark.implicits._
+    val lines = Seq(
+      // MD 0A0A8 at start 5: read bases C, T at 5, 6 → variants 5C, 6T
+      "rR\t99\tchrM\t5\t30\t10M\t=\t0\t0\tCT========\t*\tNM:i:2\tNH:i:1\tMD:Z:0A0A8",
+      // 7G and 11C (MD 2A3T3 at start 5)
+      "rD\t99\tchrM\t5\t30\t10M\t=\t0\t0\t==G===C===\t*\tNM:i:2\tNH:i:1\tMD:Z:2A3T3"
+    ).toDF("value")
+    val align = Sam.parse(lines)
+    val got = ldOf(Features.mtFeatures(align, () => idx))
+    assert(got === Map("rR" -> 30000, "rD" -> 50000))
+    assert(got === reference(align))
   }
 
   test("combinations(2) semantics: duplicate variants across mates collapse") {
@@ -107,15 +161,18 @@ class FeaturesSpec extends SparkSpec {
       .select("Read", "LD").head().getInt(1)
     assert(viaBroadcast === 50000)
     assert(viaJoin === 50000)
+    assert(Ld.scorePairs(Ld.toMap(ld), vs) === 50000)
   }
 
-  test("mtFeaturesJoin evaluates the per-read aggregation once (cached)") {
+  test("mtFeatures is one plan over one scan, with nothing persisted") {
     val out = Features.mtFeaturesJoin(mtAlign, ld)
-    out.count() // materialize (populates the cache)
-    val plan = out.queryExecution.executedPlan.toString
-    // both branches must read the per-read aggregate from the cache, not
-    // re-run scan->parse->aggregate
-    assert(plan.contains("InMemoryTableScan"), plan.take(2000))
+    out.count()
+    val plan = out.queryExecution.optimizedPlan
+    // the per-read aggregate feeds the LD score in the same projection: one
+    // scan of the input, no pair explode, no join, no cache
+    assert(plan.collectLeaves().size === 1, plan.treeString)
+    assert(!plan.treeString.contains("InMemoryRelation"), plan.treeString)
+    assert(!plan.treeString.contains("Join"), plan.treeString)
   }
 
   test("feature join is inner (reads missing on either side drop) + label") {

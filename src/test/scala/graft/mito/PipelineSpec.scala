@@ -67,7 +67,8 @@ class PipelineSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("mito-e2e").toString
     val c = cfg(tmp)
     val model = Classify.trainRF(trainingFrame, numTrees = 8)
-    val kept = MitoPipeline.run(spark, c, model)
+    val written = MitoPipeline.run(spark, c, model)
+    val kept = Sam.read(spark, c.out)
     val keptReads = kept.select("readName").distinct()
       .collect().map(_.getString(0)).toSet
     // r7 has no features (absent from MT_MD/NT) -> can never be classified MT
@@ -78,7 +79,7 @@ class PipelineSpec extends SparkSpec {
     assert(lines.head.startsWith("@HD"))
     assert(lines.count(_.startsWith("@")) === 2)
     val dataLines = lines.filterNot(_.startsWith("@"))
-    assert(dataLines.size === kept.count())
+    assert(dataLines.size === written)
     assert(dataLines.forall(_.split("\t").length >= 11))
   }
 
@@ -86,8 +87,7 @@ class PipelineSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("mito-bam").toString
     val c = cfg(tmp).copy(out = tmp + "/out.bam", prob = 0.0)
     val model = Classify.trainRF(trainingFrame, numTrees = 4)
-    val kept = MitoPipeline.run(spark, c, model)
-    assert(kept.count() === 5)
+    assert(MitoPipeline.run(spark, c, model) === 5)
     val back = spark.read.format("bam").load(tmp + "/out.bam")
     assert(back.count() === 5)
     assert(back.select("readName").distinct().collect().map(_.getString(0)).sorted
@@ -98,8 +98,57 @@ class PipelineSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("mito-e2e0").toString
     val c = cfg(tmp).copy(prob = 0.0)
     val model = Classify.trainRF(trainingFrame, numTrees = 4)
-    val kept = MitoPipeline.run(spark, c, model)
     // all 5 records of sample_MT.sam pass through, including r7
-    assert(kept.count() === 5)
+    assert(MitoPipeline.run(spark, c, model) === 5)
+  }
+
+  test("features: the labeled, MapQ-normalized training frame over both dims") {
+    val f = MitoPipeline.features(spark, cfg("unused"), label = 1.0)
+    val rows = f.select("Read", "LD", "NTScore", "label", "MTMapQ").collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(rows.keySet === Set("r1", "r2"))
+    assert(rows("r1").getInt(1) === 30000 && rows("r2").getInt(1) === 0)
+    assert(rows("r1").getLong(2) === 25L) // NUMT overlap 10 + 15
+    assert(rows.values.forall(_.getDouble(3) === 1.0))
+    // pooled MapQ: MT 50, 50; NT 100, 40 → mean 60, sample sd
+    val sd = math.sqrt((100.0 + 100 + 1600 + 400) / 3)
+    assert(rows.values.forall(r => math.abs(r.getDouble(4) - (50 - 60) / sd) < 1e-12))
+  }
+
+  test("Cli prints the record count the sink wrote") {
+    val tmp = Files.createTempDirectory("mito-cli").toString
+    val c = cfg(tmp).copy(out = tmp + "/out.bam")
+    Classify.trainRF(trainingFrame, numTrees = 4).write.overwrite()
+      .save(tmp + "/model")
+    val line = Cli.classify(spark, Map("prefix" -> c.prefix, "out" -> c.out,
+      "ld" -> c.ldFile, "numt" -> c.numtFile, "model" -> (tmp + "/model")))
+    val n = spark.read.format("bam").load(c.out).count()
+    assert(n > 0)
+    assert(line === s"wrote $n alignments to ${c.out}")
+  }
+
+  test("two concurrent runs on one session each write their sequential output") {
+    val tmp = Files.createTempDirectory("mito-conc").toString
+    val model = Classify.trainRF(trainingFrame, numTrees = 8)
+    val cfgs = Seq(cfg(tmp).copy(out = tmp + "/a.sam"),
+      cfg(tmp).copy(out = tmp + "/b.bam", prob = 0.6))
+    def records(out: String): Seq[String] =
+      (if (out.endsWith(".bam")) spark.read.format("bam").load(out)
+       else Sam.read(spark, out))
+        .select(concat_ws("|", col("readName"), col("flag"), col("start")))
+        .collect().map(_.getString(0)).sorted.toSeq
+    val sequential = cfgs.map { c =>
+      val n = MitoPipeline.run(spark, c, model)
+      (n, records(c.out))
+    }
+    cfgs.foreach(c => Files.delete(Paths.get(c.out)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val concurrent = try {
+      val runs = cfgs.map(c => scala.concurrent.Future(MitoPipeline.run(spark, c, model)))
+      runs.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    } finally pool.shutdown()
+    assert(concurrent.zip(cfgs).map { case (n, c) => (n, records(c.out)) } === sequential)
   }
 }

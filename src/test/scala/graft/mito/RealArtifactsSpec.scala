@@ -35,21 +35,22 @@ class RealArtifactsSpec extends SparkSpec {
     assert(numts.map(_.chromosome).distinct.nonEmpty)
   }
 
-  test("real-scale LD broadcast vs join mode agree on a synthetic read set") {
+  test("real-scale LD: the index path equals the map reference on a synthetic read set") {
     assume(exists(ldPath))
     import spark.implicits._
+    import org.apache.spark.sql.functions.col
     val ld = Ld.load(spark, ldPath)
     val m = Ld.toMap(ld)
-    // synthesize variant lists from real LD keys so pairs actually score
-    val keys = m.keys.take(50).toSeq
-    val reads = keys.zipWithIndex.map { case ((a, b), i) =>
-      (s"read$i", Seq(a, b))
-    }.toDF("Read", "variants")
-    val viaJoin = Ld.pairScoreJoin(reads, ld)
+    val idx = Ld.index(Ld.read(ldPath))
+    // synthesize sorted variant lists from real LD keys so pairs actually score
+    val lists = m.keys.take(50).toSeq.map { case (a, b) => Seq(a, b).sorted }
+    val reads = lists.zipWithIndex.map { case (vs, i) => (s"read$i", vs) }
+      .toDF("Read", "variants")
+    val viaIndex = reads.select(col("Read"), Ld.score(col("variants"), () => idx))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val expected = keys.zipWithIndex.map { case ((a, b), i) =>
-      s"read$i" -> Ld.lookup(m, a, b)
+    val expected = lists.zipWithIndex.map { case (vs, i) =>
+      s"read$i" -> Ld.scorePairs(m, vs)
     }.toMap
-    assert(viaJoin === expected)
+    assert(viaIndex === expected)
   }
 }

@@ -158,6 +158,25 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)), s"planted near-dup not found: ${pairs.toSeq}")
   }
 
+  test("d03 runs with broadcast joins disabled (threshold -1)") {
+    // broadcastIfSmall reads the session's threshold; -1 is legal and means
+    // "never broadcast", so the staged build side goes unhinted
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s.implicits._
+    val base = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
+    val docs = (Seq((1L, base), (2L, base + " x")) ++
+      (3L to 10L).map(i => (i, s"unrelated text number $i with words ${i * 31}")))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("s0").as("source"), length(col("text")).cast("long").as("n_chars"))
+    val tmp = java.nio.file.Files.createTempDirectory("mh-1").toString
+    docs.write.mode("overwrite").parquet(tmp + "/documents.parquet")
+    val pairs = Dedup.d03MinhashLsh(s, tmp)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.contains((1L, 2L)), pairs.toSeq)
+  }
+
   test("ANN (s02 LSH, s04 IVF) recall vs brute force (s01) is reasonable") {
     val exact = Similarity.s01KnnBrute(spark, sf)
       .select("q_id", "n_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

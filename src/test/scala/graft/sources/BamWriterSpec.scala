@@ -21,6 +21,59 @@ class BamWriterSpec extends SparkSpec {
     assert(back.except(orig).isEmpty && orig.except(back).isEmpty)
   }
 
+  test("records carry the spec bin: reg2bin of the span, 4680 unplaced, CSI past 2^29") {
+    import spark.implicits._
+    // (name, flag, rname, 1-based start, cigar)
+    val recs = Seq(
+      ("m1", 0, "chr1", 1, "10M"),           // [0, 10): leaf 4681
+      ("m2", 0, "chr1", 16380, "10M"),       // crosses a 16 kb window
+      ("m3", 0, "chr1", 100000, "5M2000N5M"), // N consumes reference
+      ("u1", 4, "chr1", 16380, "10M"),       // unmapped, placed: one base
+      ("u2", 4, "*", 0, "*"),                // unplaced
+      ("far", 0, "chrL", 600000000, "10M"))  // past the BAI range
+      .toDF("readName", "flag", "referenceName", "start", "cigar")
+      .select(col("readName"), col("flag"), col("referenceName"),
+        col("start"), lit(60).as("mapQ"), col("cigar"), lit("*").as("rnext"),
+        lit(0).as("pnext"), lit(0).as("tlen"), lit("ACGTACGTAC").as("sequence"),
+        lit("*").as("qual"), lit("NM:i:0").as("attributes"))
+    val tmp = java.nio.file.Files.createTempDirectory("bambin").toString
+    val refs = Seq("chr1" -> 1000000, "chrL" -> 700000000)
+    BamWriter.write(recs, "@HD\tVN:1.6\n@SQ\tSN:chr1\tLN:1000000\n" +
+      "@SQ\tSN:chrL\tLN:700000000\n", refs, s"$tmp/bins.bam")
+    assert(readBins(s"$tmp/bins.bam") === Map(
+      "m1" -> 4681,
+      "m2" -> BaiIndex.reg2bin(16379, 16389),
+      "m3" -> BaiIndex.reg2bin(99999, 102009),
+      "u1" -> 4681,
+      "u2" -> 4680,
+      // chrL needs a depth-6 CSI; the 16-bit field keeps the low bits
+      "far" -> (CsiIndex.reg2bin(599999999L, 600000009L, 14, 6) & 0xffff)))
+    assert(BaiIndex.reg2bin(16379, 16389) === 585)
+  }
+
+  /** read name → the `bin` field of every record, decoded from the file. */
+  private def readBins(path: String): Map[String, Int] = {
+    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+      new java.util.zip.GZIPInputStream(
+        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)))))
+    def i32(): Int = Integer.reverseBytes(in.readInt())
+    try {
+      in.skipNBytes(4) // magic
+      in.skipNBytes(i32().toLong) // header text
+      (1 to i32()).foreach { _ => in.skipNBytes(i32().toLong); i32() }
+      val out = Map.newBuilder[String, Int]
+      var size = 0
+      while ({ size = try i32() catch { case _: java.io.EOFException => -1 }; size >= 0 }) {
+        val body = new Array[Byte](size)
+        in.readFully(body)
+        val bb = java.nio.ByteBuffer.wrap(body).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        val nameLen = body(8) & 0xff
+        out += new String(body, 32, nameLen - 1, "US-ASCII") -> (bb.getShort(10) & 0xffff)
+      }
+      out.result()
+    } finally in.close()
+  }
+
   test("sortAndWrite: dictionary-ORDER sort (not name order), unmapped last") {
     import spark.implicits._
     // dictionary order chr2 < chr1; name order would invert it. One
