@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -195,7 +196,7 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         return -1.0
@@ -215,7 +216,7 @@ object Bench {
       try {
         graft.operators.Similarity.rebuildIvfIndex(spark, sfDir)
         (System.nanoTime() - tIdx) / 1e9
-      } catch { case _: Throwable => failed += "s04_index_build"; -1.0 }
+      } catch { case NonFatal(_) => failed += "s04_index_build"; -1.0 }
 
     // bench-only rows: the WIRED near-dup pipelines over the whole
     // documents corpus at this scale factor (the driver's d11/d13
@@ -468,13 +469,13 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(artifactName(gates, args.nonEmpty)),
       (line(3, false) + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: $e") }
     // stop BEFORE printing: any executor/stop-time WARN lines then land
     // ahead of the JSON line instead of between it and EOF, so the line
     // stays inside the driver's bounded stdout tail — and a stop-time
     // failure (shutdown race) must not cost the round its timings
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop() catch { case NonFatal(_) => () }
     println(out)
   }
 }

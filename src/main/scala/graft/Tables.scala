@@ -67,7 +67,7 @@ object Tables {
     val target = s.conf.getOption("spark.graft.scanFanout.target")
       .map(_.toInt).getOrElse(s.sparkContext.defaultParallelism)
     if (target <= 0) df
-    else if (scanUnits(df) >= target) df
+    else if (scanUnits(df, target) >= target) df
     else {
       val keyCols =
         if (keys.nonEmpty) keys else df.columns.toSeq.map(functions.col)
@@ -77,31 +77,48 @@ object Tables {
     }
   }
 
-  /** Row groups per parquet file, footer read once per JVM. */
-  private val rowGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Row groups per parquet file, footer read once per JVM per file
+    * version: keyed on (path, length, mtime), so a file rewritten in
+    * place is counted again. */
+  private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), java.lang.Long]()
 
-  /** Upper bound on the scan parallelism of `df`'s file inputs: total
-    * parquet row groups across its leaf files (`Dataset.inputFiles` — a
-    * FileIndex listing, no physical planning). Fallback when the plan has
-    * no file inputs: the planned RDD partition count (the r16 probe). */
-  private def scanUnits(df: DataFrame): Long = {
+  /** Upper bound on the scan parallelism of `df`'s file inputs, counted
+    * up to `target`: parquet row groups across its leaf files
+    * (`Dataset.inputFiles` — a FileIndex listing, no physical planning),
+    * reading footers only until the running count reaches the target.
+    * Fallback when the plan has no file inputs: the planned RDD
+    * partition count (the r16 probe). */
+  private def scanUnits(df: DataFrame, target: Long): Long = {
     val files = df.inputFiles
     if (files.isEmpty) df.rdd.getNumPartitions.toLong
     else {
       val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      files.map { f =>
-        rowGroupCache.computeIfAbsent(f, { _ =>
-          try {
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRowGroups.size.toLong finally r.close()
-          } catch { case _: Throwable => 1L }
-        }).longValue
-      }.sum
+      var total = 0L
+      val it = files.iterator
+      while (total < target && it.hasNext) total += rowGroups(it.next(), conf)
+      total
     }
   }
+
+  /** A file's row-group count; 1 when its footer cannot be read (not
+    * cached, so a later call retries). */
+  private def rowGroups(f: String,
+      conf: org.apache.hadoop.conf.Configuration): Long =
+    try {
+      val path = new org.apache.hadoop.fs.Path(f)
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      val key = (f, st.getLen, st.getModificationTime)
+      val cached = rowGroupCache.get(key)
+      if (cached != null) cached.longValue
+      else {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        val n = try r.getRowGroups.size.toLong finally r.close()
+        rowGroupCache.put(key, n)
+        n
+      }
+    } catch { case scala.util.control.NonFatal(_) => 1L }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.Tables
 
@@ -5387,7 +5388,7 @@ object Genomics {
       .read(s, r1o, r2c, strict = false, splitSize = 4096).count()
     val strictRaises =
       try { FastqPaired.read(s, r1o, r2c, strict = true).count(); false }
-      catch { case _: Throwable => true }
+      catch { case NonFatal(_) => true }
     Seq((strictAgg.getLong(0), strictAgg.getLong(1), strictAgg.getLong(2),
       strictAgg.getLong(3), strictAgg.getLong(4),
       lenientN == strictAgg.getLong(0), strictRaises))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 import graft.Tables
 import graft.functions.Det._
@@ -4817,7 +4818,7 @@ object Relational {
     // restart the CHANGED query against the OLD checkpoint + sink
     val loud =
       try { run(evolved = true, s"$root/out1", s"$root/ck"); false }
-      catch { case _: Throwable => true }
+      catch { case NonFatal(_) => true }
     // documented recovery: fresh checkpoint, full reprocess
     run(evolved = true, s"$root/out2", s"$root/ck2")
     s2.read.parquet(s"$root/out2")

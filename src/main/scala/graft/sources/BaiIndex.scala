@@ -118,122 +118,28 @@ object BaiIndex {
   // ---- build (the samtools-index analogue, for fixtures and for BAMs
   // written by BamWriter that a downstream samtools user will region-scan)
 
-  /** One sequential pass over a coordinate-sorted BAM → a standard `.bai`.
-    * Spans come from POS + the reference length of the CIGAR (M/D/N/=/X,
-    * zero-span reads widened to 1 base), exactly the spec's rule; unplaced
-    * reads (refId < 0) only count into `n_no_coor`. Refuses unsorted input
-    * loudly — a BAI over an unsorted file would silently drop records from
-    * every region query. */
+  /** A coordinate-sorted BAM → a standard `.bai`: the split walk
+    * ([[scanRangeBam]]) run once over the whole file on the calling
+    * thread — the one-range case of [[buildDistributed]], no Spark job.
+    * Unplaced reads (refId < 0) only count into `n_no_coor`. Refuses
+    * unsorted input loudly — a BAI over an unsorted file would silently
+    * drop records from every region query. */
   def build(bam: String, conf: Configuration = new Configuration()): Int = {
-    val ch = new SeekableFile(bam, conf)
-    try {
-      val fileLen = ch.size
-      val in = new BgzfInputStream(ch, 0L)
-      val din = new DataInputStream(in)
-      def u8(): Int = {
-        val b = din.read(); if (b < 0) throw new EOFException(); b
-      }
-      def i16(): Int = u8() | (u8() << 8)
-      def i32(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
-      val magic = new Array[Byte](4); din.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $bam")
-      HadoopIO.skipFully(din, i32().toLong, s"$bam header text")
-      val nRef = i32()
-      var r = 0
-      while (r < nRef) { HadoopIO.skipFully(din, i32().toLong, s"$bam ref dict"); i32(); r += 1 }
-
-      // per-ref accumulators; a bin's chunks merge when the new record
-      // starts in the same member its last chunk ended in (htslib's rule —
-      // chunk boundaries inside one member buy no seek granularity)
-      val bins = Array.fill(nRef)(scala.collection.mutable.LinkedHashMap
-        .empty[Int, scala.collection.mutable.ArrayBuffer[Chunk]])
-      val linear = Array.fill(nRef)(
-        scala.collection.mutable.ArrayBuffer.empty[Long])
-      val stats = Array.fill[RefStat](nRef)(null)
-      var noCoor = 0L
-      var n = 0
-      var lastRef = -1
-      var lastPos = -1
-      var done = false
-      while (!done) {
-        val (mBeg, uBeg) = in.virtualPos
-        if (mBeg >= fileLen) done = true
-        else {
-          try {
-            val blockSize = i32()
-            val refId = i32()
-            val pos = i32()
-            val lReadName = u8()
-            u8() // mapq
-            i16() // bin (recomputed below — never trusted)
-            val nCigar = i16()
-            val flag = i16()
-            i32() // l_seq
-            HadoopIO.skipFully(din, 12L, s"$bam mate fields") // next_refID/next_pos/tlen
-            HadoopIO.skipFully(din, lReadName.toLong, s"$bam read name")
-            var refLen = 0
-            var c = 0
-            while (c < nCigar) {
-              val v = i32()
-              (v & 0xf) match {
-                case 0 | 2 | 3 | 7 | 8 => refLen += (v >>> 4) // M D N = X
-                case _                 => ()
-              }
-              c += 1
-            }
-            HadoopIO.skipFully(din,
-              (blockSize - 32 - lReadName - 4 * nCigar).toLong, s"$bam record tail")
-            val vBeg = (mBeg << 16) | uBeg
-            val (mEnd, uEnd) = in.virtualPos
-            val vEnd = (mEnd << 16) | uEnd
-            if (refId < 0 || pos < 0) {
-              noCoor += 1
-            } else {
-              require(refId < nRef, s"$bam: refId $refId out of range")
-              require(refId > lastRef || (refId == lastRef && pos >= lastPos),
-                s"$bam is not coordinate-sorted at record $n " +
-                  s"(ref $refId pos $pos after ref $lastRef pos $lastPos) — " +
-                  "a BAI over an unsorted file silently drops region records")
-              lastRef = refId; lastPos = pos
-              val end = pos + math.max(1, refLen)
-              require(end <= MaxPos,
-                s"$bam: record end $end exceeds BAI's 2^29 cap — " +
-                  "index this long-contig file with a .csi instead " +
-                  "(CsiIndex.build / buildDistributed)")
-              stats(refId) = {
-                val prev = stats(refId)
-                val unm = if ((flag & 4) != 0) 1L else 0L
-                if (prev == null) RefStat(vBeg, vEnd, 1L - unm, unm)
-                else RefStat(prev.offBeg, vEnd, prev.nMapped + 1L - unm,
-                  prev.nUnmapped + unm)
-              }
-              val bin = reg2bin(pos, end)
-              val bcs = bins(refId).getOrElseUpdate(bin,
-                scala.collection.mutable.ArrayBuffer.empty[Chunk])
-              if (bcs.nonEmpty && (bcs.last.end >>> 16) == mBeg)
-                bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
-              else bcs += Chunk(vBeg, vEnd)
-              val lin = linear(refId)
-              var w = pos >> 14
-              val wEnd = (end - 1) >> 14
-              while (w <= wEnd) {
-                while (lin.length <= w) lin += 0L
-                if (lin(w) == 0L) lin(w) = vBeg
-                w += 1
-              }
-            }
-            n += 1
-          } catch { case _: EOFException => done = true }
-        }
-      }
-      writeBai(bam, conf, bins, linear, noCoor, stats)
-      n
-    } finally ch.close()
+    val hdr = BamHeader.locate(bam, conf)
+    encode(bam, conf, hdr.nRef,
+      Array(scanRangeBam(bam, conf, 0L, hdr.fileLen, hdr, BinScheme.Bai)))
   }
 
-  /** Shared `.bai` encoder — the sequential, distributed, and
-    * index-on-write paths accumulate the SAME structures, so one encoder
-    * is what makes their sidecars provably byte-identical. */
+  private def encode(bam: String, conf: Configuration, nRef: Int,
+      parts: Array[TaskBai]): Int = {
+    val (bins, linear, noCoor, n, stats) = mergeTasks(parts, nRef, bam)
+    writeBai(bam, conf, bins, linear, noCoor, stats)
+    n.toInt
+  }
+
+  /** The `.bai` encoder over merged [[BamAcc]] results — the post-hoc
+    * builds and index-on-write share accumulator, merge and encoder, so
+    * their sidecars are byte-identical. */
   private[sources] def writeBai(bam: String, conf: Configuration,
       bins: Array[scala.collection.mutable.LinkedHashMap[Int,
         scala.collection.mutable.ArrayBuffer[Chunk]]],
@@ -273,78 +179,153 @@ object BaiIndex {
     } finally out.close()
   }
 
-  /** One task's pre-aggregated contribution to a distributed BAI/CSI
-    * build: per-(refId, bin) chunk runs already merged WITHIN the task,
-    * per-window linear minima, the task's first/last mapped (refId, pos)
-    * for the cross-task sortedness check, and its record/unplaced
+  /** One range's pre-aggregated contribution to a BAI/CSI build:
+    * per-(refId, bin) chunk runs already merged WITHIN the range,
+    * per-window linear minima, the range's first/last mapped (refId, pos)
+    * for the cross-range sortedness check, and its record/unplaced
     * counts. Sized by bins touched, not records — a task over 16 MB of a
     * WGS BAM carries a few KB back to the driver. */
   private[sources] final case class TaskBai(
-      bins: Seq[((Int, Int), Seq[Chunk])], // in-task DISCOVERY order — the
-      // driver replays it so bin insertion order matches the sequential
-      // builder's record-order discovery (byte-identical sidecars)
+      bins: Seq[((Int, Int), Seq[Chunk])], // in-range DISCOVERY order — the
+      // merge replays it so bin insertion order is record order
       linear: Map[(Int, Int), Long],
       firstKey: Option[(Int, Int)], lastKey: Option[(Int, Int)],
       noCoor: Long, n: Long,
       stats: Map[Int, RefStat] = Map.empty) // per-ref pseudo-bin stats
 
+  /** A binning scheme as data (a case class, not a captured function, so
+    * split-task closures stay trivially serializable): BAI's fixed
+    * six-level 2^29 scheme, or CSI at (minShift, depth). `linShift` is
+    * the linear-index window: 16 kb for `.bai` and tabix, min_shift for a
+    * BAM `.csi` (htslib's rule). */
+  private[sources] final case class BinScheme(csi: Boolean, minShift: Int,
+      depth: Int, linShift: Int) {
+    def binOf(beg: Long, end: Long): Int =
+      if (csi) CsiIndex.reg2bin(beg, end, minShift, depth)
+      else reg2bin(beg.toInt, end.toInt)
+    def maxPos: Long =
+      if (csi) 1L << (minShift + 3 * depth) else MaxPos.toLong
+    /** Refuse an interval the scheme cannot address. */
+    def requireBinnable(what: String, beg: Long, end: Long): Unit =
+      require(beg >= 0 && end <= maxPos,
+        s"$what: record [$beg, $end) exceeds " + (
+          if (csi) s"the (min_shift=$minShift, depth=$depth) scheme's " +
+            s"$maxPos cap"
+          else "BAI's 2^29 cap — index this long-contig file with a .csi " +
+            "instead (CsiIndex.build / buildDistributed)"))
+  }
+
+  private[sources] object BinScheme {
+    val Bai: BinScheme = BinScheme(csi = false, 14, 5, 14)
+    def bamCsi(minShift: Int, depth: Int): BinScheme =
+      BinScheme(csi = true, minShift, depth, minShift)
+  }
+
+  /** End of a BAM record's reference span — htslib's `bam_endpos`: an
+    * unmapped read (FLAG 0x4) spans one base wherever it is placed;
+    * otherwise POS + the CIGAR's reference length, a zero-length span
+    * widened to one base. The index builders and the record `bin` field
+    * share it. */
+  private[sources] def endPos(pos: Int, flag: Int, refLen: Int): Long =
+    pos.toLong + (if ((flag & 4) != 0) 1 else math.max(1, refLen))
+
+  /** The one per-record rule of the BAM bin indexes (`.bai`, BAM `.csi`):
+    * bin chunks with htslib's same-member merge (chunk boundaries inside
+    * one member buy no seek granularity), 16 kb / min_shift linear
+    * minima, pseudo-bin stats, and loud refusals of unsorted input and of
+    * spans past the scheme's cap. Fed by the split walk
+    * ([[scanRangeBam]]) and by `BamWriter.write` at write-side virtual
+    * positions. Linear minima use presence, never a 0L sentinel: a
+    * part-local voffset 0 is a real record, and voffsets only grow within
+    * one feed, so first touch is the minimum. */
+  private[sources] final class BamAcc(scheme: BinScheme, nRef: Int,
+      what: String) {
+    private val bins = scala.collection.mutable.LinkedHashMap
+      .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Chunk]]
+    private val linear =
+      scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Long]
+    private val stats =
+      scala.collection.mutable.LinkedHashMap.empty[Int, RefStat]
+    private var firstKey: Option[(Int, Int)] = None
+    private var lastRef = -1
+    private var lastPos = -1
+    private var noCoor = 0L
+    private var n = 0L
+
+    def add(refId: Int, pos: Int, end: Long, flag: Int, vBeg: Long,
+        vEnd: Long): Unit = {
+      n += 1
+      if (refId < 0 || pos < 0) noCoor += 1
+      else {
+        require(refId < nRef, s"$what: refId $refId out of range")
+        require(refId > lastRef || (refId == lastRef && pos >= lastPos),
+          s"$what is not coordinate-sorted (ref $refId pos $pos after ref " +
+            s"$lastRef pos $lastPos) — an index over an unsorted file " +
+            "silently drops region records")
+        scheme.requireBinnable(what, pos, end)
+        lastRef = refId; lastPos = pos
+        if (firstKey.isEmpty) firstKey = Some((refId, pos))
+        val unm = if ((flag & 4) != 0) 1L else 0L
+        stats(refId) = stats.get(refId) match {
+          case None => RefStat(vBeg, vEnd, 1L - unm, unm)
+          case Some(prev) => RefStat(prev.offBeg, vEnd,
+            prev.nMapped + 1L - unm, prev.nUnmapped + unm)
+        }
+        val bcs = bins.getOrElseUpdate((refId, scheme.binOf(pos, end)),
+          scala.collection.mutable.ArrayBuffer.empty[Chunk])
+        if (bcs.nonEmpty && (bcs.last.end >>> 16) == (vBeg >>> 16))
+          bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
+        else bcs += Chunk(vBeg, vEnd)
+        var w = pos >> scheme.linShift
+        val wEnd = ((end - 1) >> scheme.linShift).toInt
+        while (w <= wEnd) {
+          if (!linear.contains((refId, w))) linear((refId, w)) = vBeg
+          w += 1
+        }
+      }
+    }
+
+    def result: TaskBai = TaskBai(
+      bins.toSeq.map { case (k, v) => (k, v.toSeq) }, linear.toMap,
+      firstKey, if (lastRef >= 0) Some((lastRef, lastPos)) else None,
+      noCoor, n, stats.toMap)
+  }
+
   /** Executor-parallel `.bai` build over byte-range splits — the form a
-    * WGS-scale sorted BAM gets samtools-compatible indexing with (the
-    * sequential [[build]] is the fixture/CLI path). Same split protocol as
-    * `BamIndex.buildDistributed`: each task owns the members starting in
-    * its range, syncs to its first record by validated guessing (or the
-    * driver-supplied exact header end), and walks records accumulating
-    * bin chunks/linear minima locally. The driver concatenates task
-    * results in file order, applies the same same-member chunk-merge rule
-    * across task seams, and verifies sortedness across them — the sidecar
-    * is byte-identical to [[build]]'s (BaiIndexSpec asserts exactly that). */
+    * WGS-scale sorted BAM gets samtools-compatible indexing with;
+    * [[build]] is its one-range case. Each task owns the members starting
+    * in its range, syncs to its first record by validated guessing (or
+    * the driver-supplied exact header end) and runs [[scanRangeBam]]. The
+    * driver concatenates task results in file order, applies the same
+    * same-member chunk-merge rule across task seams, and verifies
+    * sortedness across them — the sidecar is byte-identical to
+    * [[build]]'s (BaiIndexSpec asserts exactly that). */
   def buildDistributed(s: org.apache.spark.sql.SparkSession, bam: String,
       splitSize: Long = 16L * 1024 * 1024): Int = {
     val confBox = HadoopIO.capture()
-    val (fileLen, nRef, hdrMember, hdrU) = parseHeader(bam, confBox)
-    val ranges = (0L until fileLen by splitSize)
+    val hdr = BamHeader.locate(bam, confBox.conf)
+    encode(bam, confBox.conf, hdr.nRef,
+      splitScan(s, hdr.fileLen, splitSize) { (start, end) =>
+        scanRangeBam(bam, confBox.conf, start, end, hdr, BinScheme.Bai)
+      })
+  }
+
+  /** Run `scan` over `splitSize` byte ranges of a file as one Spark job;
+    * results in file order (partition order == byte order). */
+  private[sources] def splitScan[T: scala.reflect.ClassTag](
+      s: org.apache.spark.sql.SparkSession, fileLen: Long, splitSize: Long)(
+      scan: (Long, Long) => T): Array[T] = {
+    val ranges = (0L until fileLen by math.max(splitSize, 1L))
       .map(st => (st, math.min(st + splitSize, fileLen)))
-    val parts = s.sparkContext
-      .parallelize(ranges, ranges.size)
-      .map { case (start, end) =>
-        scanRangeBam(bam, confBox, start, end, fileLen, nRef, hdrMember,
-          hdrU, reg2bin, 14, MaxPos)
-      }
-      .collect() // partition order == byte order == record order (sorted BAM)
-    val (bins, linear, noCoor, n, stats) = mergeTasks(parts, nRef, bam)
-    writeBai(bam, confBox.conf, bins, linear, noCoor, stats)
-    n.toInt
+    s.sparkContext.parallelize(ranges, math.max(ranges.size, 1))
+      .map { case (start, end) => scan(start, end) }
+      .collect()
   }
 
-  /** Driver-side header parse: nRef for record validation + the exact
-    * virtual position where records begin. */
-  private[sources] def parseHeader(bam: String, confBox: HadoopIO.ConfBox)
-      : (Long, Int, Long, Int) = {
-    val ch = new SeekableFile(bam, confBox.conf)
-    try {
-      val in = new BgzfInputStream(ch, 0L)
-      val din = new DataInputStream(in)
-      def i32(): Int = {
-        val b0 = din.read(); val b1 = din.read(); val b2 = din.read(); val b3 = din.read()
-        if ((b0 | b1 | b2 | b3) < 0) throw new EOFException()
-        b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-      }
-      val magic = new Array[Byte](4); din.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $bam")
-      HadoopIO.skipFully(din, i32().toLong, s"$bam header text")
-      val n = i32()
-      var r = 0
-      while (r < n) { HadoopIO.skipFully(din, i32().toLong, s"$bam ref dict"); i32(); r += 1 }
-      val (m, u) = in.virtualPos
-      (ch.size, n, m, u)
-    } finally ch.close()
-  }
-
-  /** Driver-side merge of task accumulations in file order: cross-task
-    * sortedness check, deterministic record-order bin discovery (the
-    * sequential builders' exact insertion order), same-member chunk
-    * merge across seams, unsigned-min linear merge. Shared by the BAI
-    * and BAM-CSI distributed builds. */
+  /** Driver-side merge of range accumulations in file order: cross-range
+    * sortedness check, record-order bin discovery, same-member chunk
+    * merge across seams, unsigned-min linear merge. Shared by every BAI
+    * and BAM-CSI build, one range or many. */
   private[sources] def mergeTasks(parts: Array[TaskBai], nRef: Int,
       bam: String)
       : (Array[scala.collection.mutable.LinkedHashMap[Int,
@@ -371,9 +352,9 @@ object BaiIndex {
     val stats = Array.fill[RefStat](nRef)(null)
     var noCoor = 0L
     var n = 0L
-    // deterministic bin insertion order: the sequential builder discovers
-    // bins in record order; replaying tasks in file order with ordered
-    // within-task maps reproduces it exactly
+    // deterministic bin insertion order: replaying ranges in file order
+    // with ordered within-range maps discovers bins in record order, for
+    // any split size
     parts.foreach { p =>
       // pseudo-bin stats: parts replay in file order, so the first task
       // seeing a ref owns offBeg and the last seen vEnd wins offEnd
@@ -426,127 +407,25 @@ object BaiIndex {
       })
   }
 
-  /** One task's record walk: own the members starting in [start, end),
-    * sync to the first record (exact header end when this range holds it),
-    * accumulate bin chunks merged within the stream plus linear minima.
-    * `binOf`/`linShift` parameterize the binning scheme (BAI: reg2bin/14;
-    * BAM-CSI: the generalized scheme at min_shift granularity). Runs on
-    * an executor. */
-  private[sources] def scanRangeBam(bam: String, confBox: HadoopIO.ConfBox,
-      start: Long, end: Long, fileLen: Long, nRef: Int,
-      hdrMember: Long, hdrU: Int, binOf: (Int, Int) => Int,
-      linShift: Int, maxPosCap: Int = Int.MaxValue): TaskBai = {
-    val ch = new SeekableFile(bam, confBox.conf)
+  /** One range's record walk: own the members starting in [start, end),
+    * sync to the first record (exact header end when this range holds
+    * it), feed every record to one [[BamAcc]]. The sequential builds run
+    * it once over the whole file; the distributed ones once per task. */
+  private[sources] def scanRangeBam(bam: String, conf: Configuration,
+      start: Long, end: Long, hdr: BamHeader.Located,
+      scheme: BinScheme): TaskBai = {
+    val acc = new BamAcc(scheme, hdr.nRef, bam)
+    val ch = new SeekableFile(bam, conf)
     try {
-      val firstMember =
-        if (start == 0) 0L else Bgzf.nextMemberStart(ch, start, fileLen)
-      if (firstMember >= end || firstMember >= fileLen)
-        return TaskBai(Nil, Map.empty, None, None, 0L, 0L)
-      val streamOpt: Option[BgzfInputStream] =
-        if (firstMember <= hdrMember) {
-          if (hdrMember >= end) None
-          else {
-            val st = new BgzfInputStream(ch, hdrMember)
-            HadoopIO.skipFully(st, hdrU.toLong, s"$bam header end")
-            Some(st)
-          }
-        } else BamSync.syncToRecord(ch, firstMember, end, nRef, bam)
-      val bins = scala.collection.mutable.LinkedHashMap
-        .empty[(Int, Int), scala.collection.mutable.ArrayBuffer[Chunk]]
-      val linear = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Long]
-      val stats = scala.collection.mutable.LinkedHashMap.empty[Int, RefStat]
-      var firstKey: Option[(Int, Int)] = None
-      var lastRef = -1
-      var lastPos = -1
-      var noCoor = 0L
-      var n = 0L
-      streamOpt.foreach { in =>
-        val din = new DataInputStream(in)
-        def u8(): Int = {
-          val b = din.read(); if (b < 0) throw new EOFException(); b
+      BamSync.openRange(ch, BamSync.firstMember(ch, start, hdr.fileLen), end,
+          hdr, bam).foreach { in =>
+        BamSync.walkRecords(in, end, hdr.fileLen, bam) {
+          (vBeg, vEnd, refId, pos, flag, refLen) =>
+            acc.add(refId, pos, endPos(pos, flag, refLen), flag, vBeg, vEnd)
         }
-        def i16(): Int = u8() | (u8() << 8)
-        def i32(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
-        var done = false
-        while (!done) {
-          val (mBeg, uBeg) = in.virtualPos
-          if (mBeg >= end || mBeg >= fileLen) done = true
-          else {
-            try {
-              val blockSize = i32()
-              val refId = i32()
-              val pos = i32()
-              val lReadName = u8()
-              u8(); i16() // mapq, stored bin (recomputed — never trusted)
-              val nCigar = i16()
-              val flag = i16()
-              i32() // l_seq
-              HadoopIO.skipFully(din, 12L, s"$bam mate fields")
-              HadoopIO.skipFully(din, lReadName.toLong, s"$bam read name")
-              var refLen = 0
-              var c = 0
-              while (c < nCigar) {
-                val v = i32()
-                (v & 0xf) match {
-                  case 0 | 2 | 3 | 7 | 8 => refLen += (v >>> 4)
-                  case _                 => ()
-                }
-                c += 1
-              }
-              HadoopIO.skipFully(din,
-                (blockSize - 32 - lReadName - 4 * nCigar).toLong,
-                s"$bam record tail")
-              val vBeg = (mBeg << 16) | uBeg
-              val (mEnd, uEnd) = in.virtualPos
-              val vEnd = (mEnd << 16) | uEnd
-              if (refId < 0 || pos < 0) noCoor += 1
-              else {
-                require(refId < nRef, s"$bam: refId $refId out of range")
-                require(refId > lastRef || (refId == lastRef && pos >= lastPos),
-                  s"$bam is not coordinate-sorted " +
-                    s"(ref $refId pos $pos after ref $lastRef pos $lastPos)")
-                lastRef = refId; lastPos = pos
-                if (firstKey.isEmpty) firstKey = Some((refId, pos))
-                val unm = if ((flag & 4) != 0) 1L else 0L
-                stats(refId) = stats.get(refId) match {
-                  case None => RefStat(vBeg, vEnd, 1L - unm, unm)
-                  case Some(prev) => RefStat(prev.offBeg, vEnd,
-                    prev.nMapped + 1L - unm, prev.nUnmapped + unm)
-                }
-                val bamEnd = pos + math.max(1, refLen)
-                require(bamEnd <= maxPosCap,
-                  s"$bam: record end $bamEnd exceeds the binning " +
-                    s"scheme's $maxPosCap cap")
-                val bin = binOf(pos, bamEnd)
-                val bcs = bins.getOrElseUpdate((refId, bin),
-                  scala.collection.mutable.ArrayBuffer.empty[Chunk])
-                if (bcs.nonEmpty && (bcs.last.end >>> 16) == mBeg)
-                  bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
-                else bcs += Chunk(vBeg, vEnd)
-                var w = pos >> linShift
-                val wEnd = (bamEnd - 1) >> linShift
-                while (w <= wEnd) {
-                  val k = (refId, w)
-                  val cur = linear.getOrElse(k, 0L)
-                  if (cur == 0L ||
-                      java.lang.Long.compareUnsigned(vBeg, cur) < 0)
-                    linear(k) = vBeg
-                  w += 1
-                }
-              }
-              n += 1
-            } catch { case _: EOFException => done = true }
-          }
-        }
-        in.close()
       }
-      TaskBai(
-        bins.toSeq.map { case (k, v) => (k, v.toSeq) },
-        linear.toMap,
-        firstKey,
-        if (lastRef >= 0) Some((lastRef, lastPos)) else None,
-        noCoor, n, stats.toMap)
     } finally ch.close()
+    acc.result
   }
 
   def read(bam: String, conf: Configuration = new Configuration()): Bai = {

@@ -46,28 +46,64 @@ class BamDataSource extends TableProvider with DataSourceRegister {
     new BamTable(properties.asScala.toMap)
 }
 
-/** Driver-side BAM header probe (one small member inflate). */
+/** The one BAM header parser: magic `BAM\1`, SAM header text, reference
+  * dictionary (SAM spec §4.2), with the corruption guards every caller
+  * gets — a negative `l_text`/`n_ref` or an `l_name` below 1 fails loudly
+  * instead of degrading into an empty or garbled dictionary. */
 object BamHeader {
+
+  /** Header text + (name, length) per reference, in refId order. */
+  final case class Header(text: String, refs: Array[(String, Int)]) {
+    def names: Array[String] = refs.map(_._1)
+  }
+
+  /** Where a BAM's records begin: the virtual position (member, u) right
+    * after the dictionary, plus what a record walk needs to bound it. */
+  final case class Located(fileLen: Long, nRef: Int, member: Long, u: Int)
+
+  /** Parse from a stream at the first payload byte; leaves it at the
+    * first record. */
+  def parse(in: java.io.InputStream, path: String): Header = {
+    val din = new DataInputStream(in)
+    def i32(): Int = Integer.reverseBytes(din.readInt())
+    val magic = new Array[Byte](4); din.readFully(magic)
+    require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)),
+      s"not a BAM file: $path")
+    val lText = i32()
+    require(lText >= 0, s"corrupt BAM header in $path: negative l_text $lText")
+    val text = new Array[Byte](lText); din.readFully(text)
+    val nRef = i32()
+    // Array.fill(negative) silently returns empty — a corrupt count must
+    // fail loudly, not degrade into a refless dictionary
+    require(nRef >= 0, s"corrupt BAM header in $path: negative n_ref $nRef")
+    val refs = Array.fill(nRef) {
+      val lName = i32()
+      require(lName >= 1, s"corrupt BAM header in $path: l_name $lName")
+      val name = new Array[Byte](lName); din.readFully(name)
+      (new String(name, 0, lName - 1, "US-ASCII"), i32()) // drop the NUL
+    }
+    Header(new String(text, "US-ASCII"), refs)
+  }
+
+  def read(path: String, conf: org.apache.hadoop.conf.Configuration): Header = {
+    val ch = new SeekableFile(path, conf)
+    try parse(new BgzfInputStream(ch, 0L), path) finally ch.close()
+  }
+
   def refNames(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Array[String] = {
+      conf: org.apache.hadoop.conf.Configuration): Array[String] =
+    read(path, conf).names
+
+  /** Driver-side probe for split walks: the file length, the dictionary
+    * size (record validation) and the exact virtual position where
+    * records begin. */
+  def locate(path: String, conf: org.apache.hadoop.conf.Configuration): Located = {
     val ch = new SeekableFile(path, conf)
     try {
-      val in = new DataInputStream(new BgzfInputStream(ch, 0L))
-      def i32(): Int = {
-        val b0 = in.read(); val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-        if ((b0 | b1 | b2 | b3) < 0) throw new EOFException()
-        b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-      }
-      val magic = new Array[Byte](4); in.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)),
-        s"not a BAM file: $path")
-      HadoopIO.skipFully(in, i32().toLong, s"$path header text")
-      Array.fill(i32()) {
-        val l = i32()
-        val a = new Array[Byte](l); in.readFully(a)
-        i32() // l_ref
-        new String(a, 0, l - 1, "US-ASCII")
-      }
+      val in = new BgzfInputStream(ch, 0L)
+      val nRef = parse(in, path).refs.length
+      val (m, u) = in.virtualPos
+      Located(ch.size, nRef, m, u)
     } finally ch.close()
   }
 }
@@ -230,8 +266,7 @@ class BamScan(paths: Seq[String], splitSize: Long, required: StructType,
       // r13 design, so pruned members never even schedule a task
       val conf = HadoopIO.driverConf()
       paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-        .filterNot { case (p, _) =>
-          p.endsWith(".gai") || p.endsWith(".bai") || p.endsWith(".csi") }
+        .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
         .flatMap { case (p, size) =>
           BamScan.streamPlanFile(preds, splitSize, regions)(p, size, conf)
         }.toArray
@@ -248,8 +283,7 @@ class BamScan(paths: Seq[String], splitSize: Long, required: StructType,
       if (preds.isEmpty || baiPlanMode != "driver") Map.empty
       else paths.flatMap(p => HadoopIO.listScanTargets(p, confBox.conf))
         .map(_._1)
-        .filterNot(p =>
-          p.endsWith(".gai") || p.endsWith(".bai") || p.endsWith(".csi"))
+        .filterNot(HadoopIO.isSidecar)
         .flatMap { p =>
           val runs: Option[Seq[(Long, Int, Long)]] =
             if (BamIndex.exists(p, confBox.conf)) None // .gai wins reader-side
@@ -318,25 +352,7 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
   private var bgzf: BgzfInputStream = new BgzfInputStream(ch, 0L)
   private var in = new DataInputStream(bgzf)
 
-  private val refNames: Array[String] = {
-    val magic = bytes(4)
-    require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)),
-      s"not a BAM file: $path")
-    val lText = i32()
-    require(lText >= 0, s"corrupt BAM header in $path: negative l_text $lText")
-    bytes(lText) // SAM header text (not needed for the record schema)
-    val nRef = i32()
-    // Array.fill(negative) silently returns empty — a corrupt count must
-    // fail loudly, not degrade into a refless dictionary
-    require(nRef >= 0, s"corrupt BAM header in $path: negative n_ref $nRef")
-    Array.fill(nRef) {
-      val lName = i32()
-      require(lName >= 1, s"corrupt BAM header in $path: l_name $lName")
-      val name = cstr(lName)
-      i32() // l_ref
-      name
-    }
-  }
+  private val refNames: Array[String] = BamHeader.parse(bgzf, path).names
 
   /** True once this split's range is exhausted (or it owns no records). */
   private var done = false

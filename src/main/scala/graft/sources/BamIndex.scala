@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{DataInputStream, DataOutputStream}
 
 import org.apache.hadoop.conf.Configuration
 
@@ -58,100 +58,21 @@ object BamIndex {
       HadoopIO.modTime(side, conf) >= HadoopIO.modTime(bam, conf)
   }
 
-  /** One sequential pass over the BAM: per member, the intra-member offset
-    * of the first record starting there (-1 if none) and the min/max
-    * (refId, pos) over records starting there. [[buildDistributed]] is the
-    * executor-parallel form (byte-range splits + the [[BamSync]] guesser);
-    * this sequential pass is the no-session CLI/fixture path. */
+  /** Per member, the intra-member offset of the first record starting
+    * there (-1 if none) and the min/max (refId, pos) over records starting
+    * there: [[scanRange]] run once over the whole file on the calling
+    * thread — the one-range case of [[buildDistributed]], no Spark job. */
   def build(bam: String, conf: Configuration = new Configuration()): Int = {
-    val ch = new SeekableFile(bam, conf)
-    try {
-      val fileLen = ch.size
-      val in = new BgzfInputStream(ch, 0L)
-      val din = new DataInputStream(in)
-      def i32(): Int = {
-        val b0 = din.read(); val b1 = din.read(); val b2 = din.read(); val b3 = din.read()
-        if ((b0 | b1 | b2 | b3) < 0) throw new EOFException()
-        b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-      }
-      def skipFully(n: Int): Unit = {
-        var left = n
-        while (left > 0) {
-          val k = din.skipBytes(left)
-          if (k > 0) left -= k
-          else { if (din.read() < 0) throw new EOFException(); left -= 1 }
-        }
-      }
-      // header + ref dictionary
-      val magic = new Array[Byte](4); din.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $bam")
-      skipFully(i32()) // header text
-      val nRef = i32()
-      var r = 0
-      while (r < nRef) { skipFully(i32()); i32(); r += 1 }
-
-      val stats = scala.collection.mutable.LinkedHashMap.empty[Long, Array[Int]]
-      def statFor(off: Long): Array[Int] =
-        stats.getOrElseUpdate(off, Array(-1, Int.MaxValue, Int.MinValue,
-          Int.MaxValue, Int.MinValue)) // firstU, minRef, maxRef, minPos, maxPos
-      var done = false
-      while (!done) {
-        val (mOff, uOff) = in.virtualPos
-        if (mOff >= fileLen) done = true
-        else {
-          try {
-            val blockSize = i32()
-            val refId = i32()
-            val pos = i32()
-            skipFully(blockSize - 8)
-            val st = statFor(mOff)
-            if (st(0) < 0) st(0) = uOff
-            st(1) = math.min(st(1), refId); st(2) = math.max(st(2), refId)
-            st(3) = math.min(st(3), pos); st(4) = math.max(st(4), pos)
-          } catch { case _: EOFException => done = true }
-        }
-      }
-      // enumerate ALL members (including record-less ones) so the reader
-      // can treat the index as a complete member list
-      val out = new DataOutputStream(new java.io.BufferedOutputStream(
-        HadoopIO.create(sidecarPath(bam), conf)))
-      try {
-        var n = 0
-        var mOff = 0L
-        val hdr = new Array[Byte](18)
-        val entries = scala.collection.mutable.ArrayBuffer.empty[MemberStat]
-        while (mOff < fileLen) {
-          val got = ch.readAtFully(mOff, hdr)
-          val total = Bgzf.memberLength(hdr, 0, got)
-          if (total <= 0) mOff = fileLen
-          else {
-            val st = stats.get(mOff)
-            entries += (st match {
-              case Some(a) => MemberStat(mOff, a(0), a(1), a(2), a(3), a(4))
-              case None    => MemberStat(mOff, -1, Int.MaxValue, Int.MinValue,
-                Int.MaxValue, Int.MinValue)
-            })
-            mOff += total
-          }
-        }
-        out.writeInt(Magic)
-        out.writeInt(entries.length)
-        entries.foreach { e =>
-          out.writeLong(e.offset); out.writeInt(e.firstRecUoffset)
-          out.writeInt(e.minRef); out.writeInt(e.maxRef)
-          out.writeInt(e.minPos); out.writeInt(e.maxPos)
-          n += 1
-        }
-        n
-      } finally out.close()
-    } finally ch.close()
+    val hdr = BamHeader.locate(bam, conf)
+    val (bounds, stats) = scanRange(bam, conf, 0L, hdr.fileLen, hdr)
+    writeGai(bam, conf, bounds.length, entries(bounds, stats))
   }
 
   /** Executor-parallel index build over byte-range splits — the form a
-    * 100 TB corpus actually gets indexed with ([[build]]'s sequential scan
-    * is the fixture/CLI path). Each task owns a raw range [start, end):
-    * it enumerates the member boundaries in it (BSIZE hops from the first
-    * validated boundary), re-synchronizes to a record start with the same
+    * 100 TB corpus actually gets indexed with; [[build]] is its one-range
+    * case. Each task owns a raw range [start, end): it enumerates the
+    * member boundaries in it (BSIZE hops from the first validated
+    * boundary), re-synchronizes to a record start with the same
     * [[BamSync]] guesser the un-indexed reader uses (or the exact header
     * end, driver-supplied, when the range contains it), and accumulates
     * the per-member stats of the records STARTING in its members — the
@@ -162,58 +83,49 @@ object BamIndex {
   def buildDistributed(s: org.apache.spark.sql.SparkSession, bam: String,
       splitSize: Long = 16L * 1024 * 1024): Int = {
     val confBox = HadoopIO.capture()
-    // driver-side header parse: nRef for the guesser's refId validation +
-    // the exact virtual position where records begin
-    val (fileLen, nRef, hdrMember, hdrU) = {
-      val ch = new SeekableFile(bam, confBox.conf)
-      try {
-        val in = new BgzfInputStream(ch, 0L)
-        val din = new DataInputStream(in)
-        def i32(): Int = {
-          val b0 = din.read(); val b1 = din.read(); val b2 = din.read(); val b3 = din.read()
-          if ((b0 | b1 | b2 | b3) < 0) throw new EOFException()
-          b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
-        }
-        val magic = new Array[Byte](4); din.readFully(magic)
-        require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $bam")
-        HadoopIO.skipFully(din, i32().toLong, s"$bam header text")
-        val n = i32()
-        var r = 0
-        while (r < n) { HadoopIO.skipFully(din, i32().toLong, s"$bam ref dict"); i32(); r += 1 }
-        val (m, u) = in.virtualPos
-        (ch.size, n, m, u)
-      } finally ch.close()
-    }
-    val ranges = (0L until fileLen by splitSize)
-      .map(st => (st, math.min(st + splitSize, fileLen)))
+    val hdr = BamHeader.locate(bam, confBox.conf)
+    val ranges = (0L until hdr.fileLen by splitSize)
+      .map(st => (st, math.min(st + splitSize, hdr.fileLen)))
     // cluster-side merge: pair each boundary with its member's stats inside
     // the owning task, dedup range-edge boundaries, sort by offset — the
     // driver then STREAMS the sorted entries one partition at a time
     // (toLocalIterator) into the sidecar, so its memory is bounded by one
     // range's entries, not the whole file's (a 1 TB BAM is ~450 MB of
     // entries; per-range it's ~0.5 MB)
-    val entries = s.sparkContext
+    val sorted = s.sparkContext
       .parallelize(ranges, ranges.size)
-      .map { case (start, end) =>
-        scanRange(bam, confBox, start, end, fileLen, nRef, hdrMember, hdrU)
-      }
-      .flatMap { case (bounds, sts) =>
-        val byOff = sts.iterator.map(st => st.offset -> st).toMap
-        bounds.iterator.map(off => (off, byOff.get(off)))
+      .flatMap { case (start, end) =>
+        val (bounds, stats) =
+          scanRange(bam, confBox.conf, start, end, hdr)
+        entries(bounds, stats)
       }
       .reduceByKey((a, b) => a.orElse(b))
       .sortByKey()
     // count() materializes the shuffle map side (the one BAM scan); the
     // per-partition toLocalIterator jobs below skip straight to the sorted
     // reduce output, so the file is scanned exactly once
-    val n = entries.count()
+    writeGai(bam, confBox.conf, sorted.count(), sorted.toLocalIterator)
+  }
+
+  /** Each member boundary paired with the stats of its records. */
+  private def entries(bounds: Seq[Long], stats: Seq[MemberStat])
+      : Iterator[(Long, Option[MemberStat])] = {
+    val byOff = stats.iterator.map(st => st.offset -> st).toMap
+    bounds.iterator.map(off => (off, byOff.get(off)))
+  }
+
+  /** The `.gai` encoder: every member boundary in file order — including
+    * record-less members, so the reader can treat the index as a complete
+    * member list. */
+  private def writeGai(bam: String, conf: Configuration, n: Long,
+      members: Iterator[(Long, Option[MemberStat])]): Int = {
     require(n <= Int.MaxValue, s"$bam: $n members overflow the sidecar count")
     val out = new DataOutputStream(new java.io.BufferedOutputStream(
-      HadoopIO.create(sidecarPath(bam), confBox.conf)))
+      HadoopIO.create(sidecarPath(bam), conf)))
     try {
       out.writeInt(Magic)
       out.writeInt(n.toInt)
-      entries.toLocalIterator.foreach { case (off, stOpt) =>
+      members.foreach { case (off, stOpt) =>
         val e = stOpt.getOrElse(MemberStat(off, -1, Int.MaxValue,
           Int.MinValue, Int.MaxValue, Int.MinValue))
         out.writeLong(e.offset); out.writeInt(e.firstRecUoffset)
@@ -224,65 +136,36 @@ object BamIndex {
     } finally out.close()
   }
 
-  /** One task's contribution: (member boundaries in [start,end), stats of
-    * records starting in those members). Runs on an executor. */
-  private def scanRange(bam: String, confBox: HadoopIO.ConfBox, start: Long,
-      end: Long, fileLen: Long, nRef: Int, hdrMember: Long, hdrU: Int)
-      : (Seq[Long], Seq[MemberStat]) = {
-    val ch = new SeekableFile(bam, confBox.conf)
+  /** One range's contribution: (member boundaries in [start,end), stats of
+    * records starting in those members). */
+  private def scanRange(bam: String, conf: Configuration, start: Long,
+      end: Long, hdr: BamHeader.Located): (Seq[Long], Seq[MemberStat]) = {
+    val ch = new SeekableFile(bam, conf)
     try {
-      val firstMember =
-        if (start == 0) 0L else Bgzf.nextMemberStart(ch, start, fileLen)
-      if (firstMember >= end || firstMember >= fileLen) return (Nil, Nil)
+      val firstMember = BamSync.firstMember(ch, start, hdr.fileLen)
+      if (firstMember >= end || firstMember >= hdr.fileLen) return (Nil, Nil)
       // enumerate boundaries by BSIZE hops (18-byte positioned reads)
       val offsets = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val hdr = new Array[Byte](18)
+      val head = new Array[Byte](18)
       var off = firstMember
       var ok = true
       while (ok && off < end) {
-        val got = ch.readAtFully(off, hdr)
-        val total = Bgzf.memberLength(hdr, 0, got)
+        val got = ch.readAtFully(off, head)
+        val total = Bgzf.memberLength(head, 0, got)
         if (total <= 0) ok = false
         else { offsets += off; off += total }
       }
-      // position at the first owned record: exact header end if this range
-      // holds it, validated guessing otherwise
-      val streamOpt: Option[BgzfInputStream] =
-        if (firstMember <= hdrMember) {
-          if (hdrMember >= end) None
-          else {
-            val st = new BgzfInputStream(ch, hdrMember)
-            HadoopIO.skipFully(st, hdrU.toLong, s"$bam header end")
-            Some(st)
-          }
-        } else BamSync.syncToRecord(ch, firstMember, end, nRef, bam)
+      // firstU, minRef, maxRef, minPos, maxPos per member with records
       val stats = scala.collection.mutable.LinkedHashMap.empty[Long, Array[Int]]
-      streamOpt.foreach { in =>
-        val din = new DataInputStream(in)
-        def i32(): Int = {
-          val b0 = din.read(); val b1 = din.read(); val b2 = din.read(); val b3 = din.read()
-          if ((b0 | b1 | b2 | b3) < 0) throw new EOFException()
-          b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
+      BamSync.openRange(ch, firstMember, end, hdr, bam).foreach { in =>
+        BamSync.walkRecords(in, end, hdr.fileLen, bam) {
+          (vBeg, _, refId, pos, _, _) =>
+            val st = stats.getOrElseUpdate(vBeg >>> 16, Array(-1,
+              Int.MaxValue, Int.MinValue, Int.MaxValue, Int.MinValue))
+            if (st(0) < 0) st(0) = (vBeg & 0xffff).toInt
+            st(1) = math.min(st(1), refId); st(2) = math.max(st(2), refId)
+            st(3) = math.min(st(3), pos); st(4) = math.max(st(4), pos)
         }
-        var done = false
-        while (!done) {
-          val (mOff, uOff) = in.virtualPos
-          if (mOff >= end || mOff >= fileLen) done = true
-          else {
-            try {
-              val blockSize = i32()
-              val refId = i32()
-              val pos = i32()
-              HadoopIO.skipFully(din, (blockSize - 8).toLong, s"$bam record at $mOff+$uOff")
-              val st = stats.getOrElseUpdate(mOff, Array(-1, Int.MaxValue,
-                Int.MinValue, Int.MaxValue, Int.MinValue))
-              if (st(0) < 0) st(0) = uOff
-              st(1) = math.min(st(1), refId); st(2) = math.max(st(2), refId)
-              st(3) = math.min(st(3), pos); st(4) = math.max(st(4), pos)
-            } catch { case _: EOFException => done = true }
-          }
-        }
-        in.close()
       }
       (offsets.toSeq,
         stats.toSeq.map { case (o, a) => MemberStat(o, a(0), a(1), a(2), a(3), a(4)) })

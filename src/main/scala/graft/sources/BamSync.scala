@@ -6,7 +6,8 @@ package graft.sources
   * inflate a validation window at a member boundary, try every offset as a
   * record start, and accept when a chain of records decodes with all the
   * spec's invariants holding. Shared by the `bam` DSv2 reader (un-indexed
-  * splits) and the distributed `.gai` index builder.
+  * splits) and the split walk ([[openRange]] + [[walkRecords]]) that every
+  * BAM sidecar builder runs.
   */
 object BamSync {
 
@@ -110,5 +111,64 @@ object BamSync {
       memberOff = if (nextOff > memberOff) nextOff else fileLen
     }
     None
+  }
+
+  /** First member a split of `[start, ...)` owns: members belong to the
+    * range they start in. */
+  def firstMember(ch: SeekableFile, start: Long, fileLen: Long): Long =
+    if (start == 0) 0L else Bgzf.nextMemberStart(ch, start, fileLen)
+
+  /** A stream at the first record of the split owning the members that
+    * start in [firstMember, end): the split holding the header end starts
+    * there exactly, later splits sync by validated guessing. None when
+    * the split owns no record. */
+  def openRange(ch: SeekableFile, firstMember: Long, end: Long,
+      hdr: BamHeader.Located, what: String): Option[BgzfInputStream] =
+    if (firstMember >= end || firstMember >= hdr.fileLen) None
+    else if (firstMember <= hdr.member) {
+      if (hdr.member >= end) None
+      else {
+        val st = new BgzfInputStream(ch, hdr.member)
+        HadoopIO.skipFully(st, hdr.u.toLong, s"$what header end")
+        Some(st)
+      }
+    } else syncToRecord(ch, firstMember, end, hdr.nRef, what)
+
+  /** The one record walk of the sidecar builders: from a positioned
+    * stream, visit every record starting in a member before `end` with
+    * (vBeg, vEnd, refId, pos, flag, refLen) — its virtual start and end
+    * and the reference length of its CIGAR (M/D/N/=/X). Stops at EOF, and
+    * closes the stream. */
+  def walkRecords(in: BgzfInputStream, end: Long, fileLen: Long,
+      what: String)(visit: (Long, Long, Int, Int, Int, Int) => Unit): Unit = {
+    val din = new java.io.DataInputStream(in)
+    val fixed = new Array[Byte](36) // block_size + the 32 fixed bytes
+    var done = false
+    try while (!done) {
+      val (mBeg, uBeg) = in.virtualPos
+      if (mBeg >= end || mBeg >= fileLen) done = true
+      else try {
+        din.readFully(fixed)
+        val blockSize = le32(fixed, 0)
+        val lReadName = fixed(12) & 0xff
+        val nCigar = le16(fixed, 16)
+        HadoopIO.skipFully(din, lReadName.toLong, s"$what read name")
+        var refLen = 0
+        var c = 0
+        while (c < nCigar) {
+          val v = Integer.reverseBytes(din.readInt())
+          (v & 0xf) match {
+            case 0 | 2 | 3 | 7 | 8 => refLen += (v >>> 4) // M D N = X
+            case _                 => ()
+          }
+          c += 1
+        }
+        HadoopIO.skipFully(din,
+          (blockSize - 32 - lReadName - 4 * nCigar).toLong, s"$what record tail")
+        val (mEnd, uEnd) = in.virtualPos
+        visit((mBeg << 16) | uBeg, (mEnd << 16) | uEnd, le32(fixed, 4),
+          le32(fixed, 8), le16(fixed, 18), refLen)
+      } catch { case _: java.io.EOFException => done = true }
+    } finally in.close()
   }
 }

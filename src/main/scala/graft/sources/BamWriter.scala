@@ -1,7 +1,7 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataInputStream, OutputStream}
-import java.util.zip.{CRC32, Deflater, GZIPInputStream}
+import java.io.OutputStream
+import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -28,25 +28,10 @@ object BamWriter {
     "MIDNSHP=X".zipWithIndex.toMap
 
   /** Read header text + reference dictionary from an existing BAM
-    * (driver-side; headers are KB-sized). */
+    * (driver-side; headers are KB-sized) through [[BamHeader]]. */
   def readHeader(path: String): (String, Seq[(String, Int)]) = {
-    val in = new DataInputStream(new BufferedInputStream(new GZIPInputStream(
-      new BufferedInputStream(HadoopIO.open(path, HadoopIO.driverConf())))))
-    try {
-      def i32(): Int = {
-        val b = new Array[Byte](4); in.readFully(b)
-        (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
-      }
-      val magic = new Array[Byte](4); in.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $path")
-      val text = new Array[Byte](i32()); in.readFully(text)
-      val refs = (0 until i32()).map { _ =>
-        val name = new Array[Byte](i32()); in.readFully(name)
-        val len = i32()
-        (new String(name, 0, name.length - 1, "US-ASCII"), len)
-      }
-      (new String(text, "US-ASCII"), refs)
-    } finally in.close()
+    val h = BamHeader.read(path, HadoopIO.driverConf())
+    (h.text, h.refs.toSeq)
   }
 
   /** Write `records` (the sam/bam source schema) as one BAM file.
@@ -100,7 +85,7 @@ object BamWriter {
   }
 
   /** Reference-consumed length of a SAM CIGAR string (M/D/N/=/X), 0 for
-    * `*` — the span the index bins a record by. */
+    * `*` — what [[BaiIndex.endPos]] spans a mapped record by. */
   private def cigarRefLen(cigar: String): Int = {
     if (cigar == "*") return 0
     var i = 0
@@ -122,18 +107,19 @@ object BamWriter {
   /** With `index = true` (requires coordinate-sorted input —
     * [[sortAndWrite]]'s contract, enforced loudly per task and across
     * part seams) the write ALSO emits the `.bai` sidecar FROM THE WRITE
-    * ITSELF: each task accumulates its part's bin chunks and linear
-    * minima at write-side virtual positions
-    * ([[BgzfOutputStream.virtualPos]]), the driver shifts them by the
-    * parts' byte offsets in the concatenated file and reuses the
-    * distributed-build merge + encoder. The sidecar is BYTE-IDENTICAL
-    * to [[BaiIndex.build]] re-run over the finished file (BamWriterSpec
-    * pins it) — index-on-write saves the full re-read a just-written
-    * cohort-scale BAM would otherwise pay before its first region
-    * query. A dictionary whose longest contig exceeds BAI's 2^29 cap
-    * emits a `.csi` instead (byte-identical to [[CsiIndex.build]] at
+    * ITSELF: each task feeds its records to the same accumulator the
+    * post-hoc split walk uses ([[BaiIndex.BamAcc]]) at write-side
+    * virtual positions ([[BgzfOutputStream.virtualPos]]); the driver
+    * shifts the results by the parts' byte offsets in the concatenated
+    * file and reuses the build's merge + encoder. The sidecar is
+    * BYTE-IDENTICAL to [[BaiIndex.build]] re-run over the finished file
+    * (BamWriterSpec pins it) — index-on-write saves the full re-read a
+    * just-written cohort-scale BAM would otherwise pay before its first
+    * region query. A dictionary whose longest contig exceeds BAI's 2^29
+    * cap emits a `.csi` instead (byte-identical to [[CsiIndex.build]] at
     * the same (min_shift, depth) — BamWriterCsiSpec pins it), matching
-    * samtools' long-reference indexing behavior. */
+    * samtools' long-reference indexing behavior. The `index = false` loop
+    * does no accumulator work per record. */
   def write(records: DataFrame, headerText: String,
       refs: Seq[(String, Int)], out: String, index: Boolean = false): Long = {
     import org.apache.hadoop.fs.Path
@@ -153,8 +139,10 @@ object BamWriter {
     val useCsi = doIndex && maxContigLen > BaiIndex.MaxPos
     var csiDepth = 5
     while (maxContigLen > CsiIndex.maxPos(14, csiDepth)) csiDepth += 1
-    val binCap: Int =
-      if (useCsi) CsiIndex.maxPos(14, csiDepth) else BaiIndex.MaxPos
+    val scheme =
+      if (useCsi) BaiIndex.BinScheme.bamCsi(14, csiDepth)
+      else BaiIndex.BinScheme.Bai
+    val nRef = refs.size
     val csiDepthB = csiDepth // stable local for the task closure
 
     import org.apache.spark.sql.Encoders
@@ -170,16 +158,8 @@ object BamWriter {
           val os = new java.io.BufferedOutputStream(
             HadoopIO.create(path, confBox.conf), 1 << 16)
           var n = 0L
-          val bins = scala.collection.mutable.LinkedHashMap.empty[(Int, Int),
-            scala.collection.mutable.ArrayBuffer[BaiIndex.Chunk]]
-          val linear =
-            scala.collection.mutable.LinkedHashMap.empty[(Int, Int), Long]
-          val stats = scala.collection.mutable.LinkedHashMap
-            .empty[Int, BaiIndex.RefStat]
-          var firstKey: Option[(Int, Int)] = None
-          var lastRef = -1
-          var lastPos = -1
-          var noCoor = 0L
+          val acc =
+            if (doIndex) new BaiIndex.BamAcc(scheme, nRef, out) else null
           var tailV = 0L
           try {
             val pz = new BgzfOutputStream(os)
@@ -190,59 +170,11 @@ object BamWriter {
                 val (m0, u0) = pz.virtualPos
                 pz.write(encode(r, refIndex, csiDepthB))
                 val (m1, u1) = pz.virtualPos
-                val refId = refIndex.getOrElse(r.getString(2), -1)
                 val pos = r.getInt(3) - 1
-                if (refId < 0 || pos < 0) noCoor += 1
-                else {
-                  require(refId > lastRef ||
-                      (refId == lastRef && pos >= lastPos),
-                    s"$out: records are not coordinate-sorted (ref " +
-                      s"$refId pos $pos after ref $lastRef pos $lastPos)" +
-                      " — index-on-write requires sorted input " +
-                      "(sortAndWrite's contract)")
-                  lastRef = refId; lastPos = pos
-                  if (firstKey.isEmpty) firstKey = Some((refId, pos))
-                  val end = pos + math.max(1, cigarRefLen(r.getString(5)))
-                  val vB = (m0 << 16) | u0
-                  val vE = (m1 << 16) | u1
-                  val unm = if ((r.getInt(1) & 4) != 0) 1L else 0L
-                  stats(refId) = stats.get(refId) match {
-                    case None => BaiIndex.RefStat(vB, vE, 1L - unm, unm)
-                    case Some(prev) => BaiIndex.RefStat(prev.offBeg, vE,
-                      prev.nMapped + 1L - unm, prev.nUnmapped + unm)
-                  }
-                  require(end <= binCap,
-                    s"$out: record end $end exceeds the " +
-                      (if (useCsi) s"(min_shift=14, depth=$csiDepthB) CSI"
-                       else "BAI 2^29") +
-                      s" cap $binCap — the position lies beyond every " +
-                      "dictionary contig")
-                  val vBeg = (m0 << 16) | u0
-                  val vEnd = (m1 << 16) | u1
-                  val bin =
-                    if (useCsi)
-                      CsiIndex.reg2bin(pos.toLong, end.toLong, 14, csiDepthB)
-                    else BaiIndex.reg2bin(pos, end)
-                  val bcs = bins.getOrElseUpdate((refId, bin), scala
-                    .collection.mutable.ArrayBuffer.empty[BaiIndex.Chunk])
-                  if (bcs.nonEmpty && (bcs.last.end >>> 16) == m0)
-                    bcs(bcs.length - 1) =
-                      BaiIndex.Chunk(bcs.last.beg, vEnd)
-                  else bcs += BaiIndex.Chunk(vBeg, vEnd)
-                  var w = pos >> 14
-                  val wEnd = (end - 1) >> 14
-                  while (w <= wEnd) {
-                    val k = (refId, w)
-                    // presence check, NOT the 0L sentinel the read-side
-                    // accumulators use: part-LOCAL voffset 0 is a real
-                    // position (the part's first record), unlike absolute
-                    // offsets where member 0 is always the header.
-                    // Voffsets are monotone within a task, so first
-                    // touch == minimum.
-                    if (!linear.contains(k)) linear(k) = vBeg
-                    w += 1
-                  }
-                }
+                val flag = r.getInt(1)
+                acc.add(refIndex.getOrElse(r.getString(2), -1), pos,
+                  BaiIndex.endPos(pos, flag, cigarRefLen(r.getString(5))),
+                  flag, (m0 << 16) | u0, (m1 << 16) | u1)
               }
               n += 1
             }
@@ -257,11 +189,7 @@ object BamWriter {
             else {
               val b = new java.io.ByteArrayOutputStream()
               val oo = new java.io.ObjectOutputStream(b)
-              oo.writeObject((BaiIndex.TaskBai(
-                bins.toSeq.map { case (k, v) => (k, v.toSeq) },
-                linear.toMap, firstKey,
-                if (lastRef >= 0) Some((lastRef, lastPos)) else None,
-                noCoor, n, stats.toMap), tailV))
+              oo.writeObject((acc.result, tailV))
               oo.close()
               b.toByteArray
             }
@@ -341,14 +269,13 @@ object BamWriter {
   }
 
   /** The record's `bin` field (SAM spec §4.2.1): reg2bin over
-    * [pos, end), where an unmapped or zero-length record spans one base, so
-    * an unplaced record (pos -1) gets 4680. BAI bins address [0, 2^29);
+    * [pos, [[BaiIndex.endPos]]), the index builders' span, so an
+    * unplaced record (pos -1) gets 4680. BAI bins address [0, 2^29);
     * past that the field carries the CSI bin at the writer's depth, cut to
     * the field's 16 bits. */
   private def recordBin(pos: Int, flag: Int, cigar: String,
       csiDepth: Int): Int = {
-    val rlen = if ((flag & 4) != 0) 0 else cigarRefLen(cigar)
-    val end = pos.toLong + math.max(1, rlen)
+    val end = BaiIndex.endPos(pos, flag, cigarRefLen(cigar))
     if (pos < 0) BaiIndex.reg2bin(-1, 0)
     else if (end <= BaiIndex.MaxPos) BaiIndex.reg2bin(pos, end.toInt)
     else CsiIndex.reg2bin(pos.toLong, end, 14, csiDepth) & 0xffff

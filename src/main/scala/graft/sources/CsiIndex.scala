@@ -104,119 +104,33 @@ object CsiIndex {
   /** Parent bin in the scheme's 8-ary tree (bin 0 is the root). */
   private def parent(b: Int): Int = (b - 1) >> 3
 
-  // ---- build (sequential fixture/CLI path; [[buildDistributed]] below
-  // is the executor-parallel form, byte-identical output)
+  // ---- build: the split walk of [[BaiIndex.scanRangeBam]] under this
+  // scheme's reg2bin and min_shift-granular linear windows
 
-  /** One sequential pass over a coordinate-sorted BAM → a `.csi` with the
-    * given binning parameters. Same record-walk and loud-unsorted rules as
-    * [[BaiIndex.build]]. */
+  /** A coordinate-sorted BAM → a `.csi` with the given binning
+    * parameters: the split walk run once over the whole file on the
+    * calling thread — the one-range case of [[buildDistributed]], no
+    * Spark job. Same loud-unsorted rule as [[BaiIndex.build]]. */
   def build(bam: String, conf: Configuration = new Configuration(),
       minShift: Int = 14, depth: Int = 5): Int = {
-    val ch = new SeekableFile(bam, conf)
-    try {
-      val fileLen = ch.size
-      val in = new BgzfInputStream(ch, 0L)
-      val din = new DataInputStream(in)
-      def u8(): Int = {
-        val b = din.read(); if (b < 0) throw new EOFException(); b
-      }
-      def i16(): Int = u8() | (u8() << 8)
-      def i32(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
-      val magic = new Array[Byte](4); din.readFully(magic)
-      require(magic.sameElements(Array[Byte]('B', 'A', 'M', 1)), s"not BAM: $bam")
-      HadoopIO.skipFully(din, i32().toLong, s"$bam header text")
-      val nRef = i32()
-      var r = 0
-      while (r < nRef) { HadoopIO.skipFully(din, i32().toLong, s"$bam ref dict"); i32(); r += 1 }
-
-      val bins = Array.fill(nRef)(scala.collection.mutable.LinkedHashMap
-        .empty[Int, scala.collection.mutable.ArrayBuffer[Chunk]])
-      val lidx = Array.fill(nRef)(
-        scala.collection.mutable.ArrayBuffer.empty[Long])
-      val stats = Array.fill[BaiIndex.RefStat](nRef)(null)
-      var noCoor = 0L
-      var n = 0
-      var lastRef = -1
-      var lastPos = -1
-      var done = false
-      while (!done) {
-        val (mBeg, uBeg) = in.virtualPos
-        if (mBeg >= fileLen) done = true
-        else {
-          try {
-            val blockSize = i32()
-            val refId = i32()
-            val pos = i32()
-            val lReadName = u8()
-            u8(); i16() // mapq, stored bin
-            val nCigar = i16()
-            val flag = i16()
-            i32() // l_seq
-            HadoopIO.skipFully(din, 12L, s"$bam mate fields")
-            HadoopIO.skipFully(din, lReadName.toLong, s"$bam read name")
-            var refLen = 0
-            var c = 0
-            while (c < nCigar) {
-              val v = i32()
-              (v & 0xf) match {
-                case 0 | 2 | 3 | 7 | 8 => refLen += (v >>> 4)
-                case _                 => ()
-              }
-              c += 1
-            }
-            HadoopIO.skipFully(din,
-              (blockSize - 32 - lReadName - 4 * nCigar).toLong, s"$bam record tail")
-            val vBeg = (mBeg << 16) | uBeg
-            val (mEnd, uEnd) = in.virtualPos
-            val vEnd = (mEnd << 16) | uEnd
-            if (refId < 0 || pos < 0) noCoor += 1
-            else {
-              require(refId < nRef, s"$bam: refId $refId out of range")
-              require(refId > lastRef || (refId == lastRef && pos >= lastPos),
-                s"$bam is not coordinate-sorted at record $n " +
-                  s"(ref $refId pos $pos after ref $lastRef pos $lastPos) — " +
-                  "a CSI over an unsorted file silently drops region records")
-              lastRef = refId; lastPos = pos
-              val end = pos + math.max(1, refLen)
-              require(end <= maxPos(minShift, depth),
-                s"$bam: record end $end exceeds the (min_shift=$minShift, " +
-                  s"depth=$depth) scheme's ${maxPos(minShift, depth)} cap")
-              stats(refId) = {
-                val prev = stats(refId)
-                val unm = if ((flag & 4) != 0) 1L else 0L
-                if (prev == null) BaiIndex.RefStat(vBeg, vEnd, 1L - unm, unm)
-                else BaiIndex.RefStat(prev.offBeg, vEnd,
-                  prev.nMapped + 1L - unm, prev.nUnmapped + unm)
-              }
-              val bin = reg2bin(pos.toLong, end.toLong, minShift, depth)
-              val bcs = bins(refId).getOrElseUpdate(bin,
-                scala.collection.mutable.ArrayBuffer.empty[Chunk])
-              if (bcs.nonEmpty && (bcs.last.end >>> 16) == mBeg)
-                bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
-              else bcs += Chunk(vBeg, vEnd)
-              val lin = lidx(refId)
-              var w = pos >> minShift
-              val wEnd = (end - 1) >> minShift
-              while (w <= wEnd) {
-                while (lin.length <= w) lin += 0L
-                if (lin(w) == 0L) lin(w) = vBeg
-                w += 1
-              }
-            }
-            n += 1
-          } catch { case _: EOFException => done = true }
-        }
-      }
-      writeCsi(bam, conf, minShift, depth, bins, lidx, noCoor, stats)
-      n
-    } finally ch.close()
+    val hdr = BamHeader.locate(bam, conf)
+    encode(bam, conf, minShift, depth, hdr.nRef,
+      Array(BaiIndex.scanRangeBam(bam, conf, 0L, hdr.fileLen, hdr,
+        BaiIndex.BinScheme.bamCsi(minShift, depth))))
   }
 
-  /** Shared `.csi` encoder (sequential and distributed builds accumulate
-    * the SAME structures, so sharing the byte encoder is what makes the
-    * distributed sidecar provably byte-identical): fill linear holes
-    * with the previous window's value (htslib rule), then sample at each
-    * bin's interval start for the bin's loffset. */
+  private def encode(bam: String, conf: Configuration, minShift: Int,
+      depth: Int, nRef: Int, parts: Array[BaiIndex.TaskBai]): Int = {
+    val (bins, linear, noCoor, n, stats) =
+      BaiIndex.mergeTasks(parts, nRef, bam)
+    writeCsi(bam, conf, minShift, depth, bins, linear, noCoor, stats)
+    n.toInt
+  }
+
+  /** The `.csi` encoder over merged accumulations (every build and
+    * index-on-write share it, so their sidecars are byte-identical): fill
+    * linear holes with the previous window's value (htslib rule), then
+    * sample at each bin's interval start for the bin's loffset. */
   private[sources] def writeCsi(bam: String, conf: Configuration, minShift: Int,
       depth: Int,
       bins: Array[scala.collection.mutable.LinkedHashMap[Int,
@@ -265,32 +179,20 @@ object CsiIndex {
   }
 
   /** Executor-parallel `.csi` build over byte-range splits of a
-    * coordinate-sorted BAM — the distributed mirror this file's build
-    * note left pending (r14): [[BaiIndex.buildDistributed]]'s split/
-    * seam-merge machinery with this scheme's reg2bin and min_shift-
-    * granular linear accumulation, then the shared encoder. The sidecar
-    * is BYTE-IDENTICAL to [[build]]'s (CsiIndexSpec asserts it). */
+    * coordinate-sorted BAM: [[BaiIndex.buildDistributed]]'s split/
+    * seam-merge machinery under this scheme, then the shared encoder.
+    * [[build]] is its one-range case, so the sidecar is byte-identical at
+    * every split size (CsiIndexSpec asserts it). */
   def buildDistributed(s: org.apache.spark.sql.SparkSession, bam: String,
       splitSize: Long = 16L * 1024 * 1024,
       minShift: Int = 14, depth: Int = 5): Int = {
     val confBox = HadoopIO.capture()
-    val (fileLen, nRef, hdrMember, hdrU) = BaiIndex.parseHeader(bam, confBox)
-    val ranges = (0L until fileLen by splitSize)
-      .map(st => (st, math.min(st + splitSize, fileLen)))
-    val (ms, dp) = (minShift, depth) // stable locals for the task closure
-    val cap = maxPos(ms, dp)
-    val parts = s.sparkContext
-      .parallelize(ranges, ranges.size)
-      .map { case (start, end) =>
-        BaiIndex.scanRangeBam(bam, confBox, start, end, fileLen, nRef,
-          hdrMember, hdrU,
-          (b: Int, e: Int) => reg2bin(b.toLong, e.toLong, ms, dp), ms, cap)
-      }
-      .collect()
-    val (bins, linear, noCoor, n, stats) =
-      BaiIndex.mergeTasks(parts, nRef, bam)
-    writeCsi(bam, confBox.conf, minShift, depth, bins, linear, noCoor, stats)
-    n.toInt
+    val hdr = BamHeader.locate(bam, confBox.conf)
+    val scheme = BaiIndex.BinScheme.bamCsi(minShift, depth)
+    encode(bam, confBox.conf, minShift, depth, hdr.nRef,
+      BaiIndex.splitScan(s, hdr.fileLen, splitSize) { (start, end) =>
+        BaiIndex.scanRangeBam(bam, confBox.conf, start, end, hdr, scheme)
+      })
   }
 
   def read(bam: String, conf: Configuration = new Configuration()): Csi = {

@@ -176,9 +176,7 @@ class LandingDirMicroBatchStream(paths: Seq[String], splitSize: Long,
   private def listing(): Seq[(String, Long)] = {
     val conf = HadoopIO.driverConf()
     paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-      .filterNot { case (p, _) =>
-        p.endsWith(".gai") || p.endsWith(".bai") || p.endsWith(".csi") ||
-          p.endsWith(".tbi") }
+      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
       .sortBy(_._1)
   }
 

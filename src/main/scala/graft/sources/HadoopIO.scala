@@ -213,6 +213,13 @@ object HadoopIO {
     else Seq((st.getPath.toString, st.getLen))
   }
 
+  /** An index sidecar (`.gai`, `.bai`, `.csi`, `.tbi`) that lives next to
+    * its data file: every source consults it per file and never scans it
+    * as data when a directory is listed. */
+  def isSidecar(path: String): Boolean =
+    path.endsWith(".gai") || path.endsWith(".bai") ||
+      path.endsWith(".csi") || path.endsWith(".tbi")
+
   /** Drain exactly `n` bytes from a stream; throws instead of spinning if
     * the stream stops making progress (ADVICE r2: `skip` can return 0 at
     * EOF forever). */

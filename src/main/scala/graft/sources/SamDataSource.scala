@@ -164,8 +164,9 @@ object SamDataSource {
   /** One InputPartition per `splitSize` byte range of each file.
     * Directory paths expand to their (non-hidden) regular files, so
     * `load(dir)` scans a whole sample directory in parallel — minus the
-    * `.gai` index sidecars living next to their BAMs (the 100 TB layout is
-    * many `<f>.bam` + `<f>.bam.gai` pairs per directory; a sidecar is
+    * index sidecars ([[HadoopIO.isSidecar]]) living next to their BAMs
+    * (the 100 TB layout is many `<f>.bam` + `<f>.bam.gai` pairs per
+    * directory; a sidecar is
     * consulted per-file by the reader, never scanned as data). Listing and
     * sizing go through the Hadoop FileSystem (driver side), and an
     * unreadable path fails the query here — it must never degrade into a
@@ -173,8 +174,7 @@ object SamDataSource {
   def planSplits(paths: Seq[String], splitSize: Long): Array[InputPartition] = {
     val conf = HadoopIO.driverConf()
     paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-      .filterNot { case (p, _) =>
-        p.endsWith(".gai") || p.endsWith(".bai") || p.endsWith(".csi") }
+      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
       .flatMap { case (p, size) =>
       val codec = fileCodec(p, conf)
       if (codec == "gzip" || size <= splitSize)

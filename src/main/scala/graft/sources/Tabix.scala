@@ -88,7 +88,8 @@ object Tabix {
 
   final case class Tbi(names: Array[String], bai: BaiIndex.Bai)
 
-  // ---- shared accumulation over one sorted pass of the bgzip'd VCF
+  // ---- the one accumulation: [[scanRangeVcf]] and index-on-write both
+  // feed [[WriteAcc]]; [[mergeParts]] replays range results into an Acc
 
   private final class Acc {
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -101,111 +102,53 @@ object Tabix {
     var n = 0
   }
 
-  /** One pass over the bgzip'd VCF: per record, its (refId, beg, end,
-    * vBeg, vEnd); sortedness enforced. `binOf` maps the interval to a
-    * bin in the target scheme. */
-  private def collect(vcf: String, conf: Configuration,
-      binOf: (Long, Long) => Int, maxPos: Long): Acc = {
-    val file = new SeekableFile(vcf, conf)
-    try {
-      val fileLen = file.size
-      val in = new BgzfInputStream(file, 0L)
-      val acc = new Acc
-      val lb = new FastqLineBuf
-      var lastRef = -1
-      var lastBeg = -1L
-      var done = false
-      while (!done) {
-        val (m0, u0) = in.virtualPos
-        if (m0 >= fileLen) done = true
-        else {
-          lb.reset()
-          var b = in.read()
-          if (b == -1) done = true
-          else {
-            while (b != -1 && b != '\n') { lb.append(b); b = in.read() }
-            val line = lb.toLine
-            if (line.nonEmpty && line.charAt(0) != '#') {
-              val f = line.split("\t", 9)
-              require(f.length >= 4,
-                s"malformed VCF record in $vcf at member $m0: " +
-                  s"'${line.take(40)}' has ${f.length} fields")
-              val contig = f(0)
-              val pos1 =
-                try f(1).toLong
-                catch { case _: NumberFormatException =>
-                  throw new IllegalArgumentException(
-                    s"malformed VCF POS '${f(1)}' in $vcf at member $m0")
-                }
-              val beg = pos1 - 1
-              val end = recordEnd(beg, f)
-              require(beg >= 0 && end <= maxPos,
-                s"$vcf: record [$beg, $end) outside the index scheme's " +
-                  s"$maxPos cap")
-              val refId = acc.nameId.getOrElseUpdate(contig, {
-                acc.names += contig
-                acc.bins += scala.collection.mutable.LinkedHashMap.empty
-                acc.lidx += scala.collection.mutable.ArrayBuffer.empty[Long]
-                acc.names.length - 1
-              })
-              // a refId BELOW lastRef means the contig block reappeared —
-              // distinct diagnostic from an unsorted position within one
-              // block (one branch, so neither check can shadow the other)
-              require(refId >= lastRef,
-                s"$vcf: contig $contig reappears after a later contig — " +
-                  "tabix requires contiguous contig blocks")
-              require(refId > lastRef || beg >= lastBeg,
-                s"$vcf is not coordinate-sorted at record ${acc.n} " +
-                  s"($contig:$pos1 after refId $lastRef beg $lastBeg) — " +
-                  "a tabix index over an unsorted file silently drops " +
-                  "region records")
-              lastRef = refId; lastBeg = beg
-              val vBeg = (m0 << 16) | u0
-              val (m1, u1) = in.virtualPos
-              val vEnd = (m1 << 16) | u1
-              val bin = binOf(beg, end)
-              val bcs = acc.bins(refId).getOrElseUpdate(bin,
-                scala.collection.mutable.ArrayBuffer.empty[Chunk])
-              if (bcs.nonEmpty && (bcs.last.end >>> 16) == m0)
-                bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
-              else bcs += Chunk(vBeg, vEnd)
-              val lin = acc.lidx(refId)
-              var w = (beg >> LinearShift).toInt
-              val wEnd = ((end - 1) >> LinearShift).toInt
-              while (w <= wEnd) {
-                while (lin.length <= w) lin += 0L
-                if (lin(w) == 0L) lin(w) = vBeg
-                w += 1
-              }
-              acc.n += 1
-            }
-          }
-        }
+  /** The VCF record-interval parser of every tabix build: (contig, beg,
+    * end) of one record line — beg = POS−1, end per [[recordEnd]] — or
+    * null for a header or empty line. `where` names the line's place in
+    * error messages. */
+  private def interval(line: String, where: => String): (String, Long, Long) = {
+    if (line.isEmpty || line.charAt(0) == '#') return null
+    val f = line.split("\t", 9)
+    require(f.length >= 4,
+      s"malformed VCF record$where: '${line.take(40)}' has ${f.length} fields")
+    val pos1 =
+      try f(1).toLong
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"malformed VCF POS '${f(1)}'$where")
       }
-      // fill linear holes with the previous window's value (htslib rule)
-      acc.lidx.foreach { lin =>
-        var w = 1
-        while (w < lin.length) {
-          if (lin(w) == 0L) lin(w) = lin(w - 1)
-          w += 1
-        }
-      }
-      acc
-    } finally file.close()
+    val beg = pos1 - 1
+    (f(0), beg, recordEnd(beg, f))
   }
 
-  /** Build `<vcf>.tbi` (BGZF-compressed, the interoperable sidecar).
-    * Returns the record count. */
+  /** Tabix `.csi` binning: the linear index stays at 16 kb windows at any
+    * min_shift (the encoder samples it for each bin's loffset). */
+  private def csiScheme(minShift: Int, depth: Int): BaiIndex.BinScheme =
+    BaiIndex.BinScheme(csi = true, minShift, depth, LinearShift)
+
+  /** Build `<vcf>.tbi` (BGZF-compressed, the interoperable sidecar):
+    * [[scanRangeVcf]] run once over the whole file on the calling thread —
+    * the one-range case of [[buildDistributed]], no Spark job. Returns the
+    * record count. */
   def build(vcf: String, conf: Configuration = new Configuration()): Int = {
-    val acc = collect(vcf, conf,
-      (b, e) => BaiIndex.reg2bin(b.toInt, e.toInt), BaiIndex.MaxPos.toLong)
+    val acc = scanWhole(vcf, conf, BaiIndex.BinScheme.Bai)
     writeTbi(vcf, conf, acc)
     acc.n
   }
 
-  // shared sidecar encoders: the sequential and distributed builds
-  // accumulate into the SAME Acc shape, so sharing the byte encoders is
-  // what makes the distributed sidecar provably byte-identical
+  private def scanWhole(vcf: String, conf: Configuration,
+      scheme: BaiIndex.BinScheme): Acc = {
+    val fileLen = fileLength(vcf, conf)
+    mergeParts(vcf, Seq(scanRangeVcf(vcf, conf, 0L, fileLen, fileLen, scheme)))
+  }
+
+  private def fileLength(vcf: String, conf: Configuration): Long = {
+    val f = new SeekableFile(vcf, conf)
+    try f.size finally f.close()
+  }
+
+  // sidecar encoders: every build and index-on-write merge into the SAME
+  // Acc shape, so sharing the byte encoders makes their sidecars
+  // byte-identical
   private def writeTbi(vcf: String, conf: Configuration, acc: Acc): Unit = {
     val raw = HadoopIO.create(sidecarPath(vcf), conf)
     try {
@@ -238,12 +181,11 @@ object Tabix {
   }
 
   /** Build `<vcf>.csi` with the tabix aux payload (the `tabix -C` form;
-    * for contigs past BAI's 2^29 cap). Encoding matches [[CsiIndex.read]]. */
+    * for contigs past BAI's 2^29 cap) — the one-range case of
+    * [[buildCsiDistributed]]. Encoding matches [[CsiIndex.read]]. */
   def buildCsi(vcf: String, conf: Configuration = new Configuration(),
       minShift: Int = 14, depth: Int = 5): Int = {
-    val maxPos = 1L << (minShift + 3 * depth)
-    val acc = collect(vcf, conf,
-      (b, e) => CsiIndex.reg2bin(b, e, minShift, depth), maxPos)
+    val acc = scanWhole(vcf, conf, csiScheme(minShift, depth))
     writeCsiTabix(vcf, conf, acc, minShift, depth)
     acc.n
   }
@@ -264,7 +206,7 @@ object Tabix {
       out.write(nm)
       le32(acc.names.length)
       // derive per-bin loffset from the linear index (htslib rule), as
-      // CsiIndex.build does for BAM
+      // CsiIndex.writeCsi does for BAM
       acc.bins.indices.foreach { ri =>
         val lin = acc.lidx(ri)
         def loff(bin: Int): Long = {
@@ -288,94 +230,68 @@ object Tabix {
     } finally out.close()
   }
 
-  // ---- distributed build (VERDICT r13 #1: the sequential pass walks
-  // every BGZF member of the file on one driver thread — a 100 GB+
-  // cohort VCF indexes on one core; BaiIndex.buildDistributed already
-  // proved the per-range-accumulate / seam-merge shape for BAM)
+  // ---- distributed build: the same walk per byte range as one Spark job
 
-  /** One task's pre-aggregated contribution: per-contig blocks in
+  /** One range's pre-aggregated contribution: per-contig blocks in
     * discovery order (for the cross-seam sortedness replay and the
     * global refId order), per-(contig, bin) chunk runs already merged
-    * WITHIN the task, per-(contig, window) linear minima, and the
+    * WITHIN the range, per-(contig, window) linear minima, and the
     * record count. Contigs are carried by NAME — refIds are a global
-    * discovery-order property only the driver can assign. Sized by bins
+    * discovery-order property only the merge can assign. Sized by bins
     * touched, not records: a task over 16 MB of a cohort VCF carries a
     * few KB back to the driver. */
   private final case class TaskTbx(
       blocks: Seq[(String, Long, Long)], // (contig, firstBeg, lastBeg)
-      bins: Seq[((String, Int), Seq[Chunk])], // in-task discovery order
+      bins: Seq[((String, Int), Seq[Chunk])], // in-range discovery order
       linear: Seq[((String, Int), Long)],
       n: Long)
 
-  /** Which reg2bin the TASK applies, as data (a case class, not a
-    * captured function, so the task closure stays trivially
-    * serializable). `csi = false` is the `.tbi` path: BAI's fixed
-    * six-level scheme. */
-  private final case class BinScheme(csi: Boolean, minShift: Int, depth: Int) {
-    def binOf(b: Long, e: Long): Int =
-      if (csi) CsiIndex.reg2bin(b, e, minShift, depth)
-      else BaiIndex.reg2bin(b.toInt, e.toInt)
-    def maxPos: Long =
-      if (csi) 1L << (minShift + 3 * depth) else BaiIndex.MaxPos.toLong
-  }
-
   /** Executor-parallel `.tbi` build over byte-range splits of a bgzip'd
     * coordinate-sorted VCF — [[BaiIndex.buildDistributed]]'s shape on the
-    * text surface. Tasks own the BGZF members starting in their range,
-    * position at the first owned line via [[Bgzf.openAtLineStart]] (the
-    * compressed-text seam protocol every split scan uses), and
-    * accumulate bin chunks / linear minima locally; the driver replays
-    * task results in file order (reproducing the sequential builder's
-    * record-order bin discovery), applies the same same-member
-    * chunk-merge rule across seams, and verifies sortedness across them.
-    * The sidecar is BYTE-IDENTICAL to [[build]]'s (TabixDistributedSpec
-    * asserts exactly that). */
+    * text surface, with [[build]] as its one-range case. Tasks own the
+    * BGZF members starting in their range, position at the first owned
+    * line via [[Bgzf.openAtLineStart]] (the compressed-text seam protocol
+    * every split scan uses), and run [[scanRangeVcf]]; the driver replays
+    * task results in file order (record-order bin discovery), applies the
+    * same same-member chunk-merge rule across seams, and verifies
+    * sortedness across them. The sidecar is BYTE-IDENTICAL to [[build]]'s
+    * (TabixDistributedSpec asserts exactly that). */
   def buildDistributed(s: org.apache.spark.sql.SparkSession, vcf: String,
       splitSize: Long = 16L * 1024 * 1024): Int = {
     val confBox = HadoopIO.capture()
     val acc = accumulateDistributed(s, vcf, confBox, splitSize,
-      BinScheme(csi = false, 14, 5))
+      BaiIndex.BinScheme.Bai)
     writeTbi(vcf, confBox.conf, acc)
     acc.n
   }
 
-  /** Executor-parallel tabix-`.csi` build — the distributed mirror
-    * CsiIndex.scala's build note left pending, for the tabix-flavoured
-    * CSI. Byte-identical to [[buildCsi]]. */
+  /** Executor-parallel tabix-`.csi` build; [[buildCsi]] is its one-range
+    * case, so the two are byte-identical. */
   def buildCsiDistributed(s: org.apache.spark.sql.SparkSession, vcf: String,
       splitSize: Long = 16L * 1024 * 1024,
       minShift: Int = 14, depth: Int = 5): Int = {
     val confBox = HadoopIO.capture()
     val acc = accumulateDistributed(s, vcf, confBox, splitSize,
-      BinScheme(csi = true, minShift, depth))
+      csiScheme(minShift, depth))
     writeCsiTabix(vcf, confBox.conf, acc, minShift, depth)
     acc.n
   }
 
   private def accumulateDistributed(s: org.apache.spark.sql.SparkSession,
       vcf: String, confBox: HadoopIO.ConfBox, splitSize: Long,
-      scheme: BinScheme): Acc = {
-    val fileLen = {
-      val f = new SeekableFile(vcf, confBox.conf)
-      try f.size finally f.close()
-    }
-    val ranges = (0L until fileLen by math.max(splitSize, 1L))
-      .map(st => (st, math.min(st + splitSize, fileLen)))
-    val parts = s.sparkContext
-      .parallelize(ranges, math.max(ranges.size, 1))
-      .map { case (start, end) =>
-        scanRangeVcf(vcf, confBox, start, end, fileLen, scheme)
-      }
-      .collect() // partition order == byte order == record order (sorted VCF)
-    mergeParts(vcf, parts)
+      scheme: BaiIndex.BinScheme): Acc = {
+    val fileLen = fileLength(vcf, confBox.conf)
+    mergeParts(vcf, BaiIndex.splitScan(s, fileLen, splitSize) { (start, end) =>
+      scanRangeVcf(vcf, confBox.conf, start, end, fileLen, scheme)
+    })
   }
 
   /** Replay per-range/per-part accumulations in file order into one Acc:
-    * global refIds in discovery order, the sequential builder's exact
-    * cross-block sortedness rules, same-member chunk merge across seams,
-    * unsigned-min linear merge, htslib hole fill. Shared by the
-    * distributed read-side build and index-on-write (whose parts arrive
-    * already shifted to global virtual offsets). */
+    * global refIds in discovery order, cross-block sortedness rules,
+    * same-member chunk merge across seams, unsigned-min linear merge,
+    * htslib hole fill. Shared by every read-side build, one range or
+    * many, and by index-on-write (whose parts arrive already shifted to
+    * global virtual offsets). */
   private def mergeParts(vcf: String, parts: Iterable[TaskTbx]): Acc = {
     val acc = new Acc
     var lastRef = -1
@@ -420,9 +336,7 @@ object Tabix {
     require(total <= Int.MaxValue,
       s"$vcf: $total records overflow the record count")
     acc.n = total.toInt
-    // fill linear holes with the previous window's value (htslib rule) —
-    // collect() does this at the end of its pass; the merged index gets
-    // the identical treatment so the encoders see identical inputs
+    // fill linear holes with the previous window's value (htslib rule)
     acc.lidx.foreach { lin =>
       var w = 1
       while (w < lin.length) {
@@ -433,103 +347,46 @@ object Tabix {
     acc
   }
 
-  /** One task's record walk: own the lines whose first byte lives in a
-    * member starting in [start, end), accumulate (contig, bin) chunk
-    * runs merged within the stream plus per-window linear minima, and
-    * enforce within-task sortedness. Runs on an executor. */
-  private def scanRangeVcf(vcf: String, confBox: HadoopIO.ConfBox,
-      start: Long, end: Long, fileLen: Long, scheme: BinScheme): TaskTbx = {
-    val file = new SeekableFile(vcf, confBox.conf)
+  /** One range's record walk: own the lines whose first byte lives in a
+    * member starting in [start, end) and feed each record to one
+    * [[WriteAcc]] (within-range sortedness included). The sequential
+    * builds run it once over the whole file; the distributed ones once
+    * per task. */
+  private def scanRangeVcf(vcf: String, conf: Configuration,
+      start: Long, end: Long, fileLen: Long,
+      scheme: BaiIndex.BinScheme): TaskTbx = {
+    val acc = new WriteAcc(scheme, vcf)
+    val file = new SeekableFile(vcf, conf)
     try {
       val firstMember =
         if (start == 0) 0L else Bgzf.nextMemberStart(file, start, fileLen)
-      if (firstMember >= end || firstMember >= fileLen)
-        return TaskTbx(Nil, Nil, Nil, 0L)
-      val in = Bgzf.openAtLineStart(file, firstMember, fileLen)
-      try {
-        val blocks =
-          scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-        val bins = scala.collection.mutable.LinkedHashMap
-          .empty[(String, Int), scala.collection.mutable.ArrayBuffer[Chunk]]
-        val linear =
-          scala.collection.mutable.LinkedHashMap.empty[(String, Int), Long]
-        val lb = new FastqLineBuf
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        var curContig: String = null
-        var lastBeg = -1L
-        var n = 0L
-        var done = false
-        val maxPos = scheme.maxPos
-        while (!done) {
-          val (m0, u0) = in.virtualPos
-          if (m0 >= end || m0 >= fileLen) done = true
-          else {
-            lb.reset()
-            var b = in.read()
-            if (b == -1) done = true
+      if (firstMember < end && firstMember < fileLen) {
+        val in = Bgzf.openAtLineStart(file, firstMember, fileLen)
+        try {
+          val lb = new FastqLineBuf
+          var done = false
+          while (!done) {
+            val (m0, u0) = in.virtualPos
+            if (m0 >= end || m0 >= fileLen) done = true
             else {
-              while (b != -1 && b != '\n') { lb.append(b); b = in.read() }
-              val line = lb.toLine
-              if (line.nonEmpty && line.charAt(0) != '#') {
-                val f = line.split("\t", 9)
-                require(f.length >= 4,
-                  s"malformed VCF record in $vcf at member $m0: " +
-                    s"'${line.take(40)}' has ${f.length} fields")
-                val contig = f(0)
-                val pos1 =
-                  try f(1).toLong
-                  catch { case _: NumberFormatException =>
-                    throw new IllegalArgumentException(
-                      s"malformed VCF POS '${f(1)}' in $vcf at member $m0")
-                  }
-                val beg = pos1 - 1
-                val recEnd = recordEnd(beg, f)
-                require(beg >= 0 && recEnd <= maxPos,
-                  s"$vcf: record [$beg, $recEnd) outside the index " +
-                    s"scheme's $maxPos cap")
-                if (contig != curContig) {
-                  require(seen.add(contig),
-                    s"$vcf: contig $contig reappears after a later " +
-                      "contig — tabix requires contiguous contig blocks")
-                  curContig = contig
-                  blocks += ((contig, beg, beg))
-                } else {
-                  require(beg >= lastBeg,
-                    s"$vcf is not coordinate-sorted " +
-                      s"($contig:$pos1 after beg $lastBeg)")
-                  val (c, fb, _) = blocks.last
-                  blocks(blocks.length - 1) = (c, fb, beg)
+              lb.reset()
+              var b = in.read()
+              if (b == -1) done = true
+              else {
+                while (b != -1 && b != '\n') { lb.append(b); b = in.read() }
+                val rec = interval(lb.toLine, s" in $vcf at member $m0")
+                if (rec != null) {
+                  val (m1, u1) = in.virtualPos
+                  acc.add(rec._1, rec._2, rec._3, (m0 << 16) | u0,
+                    (m1 << 16) | u1)
                 }
-                lastBeg = beg
-                val vBeg = (m0 << 16) | u0
-                val (m1, u1) = in.virtualPos
-                val vEnd = (m1 << 16) | u1
-                val bin = scheme.binOf(beg, recEnd)
-                val bcs = bins.getOrElseUpdate((contig, bin),
-                  scala.collection.mutable.ArrayBuffer.empty[Chunk])
-                if (bcs.nonEmpty && (bcs.last.end >>> 16) == m0)
-                  bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
-                else bcs += Chunk(vBeg, vEnd)
-                var w = (beg >> LinearShift).toInt
-                val wEnd = ((recEnd - 1) >> LinearShift).toInt
-                while (w <= wEnd) {
-                  val k = (contig, w)
-                  val cur = linear.getOrElse(k, 0L)
-                  if (cur == 0L ||
-                      java.lang.Long.compareUnsigned(vBeg, cur) < 0)
-                    linear(k) = vBeg
-                  w += 1
-                }
-                n += 1
               }
             }
           }
-        }
-        TaskTbx(blocks.toSeq,
-          bins.toSeq.map { case (k, v) => (k, v.toSeq) },
-          linear.toSeq, n)
-      } finally in.close()
+        } finally in.close()
+      }
     } finally file.close()
+    acc.result
   }
 
   // ---- index-on-write (VERDICT r14 #1-missing / next-round #3): emit
@@ -543,13 +400,15 @@ object Tabix {
   // [[build]]/[[buildCsi]] over the finished file, without the full
   // re-read a just-written cohort VCF would otherwise pay.
 
-  /** One task's write-side accumulation for one bin scheme — the
-    * [[scanRangeVcf]] walk fed by the writer instead of a file scan.
-    * Linear minima use PRESENCE checks, never the read side's 0L
-    * sentinel: part-LOCAL voffset 0 is a real position (the part's
-    * first record). Voffsets are monotone within a task, so first touch
-    * == minimum. */
-  private final class WriteAcc(scheme: BinScheme) {
+  /** The one per-record tabix rule for one bin scheme: contiguous contig
+    * blocks, sorted positions within a block, the scheme's cap, bin
+    * chunks with the same-member merge, first-touch linear minima. Fed by
+    * [[scanRangeVcf]] and, at write-side virtual positions, by
+    * [[VcfWriteIndexer]]. Linear minima use PRESENCE checks, never a 0L
+    * sentinel: part-LOCAL voffset 0 is a real position (the part's first
+    * record). Voffsets are monotone within one feed, so first touch ==
+    * minimum. */
+  private final class WriteAcc(scheme: BaiIndex.BinScheme, what: String) {
     private val blocks =
       scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     private val bins = scala.collection.mutable.LinkedHashMap
@@ -563,31 +422,29 @@ object Tabix {
 
     def add(contig: String, beg: Long, end: Long,
         vBeg: Long, vEnd: Long): Unit = {
-      require(beg >= 0 && end <= scheme.maxPos,
-        s"record [$beg, $end) outside the index scheme's " +
-          s"${scheme.maxPos} cap")
+      scheme.requireBinnable(what, beg, end)
       if (contig != curContig) {
         require(seen.add(contig),
-          s"contig $contig reappears after a later contig — tabix " +
+          s"$what: contig $contig reappears after a later contig — tabix " +
             "requires contiguous contig blocks")
         curContig = contig
         blocks += ((contig, beg, beg))
       } else {
         require(beg >= lastBeg,
-          s"records are not coordinate-sorted ($contig beg $beg after " +
-            s"beg $lastBeg) — index-on-write requires sorted input")
+          s"$what is not coordinate-sorted ($contig beg $beg after beg " +
+            s"$lastBeg) — a tabix index over an unsorted file silently " +
+            "drops region records")
         val (c, fb, _) = blocks.last
         blocks(blocks.length - 1) = (c, fb, beg)
       }
       lastBeg = beg
-      val bin = scheme.binOf(beg, end)
-      val bcs = bins.getOrElseUpdate((contig, bin),
+      val bcs = bins.getOrElseUpdate((contig, scheme.binOf(beg, end)),
         scala.collection.mutable.ArrayBuffer.empty[Chunk])
       if (bcs.nonEmpty && (bcs.last.end >>> 16) == (vBeg >>> 16))
         bcs(bcs.length - 1) = Chunk(bcs.last.beg, vEnd)
       else bcs += Chunk(vBeg, vEnd)
-      var w = (beg >> LinearShift).toInt
-      val wEnd = ((end - 1) >> LinearShift).toInt
+      var w = (beg >> scheme.linShift).toInt
+      val wEnd = ((end - 1) >> scheme.linShift).toInt
       while (w <= wEnd) {
         val k = (contig, w)
         if (!linear.contains(k)) linear(k) = vBeg
@@ -601,21 +458,16 @@ object Tabix {
   }
 
   /** [[TextSink.LineIndexer]] for VCF: parse each rendered record line
-    * exactly as the post-hoc builders do (same field split, same
-    * `END=`-widened [[recordEnd]]) and feed every requested scheme's
-    * [[WriteAcc]]. Header lines never reach the indexer (TextSink writes
-    * the header on the driver), but '#' is guarded anyway. */
-  private final class VcfWriteIndexer(schemes: Seq[BinScheme])
-      extends TextSink.LineIndexer {
-    private val accs = schemes.map(new WriteAcc(_))
+    * with the post-hoc builders' [[interval]] and feed every requested
+    * scheme's [[WriteAcc]]. Header lines never reach the indexer
+    * (TextSink writes the header on the driver), but '#' is guarded
+    * anyway. */
+  private final class VcfWriteIndexer(schemes: Seq[BaiIndex.BinScheme],
+      out: String) extends TextSink.LineIndexer {
+    private val accs = schemes.map(new WriteAcc(_, out))
     override def add(line: String, vBeg: Long, vEnd: Long): Unit = {
-      if (line.isEmpty || line.charAt(0) == '#') return
-      val f = line.split("\t", 9)
-      require(f.length >= 4,
-        s"malformed VCF record: '${line.take(40)}' has ${f.length} fields")
-      val beg = f(1).toLong - 1
-      val end = recordEnd(beg, f)
-      accs.foreach(_.add(f(0), beg, end, vBeg, vEnd))
+      val rec = interval(line, s" written to $out")
+      if (rec != null) accs.foreach(_.add(rec._1, rec._2, rec._3, vBeg, vEnd))
     }
     override def blob(tailV: Long): Array[Byte] = {
       val b = new java.io.ByteArrayOutputStream()
@@ -627,16 +479,16 @@ object Tabix {
   }
 
   private def schemesFor(tbi: Boolean, csi: Boolean,
-      minShift: Int = 14, depth: Int = 5): Seq[BinScheme] =
-    (if (tbi) Seq(BinScheme(csi = false, 14, 5)) else Nil) ++
-      (if (csi) Seq(BinScheme(csi = true, minShift, depth)) else Nil)
+      minShift: Int = 14, depth: Int = 5): Seq[BaiIndex.BinScheme] =
+    (if (tbi) Seq(BaiIndex.BinScheme.Bai) else Nil) ++
+      (if (csi) Seq(csiScheme(minShift, depth)) else Nil)
 
   /** Per-task indexer factory for [[TextSink.writeIndexed]] — one pass
     * accumulates every requested sidecar form. */
-  private[sources] def writeIndexer(tbi: Boolean, csi: Boolean,
+  private[sources] def writeIndexer(out: String, tbi: Boolean, csi: Boolean,
       minShift: Int = 14, depth: Int = 5): () => TextSink.LineIndexer = {
     val schemes = schemesFor(tbi, csi, minShift, depth)
-    () => new VcfWriteIndexer(schemes)
+    () => new VcfWriteIndexer(schemes, out)
   }
 
   /** [[TextSink.write]] + index-on-write in one call: stream `lines`
@@ -654,7 +506,7 @@ object Tabix {
       s"writeIndexedVcf: '$out' is plain text — tabix virtual offsets " +
         "only exist inside BGZF members")
     val (n, parts, headerLen, fileLen) = TextSink.writeIndexed(
-      header, lines, out, writeIndexer(tbi, csi, minShift, depth))
+      header, lines, out, writeIndexer(out, tbi, csi, minShift, depth))
     finishIndexOnWrite(out, HadoopIO.driverConf(), parts, headerLen,
       fileLen, tbi, csi, minShift, depth)
     n

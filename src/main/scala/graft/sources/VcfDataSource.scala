@@ -329,9 +329,7 @@ class VcfScan(paths: Seq[String], splitSize: Long, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = HadoopIO.driverConf()
     paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-      .filterNot { case (p, _) =>
-        p.endsWith(".tbi") || p.endsWith(".csi") || p.endsWith(".gai") ||
-          p.endsWith(".bai") }
+      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
       .flatMap { case (p, size) =>
         VcfScan.planFile(p, size, splitSize, preds, conf, regions)
       }.map(p => p: InputPartition).toArray

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the distributed index builders (r14): synthesize
-  * a cohort-scale bgzip'd VCF, then time the sequential single-thread
-  * `Tabix.build` against the executor-parallel `Tabix.buildDistributed`
-  * (and `.csi` both ways), asserting byte-identical sidecars while
-  * timing. One JSON line to stdout.
+  * a cohort-scale bgzip'd VCF, then time the sequential `Tabix.build` —
+  * the split walk run once over the whole file on the calling thread —
+  * against `Tabix.buildDistributed`, the same walk over many byte ranges
+  * as one Spark job (and `.csi` both ways), asserting byte-identical
+  * sidecars while timing. One JSON line to stdout.
   *
   *   runMain graft.tools.IndexBench [nSites] [threads]   (default 8M, 32)
   *

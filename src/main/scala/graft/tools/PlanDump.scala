@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` for every declared query (or the named
   * subset) to one file per query — the plan evidence the optimization
@@ -40,7 +41,7 @@ object PlanDump {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/$n.txt"), txt.getBytes("UTF-8"))
         System.err.println(s"[plandump] $n ok")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
     }

@@ -107,13 +107,18 @@ class BamDataSourceSpec extends SparkSpec {
         Seq("chrM" -> 16569), out)
       BamIndex.build(out)
     }
+    // a stray tabix sidecar in the same directory is skipped too, never
+    // scanned as data ("not a BAM file")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/calls.vcf.gz.tbi"),
+      "TBI\u0001 stray".getBytes("US-ASCII"))
     val df = spark.read.format("bam").option("splitsize", 8192).load(dir)
     // partition math: sum over the DATA files of ceil(len / splitsize);
-    // the .gai sidecars must be excluded from planning, not scanned
+    // the sidecars must be excluded from planning, not scanned
     val conf = HadoopIO.driverConf()
     val targets = HadoopIO.listScanTargets(dir, conf)
     assert(targets.count(_._1.endsWith(".gai")) === 3) // sidecars present...
-    val lens = targets.filterNot(_._1.endsWith(".gai")).map(_._2)
+    assert(targets.count(_._1.endsWith(".tbi")) === 1)
+    val lens = targets.filterNot(t => HadoopIO.isSidecar(t._1)).map(_._2)
     assert(lens.size === 3) // ...but only the 3 BAMs become splits
     val expectParts = lens.map(l => ((l + 8191) / 8192).toInt).sum
     assert(df.rdd.getNumPartitions === expectParts)

@@ -280,6 +280,40 @@ class BamWriterSpec extends SparkSpec {
       "indexed region scan diverged from the unindexed scan")
   }
 
+  test("placed unmapped read: write-side .bai == post-hoc .bai, and its " +
+      "chunk sits in the bin its `bin` field names (htslib bam_endpos)") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("bamiowpu").toString
+    // u1 is unmapped but placed at 16300 with a 100M CIGAR: by CIGAR it
+    // would span [16299, 16399) (bin 585); bam_endpos gives [16299, 16300)
+    val recs = Seq(
+      ("m1", 0, "chr1", 100, "50M"),
+      ("u1", 4, "chr1", 16300, "100M"),
+      ("m2", 0, "chr1", 20000, "50M"))
+      .toDF("readName", "flag", "referenceName", "start", "cigar")
+      .select(col("readName"), col("flag"), col("referenceName"),
+        col("start"), lit(60).as("mapQ"), col("cigar"), lit("*").as("rnext"),
+        lit(0).as("pnext"), lit(0).as("tlen"), lit("A" * 100).as("sequence"),
+        lit("*").as("qual"), lit("NM:i:0").as("attributes"))
+      .coalesce(1)
+    val out = s"$tmp/pu.bam"
+    BamWriter.write(recs, "@HD\tVN:1.6\tSO:coordinate\n" +
+      "@SQ\tSN:chr1\tLN:100000\n", Seq("chr1" -> 100000), out, index = true)
+    val side = java.nio.file.Paths.get(out + ".bai")
+    val fromWrite = java.nio.file.Files.readAllBytes(side)
+    java.nio.file.Files.delete(side)
+    assert(BaiIndex.build(out) === 3)
+    assert(java.util.Arrays.equals(fromWrite,
+      java.nio.file.Files.readAllBytes(side)),
+      "write-emitted .bai differs from the post-hoc build")
+    val bin = readBins(out)("u1")
+    assert(bin === 4681)
+    val (vBeg, vEnd) = IndexArithmeticSpec.bamVoffsets(out)("u1")
+    val chunks = BaiIndex.read(out).refs(0).bins(bin)
+    assert(chunks.exists(c => c.beg <= vBeg && vEnd <= c.end),
+      s"u1 [$vBeg, $vEnd) not in bin $bin: ${chunks.toSeq}")
+  }
+
   test("index-on-write refuses unsorted input loudly") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("bamiow2").toString
