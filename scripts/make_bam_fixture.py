@@ -8,6 +8,10 @@ import struct, sys, zlib
 
 SEQ_CODES = {c: i for i, c in enumerate("=ACMGRSVTWYHKDBN")}
 
+# B-array subtype -> struct format of one element (SAM spec 4.2.4)
+ARRAY_FORMATS = {"c": "b", "C": "B", "s": "h", "S": "H", "i": "i", "I": "I",
+                 "f": "f"}
+
 def bgzf_block(payload: bytes) -> bytes:
     co = zlib.compressobj(6, zlib.DEFLATED, -15)
     cdata = co.compress(payload) + co.flush()
@@ -87,7 +91,24 @@ def encode_record(fields, refs, csi_depth=5):
     for t in tags:
         tag, typ, val = t.split(":", 2)
         if typ == "i":
-            tag_bytes += tag.encode() + b"i" + struct.pack("<i", int(val))
+            # SAM text has one integer type; BAM picks a width. Values in
+            # int32 range stay 'i'; uint32 values past it need 'I'.
+            v = int(val)
+            if -(1 << 31) <= v < (1 << 31):
+                tag_bytes += tag.encode() + b"i" + struct.pack("<i", v)
+            elif v < (1 << 32):
+                tag_bytes += tag.encode() + b"I" + struct.pack("<I", v)
+            else:
+                raise ValueError(f"integer tag out of range: {t}")
+        elif typ == "B":
+            # numeric array (spec 4.2.4): subtype, int32 count, values
+            sub, _, rest = val.partition(",")
+            vals = [x for x in rest.split(",") if x != ""]
+            fmt = ARRAY_FORMATS[sub]
+            conv = float if sub == "f" else int
+            tag_bytes += (tag.encode() + b"B" + sub.encode() +
+                struct.pack("<i", len(vals)) +
+                b"".join(struct.pack("<" + fmt, conv(x)) for x in vals))
         elif typ == "Z":
             tag_bytes += tag.encode() + b"Z" + val.encode() + b"\0"
         elif typ == "f":

@@ -1168,7 +1168,7 @@ object Fuzz {
     val refusalOk =
       if (!p.violate) true
       else {
-        val ms = new graft.sources.SamScan(Seq(dir), p.split,
+        val ms = new graft.sources.SamScan(Seq(dir), Some(p.split.toLong),
           graft.sources.SamDataSource.schema, Nil).toMicroBatchStream("")
         val committed = ms.latestOffset()
         TextSink.write(Nil,

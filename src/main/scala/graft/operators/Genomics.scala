@@ -6307,7 +6307,7 @@ object Genomics {
     // partition accounting via the stream's own planner: the pruned
     // stream must plan strictly fewer partitions than the full one
     def planned(preds: Seq[VcfFilters.Pred]): Int = {
-      val ms = new VcfScan(Seq(dir), 2039, VcfDataSource.schema, preds)
+      val ms = new VcfScan(Seq(dir), Some(2039L), VcfDataSource.schema, preds)
         .toMicroBatchStream("")
       ms.planInputPartitions(ms.initialOffset(), ms.latestOffset()).length
     }

@@ -27,7 +27,10 @@ import scala.jdk.CollectionConverters._
   *    reference inherited via ADAM,
   *    /root/reference/src/main/scala/MitoScape/BamReader.scala:172-174),
   *    and emits the records that start in its range. A single WGS-scale
-  *    BAM therefore scans with full cluster parallelism.
+  *    BAM therefore scans with full cluster parallelism, and a
+  *    sample-sized one on every core: without a `splitsize` option the
+  *    split size follows the session's parallelism
+  *    ([[SamDataSource.batchSplitSize]]).
   *  - The payload is `BAM\1`, SAM-text header, reference dictionary, then
   *    length-prefixed alignment records (little-endian) with 4-bit packed
   *    sequence ("=ACMGRSVTWYHKDBN") and typed optional tags.
@@ -137,7 +140,7 @@ class BamTable(properties: Map[String, String]) extends Table with SupportsRead 
   }
 }
 
-class BamScanBuilder(paths: Seq[String], splitSize: Long,
+class BamScanBuilder(paths: Seq[String], splitSize: Option[Long],
     baiPlanMode: String = "driver",
     regionPreds: Seq[SamFilters.Pred] = Nil,
     regions: Seq[(String, Long, Long)] = Nil) extends ScanBuilder
@@ -185,16 +188,12 @@ object BamScan {
     * re-filters per record, so pruning only ever skips bytes no region
     * record can live in. */
   private[sources] def streamPlanFile(preds: Seq[SamFilters.Pred],
-      splitSize: Long, regions: Seq[(String, Long, Long)] = Nil)(
-      p: String, size: Long,
+      regions: Seq[(String, Long, Long)] = Nil)(
+      p: String, size: Long, splitSize: Long,
       conf: org.apache.hadoop.conf.Configuration): Seq[InputPartition] = {
-    def plain(): Seq[InputPartition] = {
-      val codec = SamDataSource.fileCodec(p, conf)
-      if (codec == "gzip" || size <= splitSize)
-        Seq(SamInputPartition(p, 0L, Long.MaxValue, codec))
-      else (0L until size by splitSize).map(s =>
-        SamInputPartition(p, s, math.min(s + splitSize, size), codec))
-    }
+    def plain(): Seq[InputPartition] =
+      SamDataSource.byteRanges(p, size, splitSize,
+        SamDataSource.fileCodec(p, conf))
     if (preds.isEmpty) return plain()
     // index resolution: (refNames, maxPos, chunks lookup), or None when
     // only `.gai` exists (its per-member stats are reader-side)
@@ -250,7 +249,7 @@ object BamScan {
   }
 }
 
-class BamScan(paths: Seq[String], splitSize: Long, required: StructType,
+class BamScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
     preds: Seq[SamFilters.Pred], baiPlanMode: String = "driver",
     regions: Seq[(String, Long, Long)] = Nil)
     extends Scan with Batch {
@@ -258,19 +257,17 @@ class BamScan(paths: Seq[String], splitSize: Long, required: StructType,
   override def toBatch: Batch = this
   override def description(): String =
     s"bam PushedFilters: [${preds.mkString(", ")}]"
-  override def planInputPartitions(): Array[InputPartition] =
-    if (preds.isEmpty) SamDataSource.planSplits(paths, splitSize)
-    else {
-      // planning-time region pruning (r15): region-constraining preds +
-      // a `.bai`/`.csi` sidecar plan only member runs — the VCF source's
-      // r13 design, so pruned members never even schedule a task
-      val conf = HadoopIO.driverConf()
-      paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-        .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
-        .flatMap { case (p, size) =>
-          BamScan.streamPlanFile(preds, splitSize, regions)(p, size, conf)
-        }.toArray
-    }
+  /** Byte-range splits per file; with region-constraining preds and a
+    * `.bai`/`.csi` sidecar, only the region's member runs (r15, the VCF
+    * source's r13 design), so pruned members never even schedule a task
+    * ([[BamScan.streamPlanFile]]). */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val conf = HadoopIO.driverConf()
+    val (files, split) = SamDataSource.batchTargets(paths, splitSize, conf)
+    files.flatMap { case (p, size) =>
+      BamScan.streamPlanFile(preds, regions)(p, size, split, conf)
+    }.toArray
+  }
   override def createReaderFactory(): PartitionReaderFactory = {
     val confBox = HadoopIO.capture()
     // Plan `.bai` region runs ONCE on the driver and ship them in the
@@ -320,7 +317,7 @@ class BamScan(paths: Seq[String], splitSize: Long, required: StructType,
     new LandingDirMicroBatchStream(paths, splitSize, "bam",
       () => new BamReaderFactory(fields, ps, HadoopIO.capture()),
       planFile = if (ps.isEmpty) null
-        else BamScan.streamPlanFile(ps, splitSize, regions))
+        else BamScan.streamPlanFile(ps, regions))
   }
 }
 

@@ -22,10 +22,17 @@ import org.apache.spark.sql.{DataFrame, Row}
   * executor/driver heap or `spark.driver.maxResultSize`. */
 object BamWriter {
 
-  private val SeqCode: Map[Char, Int] =
-    "=ACMGRSVTWYHKDBN".zipWithIndex.toMap
-  private val CigarOp: Map[Char, Int] =
-    "MIDNSHP=X".zipWithIndex.toMap
+  /** 4-bit base code by ASCII char; any other char encodes as `N` (15). */
+  private val SeqCode: Array[Int] = asciiTable("=ACMGRSVTWYHKDBN", 15)
+  /** BAM CIGAR op code by ASCII char; -1 for a char that is no op. */
+  private val CigarOp: Array[Int] = asciiTable("MIDNSHP=X", -1)
+
+  private def asciiTable(alphabet: String, other: Int): Array[Int] = {
+    val t = Array.fill(128)(other)
+    var i = 0
+    while (i < alphabet.length) { t(alphabet.charAt(i)) = i; i += 1 }
+    t
+  }
 
   /** Read header text + reference dictionary from an existing BAM
     * (driver-side; headers are KB-sized) through [[BamHeader]]. */
@@ -34,17 +41,6 @@ object BamWriter {
     (h.text, h.refs.toSeq)
   }
 
-  /** Write `records` (the sam/bam source schema) as one BAM file.
-    *
-    * Encode + deflate run distributed: each task streams its partition as
-    * one self-contained run of BGZF members to
-    * `<out>.parts/part-<pid>-<attempt>` via the Hadoop FS (only the
-    * current ≤60 KB member is ever buffered — never a whole-partition
-    * array); the driver then writes the header members, concatenates the
-    * part-files of the SUCCESSFUL attempts in partition order (byte copy,
-    * no decode), appends the file-level EOF marker, and drops the scratch
-    * dir. Failed/zombie task attempts write distinct part names the driver
-    * never reads, so retries and speculation are safe. */
   /** COORDINATE SORT + single-file write — the in-engine replacement for
     * the one external tool the reference workflow still shells out to
     * (`samtools sort`, `scripts/alignToMT.sh:70`; the reference REQUIRES
@@ -84,27 +80,59 @@ object BamWriter {
     write(sorted, headerText, refs, out, index)
   }
 
-  /** Reference-consumed length of a SAM CIGAR string (M/D/N/=/X), 0 for
-    * `*` — what [[BaiIndex.endPos]] spans a mapped record by. */
-  private def cigarRefLen(cigar: String): Int = {
-    if (cigar == "*") return 0
-    var i = 0
-    var len = 0
+  /** BAM CIGAR words (`len << 4 | op`) of a SAM CIGAR string: one per
+    * digit run followed by one of `MIDNSHP=X`. Any other char (`*`, or a
+    * stray one) ends the pending run and yields no word, as a
+    * `(\d+)([MIDNSHP=X])` match would skip it. */
+  private def cigarOps(cigar: String): Array[Int] = {
+    val out = new Array[Int](cigar.length / 2) // a word takes >= 2 chars
+    var k = 0
     var num = 0
+    var digits = false
+    var i = 0
     while (i < cigar.length) {
       val c = cigar.charAt(i)
-      if (c >= '0' && c <= '9') num = num * 10 + (c - '0')
+      if (c >= '0' && c <= '9') { num = num * 10 + (c - '0'); digits = true }
       else {
-        if (c == 'M' || c == 'D' || c == 'N' || c == '=' || c == 'X')
-          len += num
+        val op = if (c < 128) CigarOp(c) else -1
+        if (digits && op >= 0) { out(k) = (num << 4) | op; k += 1 }
         num = 0
+        digits = false
       }
+      i += 1
+    }
+    if (k == out.length) out else java.util.Arrays.copyOf(out, k)
+  }
+
+  /** Reference-consumed length (M/D/N/=/X) of CIGAR words, 0 for none —
+    * what [[BaiIndex.endPos]] spans a mapped record by. */
+  private def refLen(ops: Array[Int]): Int = {
+    var len = 0
+    var i = 0
+    while (i < ops.length) {
+      val op = ops(i) & 0xf
+      if (op == 0 || op == 2 || op == 3 || op == 7 || op == 8)
+        len += ops(i) >>> 4
       i += 1
     }
     len
   }
 
-  /** With `index = true` (requires coordinate-sorted input —
+  private def cigarRefLen(cigar: String): Int = refLen(cigarOps(cigar))
+
+  /** Write `records` (the sam/bam source schema) as one BAM file.
+    *
+    * Encode + deflate run distributed: each task streams its partition as
+    * one self-contained run of BGZF members to
+    * `<out>.parts/part-<pid>-<attempt>` via the Hadoop FS (only the
+    * current ≤60 KB member is ever buffered — never a whole-partition
+    * array); the driver then writes the header members, concatenates the
+    * part-files of the SUCCESSFUL attempts in partition order (byte copy,
+    * no decode), appends the file-level EOF marker, and drops the scratch
+    * dir. Failed/zombie task attempts write distinct part names the driver
+    * never reads, so retries and speculation are safe.
+    *
+    * With `index = true` (requires coordinate-sorted input —
     * [[sortAndWrite]]'s contract, enforced loudly per task and across
     * part seams) the write ALSO emits the `.bai` sidecar FROM THE WRITE
     * ITSELF: each task feeds its records to the same accumulator the
@@ -273,9 +301,9 @@ object BamWriter {
     * unplaced record (pos -1) gets 4680. BAI bins address [0, 2^29);
     * past that the field carries the CSI bin at the writer's depth, cut to
     * the field's 16 bits. */
-  private def recordBin(pos: Int, flag: Int, cigar: String,
+  private def recordBin(pos: Int, flag: Int, cigarOps: Array[Int],
       csiDepth: Int): Int = {
-    val end = BaiIndex.endPos(pos, flag, cigarRefLen(cigar))
+    val end = BaiIndex.endPos(pos, flag, refLen(cigarOps))
     if (pos < 0) BaiIndex.reg2bin(-1, 0)
     else if (end <= BaiIndex.MaxPos) BaiIndex.reg2bin(pos, end.toInt)
     else CsiIndex.reg2bin(pos.toLong, end, 14, csiDepth) & 0xffff
@@ -313,27 +341,33 @@ object BamWriter {
     }
 
     val name = (readName + "\u0000").getBytes("US-ASCII")
-    val cigarOps: Array[Int] =
-      if (cigar == "*") Array.empty
-      else "(\\d+)([MIDNSHP=X])".r.findAllMatchIn(cigar)
-        .map(m => (m.group(1).toInt << 4) | CigarOp(m.group(2).head)).toArray
+    val ops = cigarOps(cigar)
     val packed = new Array[Byte]((seq.length + 1) / 2)
     var i = 0
     while (i < seq.length) {
-      val code = SeqCode.getOrElse(seq.charAt(i), 15)
+      val c = seq.charAt(i)
+      val code = if (c < 128) SeqCode(c) else 15
       packed(i / 2) = (packed(i / 2) |
         (if (i % 2 == 0) code << 4 else code)).toByte
       i += 1
     }
     val tags = new java.io.ByteArrayOutputStream()
+    def le(v: Int, bytes: Int): Unit = {
+      var k = 0
+      while (k < bytes) { tags.write(v >>> (8 * k)); k += 1 }
+    }
     attrs.split("\\s+").filter(_.nonEmpty).foreach { t =>
       val Array(tag, typ, value) = t.split(":", 3)
       tags.write(tag.charAt(0)); tags.write(tag.charAt(1))
       typ match {
         case "i" =>
-          tags.write('i')
-          val v = value.toInt
-          tags.write(v); tags.write(v >>> 8); tags.write(v >>> 16); tags.write(v >>> 24)
+          // SAM text has one integer type; the bam source emits uint32 `I`
+          // values as `i` too, so values in [2^31, 2^32) go back as `I`
+          val v = value.toLong
+          require(v >= Int.MinValue && v <= 0xffffffffL,
+            s"BamWriter: tag '$t' is out of the int32/uint32 range")
+          tags.write(if (v <= Int.MaxValue) 'i' else 'I')
+          le(v.toInt, 4)
         case "Z" | "H" =>
           tags.write(typ.head)
           value.getBytes("US-ASCII").foreach(b => tags.write(b))
@@ -341,27 +375,56 @@ object BamWriter {
         case "A" => tags.write('A'); tags.write(value.head)
         case "f" =>
           tags.write('f')
-          val v = java.lang.Float.floatToIntBits(value.toFloat)
-          tags.write(v); tags.write(v >>> 8); tags.write(v >>> 16); tags.write(v >>> 24)
+          le(java.lang.Float.floatToIntBits(value.toFloat), 4)
+        case "B" =>
+          // `B:sub[,v1,...]` (spec §4.2.4): subtype, int32 count, values
+          require(value.nonEmpty && (value.length == 1 || value(1) == ','),
+            s"BamWriter: malformed array tag '$t'")
+          val sub = value.head
+          val vals =
+            if (value.length <= 2) Array.empty[String]
+            else value.substring(2).split(",", -1)
+          val (lo, hi, width) = sub match {
+            case 'c' => (Byte.MinValue.toLong, Byte.MaxValue.toLong, 1)
+            case 'C' => (0L, 0xffL, 1)
+            case 's' => (Short.MinValue.toLong, Short.MaxValue.toLong, 2)
+            case 'S' => (0L, 0xffffL, 2)
+            case 'i' => (Int.MinValue.toLong, Int.MaxValue.toLong, 4)
+            case 'I' => (0L, 0xffffffffL, 4)
+            case 'f' => (0L, 0L, 4) // floats: no integer range check
+            case other => sys.error(s"unsupported tag type B:$other in $t")
+          }
+          tags.write('B'); tags.write(sub); le(vals.length, 4)
+          vals.foreach { x =>
+            if (sub == 'f') le(java.lang.Float.floatToIntBits(x.toFloat), 4)
+            else {
+              val v = x.toLong
+              require(v >= lo && v <= hi,
+                s"BamWriter: '$x' is out of range for B:$sub in '$t'")
+              le(v.toInt, width)
+            }
+          }
         case other => sys.error(s"unsupported tag type $other in $t")
       }
     }
 
     val body = java.nio.ByteBuffer.allocate(
-        32 + name.length + 4 * cigarOps.length + packed.length + seq.length + tags.size())
+        32 + name.length + 4 * ops.length + packed.length + seq.length + tags.size())
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     body.putInt(refId).putInt(start - 1)
     body.put(name.length.toByte).put(mapq.toByte)
-      .putShort(recordBin(start - 1, flag, cigar, csiDepth).toShort)
-    body.putShort(cigarOps.length.toShort).putShort(flag.toShort)
+      .putShort(recordBin(start - 1, flag, ops, csiDepth).toShort)
+    body.putShort(ops.length.toShort).putShort(flag.toShort)
     body.putInt(seq.length).putInt(nextRefId).putInt(pnext - 1).putInt(tlen)
     body.put(name)
-    cigarOps.foreach(body.putInt)
+    i = 0
+    while (i < ops.length) { body.putInt(ops(i)); i += 1 }
     body.put(packed)
+    i = 0
     if (qual == "*" || qual.length != seq.length)
-      (0 until seq.length).foreach(_ => body.put(0xff.toByte)) // unavailable
+      while (i < seq.length) { body.put(0xff.toByte); i += 1 } // unavailable
     else
-      (0 until seq.length).foreach(i => body.put((qual.charAt(i) - 33).toByte))
+      while (i < seq.length) { body.put((qual.charAt(i) - 33).toByte); i += 1 }
     body.put(tags.toByteArray)
 
     val full = java.nio.ByteBuffer.allocate(4 + body.position())

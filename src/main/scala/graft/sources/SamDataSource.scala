@@ -20,12 +20,14 @@ import scala.jdk.CollectionConverters._
   * blob into InternalRows directly — no intermediate string-split
   * DataFrame stage.
   *
-  * Scale: files split into byte ranges (`splitsize` option, default 64 MB)
-  * with hadoop-style newline synchronization — a line belongs to the split
-  * containing its first byte; a split whose start is mid-line skips to the
-  * next line start, and every split reads past its end to finish a
-  * straddling line. A single 300 GB SAM therefore scans with full cluster
-  * parallelism instead of serializing on one task. Column pruning happens
+  * Scale: files split into byte ranges (`splitsize` option; by default a
+  * batch scan sizes them from its own bytes and the session's parallelism,
+  * see [[SamDataSource.batchSplitSize]]) with hadoop-style newline
+  * synchronization — a line belongs to the split containing its first
+  * byte; a split whose start is mid-line skips to the next line start, and
+  * every split reads past its end to finish a straddling line. A single
+  * 300 GB SAM therefore scans with full cluster parallelism instead of
+  * serializing on one task. Column pruning happens
   * via SupportsPushDownRequiredColumns (pruned scans skip building the
   * `line`/`attributes` strings entirely).
   *
@@ -61,9 +63,16 @@ object SamDataSource {
     StructField("qual", StringType, nullable = false),
     StructField("attributes", StringType, nullable = false)))
 
-  /** Default byte-range split size (64 MB — HDFS-block-ish; override with
-    * the `splitsize` read option). */
+  /** Largest default byte-range split (64 MB, HDFS-block-sized): the cap
+    * of [[batchSplitSize]], and the split size of every landing-dir
+    * micro-batch that gives no `splitsize` read option. */
   val DefaultSplitSize: Long = 64L * 1024 * 1024
+
+  /** Smallest default batch split: 16 maximal BGZF members (1 MB). Every
+    * split pays a header inflate, a boundary scan and a guess-sync; the
+    * floor bounds that cost per split and keeps any input of 1 MB or less
+    * on one partition. */
+  val MinSplitSize: Long = 16L * Bgzf.MaxIsize
 
   def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
     val single = Option(options.get("path")).toSeq
@@ -73,8 +82,49 @@ object SamDataSource {
     (single ++ multi).filter(_.nonEmpty)
   }
 
-  def splitSize(options: CaseInsensitiveStringMap): Long =
-    Option(options.get("splitsize")).map(_.toLong).getOrElse(DefaultSplitSize)
+  /** The `splitsize` read option, if given. */
+  def splitSize(options: CaseInsensitiveStringMap): Option[Long] =
+    Option(options.get("splitsize")).map(_.toLong)
+
+  /** A batch scan's default split size over `bytes` of splittable data:
+    * the bytes spread over the session's default parallelism,
+    * `min(DefaultSplitSize, max(MinSplitSize, ceil(bytes / parallelism)))`.
+    * A sample-sized BAM thus scans (and the writer, one part file per
+    * input partition, writes) on every core instead of as one task; a
+    * large input keeps 64 MB splits. */
+  def batchSplitSize(bytes: Long): Long = {
+    val session = org.apache.spark.sql.SparkSession
+    val cores = session.getActiveSession.orElse(session.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism).getOrElse(1).max(1)
+    math.min(DefaultSplitSize,
+      math.max(MinSplitSize, (bytes + cores - 1) / cores))
+  }
+
+  /** A batch scan's data files (index sidecars, [[HadoopIO.isSidecar]],
+    * dropped) and the split size they plan with: the explicit `splitsize`
+    * when given, else [[batchSplitSize]] over the files that can split.
+    * Plain gzip files always plan as one split, so their bytes are left
+    * out of the sum (that costs one header sniff per `.gz`/`.bgz` file).
+    * Listing and sizing go through the Hadoop FileSystem (driver side). */
+  def batchTargets(paths: Seq[String], splitSize: Option[Long],
+      conf: org.apache.hadoop.conf.Configuration)
+      : (Seq[(String, Long)], Long) = {
+    val files = paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
+      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
+    (files, splitSize.getOrElse(batchSplitSize(files.collect {
+      case (p, n) if fileCodec(p, conf) != "gzip" => n
+    }.sum)))
+  }
+
+  /** One file's byte-range splits: `[s, s + splitSize)` ranges, or one
+    * whole-file split when the file is plain gzip (not seekable) or fits
+    * in one split. */
+  def byteRanges(p: String, size: Long, splitSize: Long,
+      codec: String): Seq[SamInputPartition] =
+    if (codec == "gzip" || size <= splitSize)
+      Seq(SamInputPartition(p, 0L, Long.MaxValue, codec))
+    else (0L until size by splitSize).map(s =>
+      SamInputPartition(p, s, math.min(s + splitSize, size), codec))
 
   /** Parse the samtools-style `region` read option — a COMMA-separated
     * list of `"chr1:100-200"` (1-based INCLUSIVE bounds) or `"chr1"`
@@ -161,27 +211,22 @@ object SamDataSource {
       }
     }
 
-  /** One InputPartition per `splitSize` byte range of each file.
-    * Directory paths expand to their (non-hidden) regular files, so
-    * `load(dir)` scans a whole sample directory in parallel — minus the
-    * index sidecars ([[HadoopIO.isSidecar]]) living next to their BAMs
-    * (the 100 TB layout is many `<f>.bam` + `<f>.bam.gai` pairs per
-    * directory; a sidecar is
-    * consulted per-file by the reader, never scanned as data). Listing and
-    * sizing go through the Hadoop FileSystem (driver side), and an
+  /** One InputPartition per byte range of each file ([[byteRanges]] at
+    * the scan's [[batchSplitSize]]). Directory paths expand to their
+    * (non-hidden) regular files, so `load(dir)` scans a whole sample
+    * directory in parallel — minus the index sidecars
+    * ([[HadoopIO.isSidecar]]) living next to their BAMs (the 100 TB layout
+    * is many `<f>.bam` + `<f>.bam.gai` pairs per directory; a sidecar is
+    * consulted per-file by the reader, never scanned as data). An
     * unreadable path fails the query here — it must never degrade into a
     * bogus whole-file split. */
-  def planSplits(paths: Seq[String], splitSize: Long): Array[InputPartition] = {
+  def planSplits(paths: Seq[String],
+      splitSize: Option[Long]): Array[InputPartition] = {
     val conf = HadoopIO.driverConf()
-    paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
-      .flatMap { case (p, size) =>
-      val codec = fileCodec(p, conf)
-      if (codec == "gzip" || size <= splitSize)
-        Seq(SamInputPartition(p, 0L, Long.MaxValue, codec))
-      else (0L until size by splitSize).map(s =>
-        SamInputPartition(p, s, math.min(s + splitSize, size), codec))
-    }.map(p => p: InputPartition).toArray
+    val (files, size) = batchTargets(paths, splitSize, conf)
+    files.flatMap { case (p, len) =>
+      byteRanges(p, len, size, fileCodec(p, conf))
+    }.toArray[InputPartition]
   }
 
   /** Compression sniff for SAM text: "bgzf" (gzip + BC extra subfield —
@@ -221,7 +266,7 @@ class SamTable(properties: Map[String, String]) extends Table with SupportsRead 
       SamDataSource.splitSize(options))
 }
 
-class SamScanBuilder(paths: Seq[String], splitSize: Long) extends ScanBuilder
+class SamScanBuilder(paths: Seq[String], splitSize: Option[Long]) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters {
   private var required: StructType = SamDataSource.schema
@@ -246,7 +291,7 @@ class SamScanBuilder(paths: Seq[String], splitSize: Long) extends ScanBuilder
   override def build(): Scan = new SamScan(paths, splitSize, required, preds)
 }
 
-class SamScan(paths: Seq[String], splitSize: Long, required: StructType,
+class SamScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
     preds: Seq[SamFilters.Pred]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this

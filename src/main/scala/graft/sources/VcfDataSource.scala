@@ -284,7 +284,7 @@ class VcfTable(properties: Map[String, String]) extends Table with SupportsRead 
   }
 }
 
-class VcfScanBuilder(paths: Seq[String], splitSize: Long,
+class VcfScanBuilder(paths: Seq[String], splitSize: Option[Long],
     regionPreds: Seq[VcfFilters.Pred] = Nil,
     regions: Seq[(String, Long, Long)] = Nil)
     extends ScanBuilder
@@ -313,7 +313,7 @@ class VcfScanBuilder(paths: Seq[String], splitSize: Long,
 case class VcfInputPartition(path: String, start: Long, end: Long,
     codec: String, uoffset: Int = -1) extends InputPartition
 
-class VcfScan(paths: Seq[String], splitSize: Long, required: StructType,
+class VcfScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
     preds: Seq[VcfFilters.Pred],
     regions: Seq[(String, Long, Long)] = Nil) extends Scan with Batch {
   override def readSchema(): StructType = required
@@ -328,11 +328,10 @@ class VcfScan(paths: Seq[String], splitSize: Long, required: StructType,
     * by member-line ownership like any mid-file split). */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = HadoopIO.driverConf()
-    paths.flatMap(p => HadoopIO.listScanTargets(p, conf))
-      .filterNot { case (p, _) => HadoopIO.isSidecar(p) }
-      .flatMap { case (p, size) =>
-        VcfScan.planFile(p, size, splitSize, preds, conf, regions)
-      }.map(p => p: InputPartition).toArray
+    val (files, split) = SamDataSource.batchTargets(paths, splitSize, conf)
+    files.flatMap { case (p, size) =>
+      VcfScan.planFile(p, size, split, preds, conf, regions)
+    }.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -350,11 +349,10 @@ class VcfScan(paths: Seq[String], splitSize: Long, required: StructType,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     val fields = required.fieldNames
     val ps = preds
-    val split = splitSize
     val rgs = regions
     new LandingDirMicroBatchStream(paths, splitSize, "vcf",
       () => new VcfReaderFactory(fields, ps, HadoopIO.capture()),
-      planFile = (p, size, conf) =>
+      planFile = (p, size, split, conf) =>
         VcfScan.planFile(p, size, split, ps, conf, rgs)
           .map(x => x: InputPartition))
   }
@@ -372,10 +370,8 @@ object VcfScan {
       regions: Seq[(String, Long, Long)] = Nil): Seq[VcfInputPartition] = {
     val codec = SamDataSource.fileCodec(p, conf)
     def plain(): Seq[VcfInputPartition] =
-      if (codec == "gzip" || size <= splitSize)
-        Seq(VcfInputPartition(p, 0L, Long.MaxValue, codec))
-      else (0L until size by splitSize).map(s =>
-        VcfInputPartition(p, s, math.min(s + splitSize, size), codec))
+      SamDataSource.byteRanges(p, size, splitSize, codec)
+        .map(r => VcfInputPartition(p, r.start, r.end, codec))
     if (codec != "bgzf" || preds.isEmpty) plain()
     else {
       val idx: Option[(Array[String], Long, (Int, Long, Long) => Seq[BaiIndex.Chunk])] =

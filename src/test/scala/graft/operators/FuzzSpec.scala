@@ -407,7 +407,7 @@ class FuzzSpec extends SparkSpec {
       (0 until p.restartAt).foreach(land)
       // drive the stream surface directly (planner + readers, no engine
       // overhead): two batches split at the seeded restart point
-      val ms = new SamScan(Seq(dir), p.split, SamDataSource.schema, Nil)
+      val ms = new SamScan(Seq(dir), Some(p.split.toLong), SamDataSource.schema, Nil)
         .toMicroBatchStream("")
       val o0 = ms.initialOffset()
       val o1 = ms.latestOffset()

@@ -76,6 +76,72 @@ class BamDataSourceSpec extends SparkSpec {
     assert(b.distinct().count() === 3000)
   }
 
+  test("default splits follow the session's parallelism: a >4 MB BAM plans " +
+      "4 partitions on local[4], row-identical in order to one split") {
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val dir = java.nio.file.Files.createTempDirectory("bamsplitrule").toString
+    val big = s"$dir/big.bam"
+    // pseudo-random bases and qualities keep the BGZF payload from
+    // compressing below the 4 MB this case needs
+    def hex(k: Int) = md5(concat(lit(s"$k:"), col("id").cast("string")))
+    val recs = spark.range(0, 48000).select(
+      concat(lit("r"), col("id")).as("readName"),
+      lit(0).as("flag"), lit("chrM").as("referenceName"),
+      (col("id") % 16000 + 1).cast("int").as("start"),
+      lit(60).as("mapQ"), lit("96M").as("cigar"), lit("*").as("rnext"),
+      lit(0).as("pnext"), lit(0).as("tlen"),
+      translate(concat(hex(0), hex(1), hex(2)), "0123456789abcdef",
+        "ACGTACGTACGTACGT").as("sequence"),
+      translate(concat(hex(3), hex(4), hex(5)), "0123456789abcdef",
+        "!+5?I#-7A\"/9C%1;").as("qual"),
+      concat(lit("NM:i:"), col("id") % 7).as("attributes"))
+    BamWriter.write(recs, "@HD\tVN:1.6\n@SQ\tSN:chrM\tLN:16569\n",
+      Seq("chrM" -> 16569), big)
+    val size = new java.io.File(big).length
+    assert(size > (4L << 20), s"fixture is only $size bytes")
+    val auto = spark.read.format("bam").load(big)
+    assert(auto.rdd.getNumPartitions === 4)
+    val one = spark.read.format("bam").option("splitsize", Long.MaxValue)
+      .load(big)
+    assert(one.rdd.getNumPartitions === 1)
+    val cols = Seq("readName", "start", "sequence", "qual", "attributes")
+    assert(auto.select(cols.map(col): _*).collect().toSeq ===
+      one.select(cols.map(col): _*).collect().toSeq)
+    // an explicit splitsize still decides the count
+    val mb = spark.read.format("bam").option("splitsize", 1L << 20).load(big)
+    assert(mb.rdd.getNumPartitions === ((size + (1L << 20) - 1) >> 20).toInt)
+    // inputs of 1 MB or less stay on one partition
+    assert(spark.read.format("bam").load(resource("mito/sample_split.bam"))
+      .rdd.getNumPartitions === 1)
+    // a directory scan sizes its splits from the data files only: 8 MB of
+    // stray sidecars would halve the partition count if they were summed
+    val stray = new Array[Byte](8 << 20)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/calls.vcf.gz.tbi"), stray)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/other.bam.gai"), stray)
+    assert(spark.read.format("bam").load(dir).rdd.getNumPartitions === 4)
+    // ... and from the files that can split: a plain-gzip file is one
+    // split whatever its size, so its 8 MB must not widen the bgzf file's
+    // splits (4 + 1 partitions; summed, it would be 2 + 1). Planning only:
+    // no task reads these random bytes.
+    val mixed = java.nio.file.Files.createTempDirectory("samsplitmix")
+    val rnd = new scala.util.Random(7)
+    def random(n: Int) = { val b = new Array[Byte](n); rnd.nextBytes(b); b }
+    val bgzf = new BgzfOutputStream(
+      java.nio.file.Files.newOutputStream(mixed.resolve("a.sam.gz")))
+    try bgzf.write(random(5 << 20)) finally bgzf.close()
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(mixed.resolve("b.sam.gz")))
+    try gz.write(random(8 << 20)) finally gz.close()
+    assert(spark.read.format("sam").load(mixed.toString)
+      .rdd.getNumPartitions === 5)
+    // the rule itself: 64 MB cap, 1 MB floor
+    val rule = SamDataSource.batchSplitSize _
+    assert(rule(1L << 40) === SamDataSource.DefaultSplitSize)
+    assert(rule(300L) === (1L << 20))
+    assert(SamDataSource.MinSplitSize === (1L << 20))
+    assert(rule(8L << 20) === (2L << 20))
+  }
+
   test("split bam agrees with the sam text fixture it was generated from") {
     val cols = Seq("readName", "flag", "referenceName", "start", "mapQ",
       "cigar", "rnext", "pnext", "tlen", "sequence", "qual",
@@ -180,7 +246,7 @@ class BamDataSourceSpec extends SparkSpec {
     assert(got.getLong(1) === (10 + 20 + 11 + 21).toLong)
     assert(got.getLong(2) === 2L) // one flag-5 (unmapped) record per file
     // append-only contract: a displaced committed-prefix file raises
-    val ms = new LandingDirMicroBatchStream(Seq(dir), 4096, "bam",
+    val ms = new LandingDirMicroBatchStream(Seq(dir), Some(4096L), "bam",
       () => new BamReaderFactory(SamDataSource.schema.fieldNames, Nil,
         HadoopIO.capture()))
     val end = ms.latestOffset()

@@ -361,6 +361,62 @@ class BamWriterSpec extends SparkSpec {
     assert(n === 1)
   }
 
+  test("writer re-encodes every tag the bam source emits: B arrays of all " +
+      "seven subtypes and uint32 values past 2^31 (decode, write, decode)") {
+    val tmp = java.nio.file.Files.createTempDirectory("bamtags").toString
+    val fixture = resource("mito/sample_tags.bam")
+    val first = spark.read.format("bam").load(fixture)
+    val (text, refs) = BamWriter.readHeader(fixture)
+    assert(BamWriter.write(first, text, refs, s"$tmp/tags.bam") === 4)
+    val again = spark.read.format("bam").load(s"$tmp/tags.bam")
+    def attrs(df: org.apache.spark.sql.DataFrame) =
+      df.select("readName", "flag", "attributes").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq
+    assert(attrs(again) === attrs(first))
+    val byRead = attrs(first).map { case (n, f, a) => (n, f) -> a }.toMap
+    assert(byRead(("t1", 99)).contains("ML:B:C,0,128,255"))
+    assert(byRead(("t2", 0)).contains("XJ:B:I,0,4294967295"))
+    assert(byRead(("t3", 0)).contains("XL:i:4294967295"))
+    assert(again.select(recordCols: _*).except(first.select(recordCols: _*)).isEmpty)
+  }
+
+  test("writer bytes equal the independent fixture encoder's on B arrays " +
+      "and uint32 tags (inflated payload)") {
+    val tmp = java.nio.file.Files.createTempDirectory("bamtagbytes").toString
+    val fixture = resource("mito/sample_tags.bam")
+    val (text, refs) = BamWriter.readHeader(fixture)
+    BamWriter.write(Sam.read(spark, resource("mito/sample_tags.sam")).coalesce(1),
+      text, refs, s"$tmp/tags.bam")
+    def inflated(path: String): Array[Byte] = {
+      val in = new java.util.zip.GZIPInputStream(
+        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)))
+      try in.readAllBytes() finally in.close()
+    }
+    val want = inflated(fixture)
+    val got = inflated(s"$tmp/tags.bam")
+    assert(got.length === want.length)
+    assert(java.util.Arrays.equals(got, want),
+      s"first difference at byte ${got.indices.find(i => got(i) != want(i))}")
+  }
+
+  test("writer refuses out-of-range integer and array tag values") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("bamtagrange").toString
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    for ((attr, i) <- Seq("XL:i:4294967296", "XL:i:-2147483649", "XB:B:C,256",
+        "XS:B:s,32768")
+        .zipWithIndex) {
+      val rec = Seq(("r1", 0, "chrM", 1, 60, "4M", "*", 0, 0, "ACGT", "*", attr))
+        .toDF("readName", "flag", "referenceName", "start", "mapQ", "cigar",
+          "rnext", "pnext", "tlen", "sequence", "qual", "attributes")
+      val e = intercept[Exception](BamWriter.write(rec, "@HD\tVN:1.6\n",
+        Seq("chrM" -> 16569), s"$tmp/bad$i.bam"))
+      assert(msgs(e).exists(m => m.contains(attr) || m.contains("out of range")),
+        e.toString)
+    }
+  }
+
   test("writer refuses records with unsupported tag types") {
     import spark.implicits._
     val bad = Seq(("r1", 0, "chrM", 1, 60, "4M", "*", 0, 0, "ACGT", "*", "XX:Q:weird"))

@@ -89,7 +89,7 @@ class StreamPruneProbeSpec extends SparkSpec {
     // partition accounting via the stream's own planner (the x85 gate
     // discipline): region-pred stream vs unfiltered stream
     def planned(preds: Seq[VcfFilters.Pred]): Int = {
-      val ms = new VcfScan(Seq(dir), 4093, VcfDataSource.schema, preds)
+      val ms = new VcfScan(Seq(dir), Some(4093L), VcfDataSource.schema, preds)
         .toMicroBatchStream("")
       ms.planInputPartitions(ms.initialOffset(), ms.latestOffset()).length
     }
@@ -125,7 +125,7 @@ class StreamPruneProbeSpec extends SparkSpec {
       SamFilters.IntCmp("start", ">=", 100000L),
       SamFilters.IntCmp("start", "<=", 180000L))
     def planned(ps: Seq[SamFilters.Pred]): Int = {
-      val ms = new BamScan(Seq(dir), 4096, SamDataSource.schema, ps)
+      val ms = new BamScan(Seq(dir), Some(4096L), SamDataSource.schema, ps)
         .toMicroBatchStream("")
       ms.planInputPartitions(ms.initialOffset(), ms.latestOffset()).length
     }

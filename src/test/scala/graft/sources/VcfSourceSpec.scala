@@ -223,7 +223,7 @@ class VcfSourceSpec extends SparkSpec {
         .toDF("name", "comment", "sequence", "quality"),
       f"$dir/part-$i%05d.fastq.gz")
     land(0); land(1)
-    val ms = new FastqMicroBatchStream(Seq(dir), 4096,
+    val ms = new FastqMicroBatchStream(Seq(dir), Some(4096L),
       FastqDataSource.schema.fieldNames)
     val end = ms.latestOffset()
     assert(end.json().contains("\"n\":2"))
