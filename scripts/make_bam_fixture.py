@@ -61,6 +61,8 @@ def record_bin(pos0, flag, cigar_pairs, csi_depth):
 def encode_record(fields, refs, csi_depth=5):
     qname, flag, rname, pos, mapq, cigar, rnext, pnext, tlen, seq, qual = fields[:11]
     tags = fields[11:]
+    if seq == "*":
+        seq = ""  # no sequence stored: l_seq 0, no seq or qual bytes
     ref_id = refs.index(rname) if rname in refs else -1
     if rnext == "*":
         next_ref_id = -1

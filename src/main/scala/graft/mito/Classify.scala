@@ -4,12 +4,15 @@ import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.{GBTClassifier, RandomForestClassificationModel, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.RFormula
-import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.{FlatForest, ForestScoreExpr}
+
 /** Training / scoring / filtering (reference `MTClassifierModel.scala` +
-  * `MTClassify.scala`), on stock MLlib.
+  * `MTClassify.scala`). Training and the saved-model format are stock
+  * MLlib; scoring walks the trained forest compiled to flat arrays
+  * ([[score]]).
   *
   * MT_LABEL = 0.0 (genuine mtDNA), NUMT label = 1.0
   * (`MTClassifierModel.scala:36-37`). Formula = the shipped 6-feature
@@ -19,8 +22,10 @@ import org.apache.spark.sql.functions._
 object Classify {
 
   val MtLabel = 0.0
-  val Formula =
-    "label ~ MTEditDist + LD + NTEditDist + NTScore + MTNumAlignments + NTNumAlignments"
+  /** The formula's terms, in the model's feature order. */
+  val Features: Seq[String] = Seq("MTEditDist", "LD", "NTEditDist", "NTScore",
+    "MTNumAlignments", "NTNumAlignments")
+  val Formula: String = "label ~ " + Features.mkString(" + ")
 
   def rformula: RFormula = new RFormula()
     .setFormula(Formula).setFeaturesCol("features").setLabelCol("label")
@@ -35,12 +40,13 @@ object Classify {
       .setNumTrees(numTrees).setSeed(seed)
       .fit(prepared)
     // strip the training summary: it pins the TRAINING SparkSession into
-    // the model object, and scoring ships the model inside task closures
+    // the model object. [[score]] ships only the flattened forest, but a
+    // caller's own `model.transform` ships the model inside task closures
     // (ProbabilisticClassificationModel's UDF captures it) — a session
     // whose state is ever non-serializable (e.g. a registered Observation
-    // lives in its ObservationManager) would fail EVERY later scoring
-    // job with "Task not serializable". copy() transfers params + trees,
-    // not the summary, and shrinks the shipped closure besides.
+    // lives in its ObservationManager) would fail every such job with
+    // "Task not serializable". copy() transfers params + trees, not the
+    // summary, and shrinks the shipped closure besides.
     m.copy(org.apache.spark.ml.param.ParamMap.empty)
       .setParent(m.parent).asInstanceOf[RandomForestClassificationModel]
   }
@@ -54,14 +60,36 @@ object Classify {
       .fit(prepared)
   }
 
-  /** Score + MaxProb extraction (reference `getMaxProb`,
-    * `MTClassifierModel.scala:95-109`) — columnar `array_max ∘
-    * vector_to_array` instead of the reference's typed map (X5/T3), so it
-    * stays in the plan. */
+  /** Scores every row of `df`: `df`'s columns plus `prediction` (the
+    * model's class, a double) and `MaxProb` (the largest class
+    * probability) — the reference's `getMaxProb`,
+    * `MTClassifierModel.scala:95-109`.
+    *
+    * The model is compiled once per call into a [[FlatForest]]: per node
+    * a split feature, threshold and two children, per leaf its
+    * class-probability row. Each row is scored by one walk of every tree
+    * over the [[Features]] columns cast to double; tasks ship those
+    * arrays, never the MLlib model. The walk, the sums and the divisions
+    * are MLlib's own (`predictRaw`, `normalizeToProbabilitiesInPlace`,
+    * `argmax`, in the same order), so `prediction` and `MaxProb` equal
+    * `rformula` + `model.transform` + `array_max(vector_to_array(
+    * probability))` bit for bit; MLlib's `features`, `rawPrediction` and
+    * `probability` columns are not produced.
+    *
+    * Refused, with a message: a model over other than the six formula
+    * features, one with `thresholds` set, or one with a categorical
+    * split. A null or NaN feature fails the query, as the MLlib path's
+    * `VectorAssembler` does. */
   def score(model: RandomForestClassificationModel, df: DataFrame): DataFrame = {
-    val prepared = rformula.fit(df).transform(df)
-    model.transform(prepared)
-      .withColumn("MaxProb", array_max(vector_to_array(col("probability"))))
+    require(model.numFeatures == Features.length,
+      s"Classify.score: the model reads ${model.numFeatures} features; the " +
+        s"formula has ${Features.length} (${Features.mkString(", ")})")
+    val scored = "__forest_score"
+    df.withColumn(scored,
+        ForestScoreExpr.forestScore(FlatForest(model), Features.map(col)))
+      .withColumn("prediction", col(scored).getField("prediction"))
+      .withColumn("MaxProb", col(scored).getField("MaxProb"))
+      .drop(scored)
   }
 
   /** Post-score filters (reference `MTClassify.scala:170-178`): confidence

@@ -559,7 +559,7 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
       sb.toString
     }
     val packed = bytes((lSeq + 1) / 2) // must consume regardless of pruning
-    val seq = if (!needSeq) "" else {
+    val seq = if (!needSeq) "" else if (lSeq == 0) "*" else {
       val sb = new StringBuilder(lSeq)
       var i = 0
       while (i < lSeq) {

@@ -331,7 +331,8 @@ object BamWriter {
     val rnext = r.getString(6)
     val pnext = r.getInt(7)
     val tlen = r.getInt(8)
-    val seq = r.getString(9)
+    // SEQ `*` (no sequence stored) is l_seq 0, with no seq or qual bytes
+    val seq = r.getString(9) match { case "*" => ""; case s => s }
     val qual = r.getString(10)
     val attrs = r.getString(11)
     val nextRefId = rnext match {

@@ -18,23 +18,7 @@ class PipelineSpec extends SparkSpec {
     numtFile = resource("mito/numts.tsv"),
     prob = 0.5)
 
-  /** Synthetic labeled training frame: mtDNA-like rows (low NT quality,
-    * label 0) vs NUMT-like rows (high NT quality, label 1), separable so a
-    * 4-tree forest nails it. */
-  private def trainingFrame = {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = (1 to 200).map { i =>
-      val isMt = i % 2 == 0
-      val label = if (isMt) 0.0 else 1.0
-      val ntEdit = if (isMt) 8 + rnd.nextInt(4) else rnd.nextInt(2)
-      val ntScore = if (isMt) 0 else 50 + rnd.nextInt(30)
-      val ld = if (isMt) 20000 + rnd.nextInt(9999) else rnd.nextInt(100)
-      (s"t$i", 1.0, 2L, 3L + rnd.nextInt(3), ld, 1.0, 2L, ntEdit.toLong, ntScore.toLong, label)
-    }
-    rows.toDF("Read", "MTMapQ", "MTNumAlignments", "MTEditDist", "LD",
-      "NTMapQ", "NTNumAlignments", "NTEditDist", "NTScore", "label")
-  }
+  private def trainingFrame = PipelineSpec.trainingFrame(spark)
 
   test("train → score → evaluate: separable data scores ~1.0") {
     val model = Classify.trainRF(trainingFrame, numTrees = 8)
@@ -150,5 +134,27 @@ class PipelineSpec extends SparkSpec {
       runs.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
     assert(concurrent.zip(cfgs).map { case (n, c) => (n, records(c.out)) } === sequential)
+  }
+}
+
+object PipelineSpec {
+
+  /** Synthetic labeled training frame: mtDNA-like rows (low NT quality,
+    * label 0) vs NUMT-like rows (high NT quality, label 1), separable so a
+    * 4-tree forest nails it. */
+  def trainingFrame(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val rows = (1 to 200).map { i =>
+      val isMt = i % 2 == 0
+      val label = if (isMt) 0.0 else 1.0
+      val ntEdit = if (isMt) 8 + rnd.nextInt(4) else rnd.nextInt(2)
+      val ntScore = if (isMt) 0 else 50 + rnd.nextInt(30)
+      val ld = if (isMt) 20000 + rnd.nextInt(9999) else rnd.nextInt(100)
+      (s"t$i", 1.0, 2L, 3L + rnd.nextInt(3), ld, 1.0, 2L, ntEdit.toLong, ntScore.toLong, label)
+    }
+    rows.toDF("Read", "MTMapQ", "MTNumAlignments", "MTEditDist", "LD",
+      "NTMapQ", "NTNumAlignments", "NTEditDist", "NTScore", "label")
   }
 }

@@ -52,7 +52,11 @@ class BamWriterSpec extends SparkSpec {
   }
 
   /** read name → the `bin` field of every record, decoded from the file. */
-  private def readBins(path: String): Map[String, Int] = {
+  private def readBins(path: String): Map[String, Int] =
+    readRecords(path).map { case (n, bb) => n -> (bb.getShort(10) & 0xffff) }
+
+  /** read name → the record body (after `block_size`), little-endian. */
+  private def readRecords(path: String): Map[String, java.nio.ByteBuffer] = {
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
       new java.util.zip.GZIPInputStream(
         java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)))))
@@ -61,14 +65,14 @@ class BamWriterSpec extends SparkSpec {
       in.skipNBytes(4) // magic
       in.skipNBytes(i32().toLong) // header text
       (1 to i32()).foreach { _ => in.skipNBytes(i32().toLong); i32() }
-      val out = Map.newBuilder[String, Int]
+      val out = Map.newBuilder[String, java.nio.ByteBuffer]
       var size = 0
       while ({ size = try i32() catch { case _: java.io.EOFException => -1 }; size >= 0 }) {
         val body = new Array[Byte](size)
         in.readFully(body)
         val bb = java.nio.ByteBuffer.wrap(body).order(java.nio.ByteOrder.LITTLE_ENDIAN)
         val nameLen = body(8) & 0xff
-        out += new String(body, 32, nameLen - 1, "US-ASCII") -> (bb.getShort(10) & 0xffff)
+        out += new String(body, 32, nameLen - 1, "US-ASCII") -> bb
       }
       out.result()
     } finally in.close()
@@ -397,6 +401,31 @@ class BamWriterSpec extends SparkSpec {
     assert(got.length === want.length)
     assert(java.util.Arrays.equals(got, want),
       s"first difference at byte ${got.indices.find(i => got(i) != want(i))}")
+  }
+
+  test("SEQ `*` is l_seq 0 with no seq or qual bytes, and reads back as " +
+      "`*`/`*` (writer bytes equal the fixture encoder's)") {
+    val tmp = java.nio.file.Files.createTempDirectory("bamnoseq").toString
+    val fixture = resource("mito/sample_noseq.bam")
+    val (text, refs) = BamWriter.readHeader(fixture)
+    val src = Sam.read(spark, resource("mito/sample_noseq.sam"))
+    assert(BamWriter.write(src.coalesce(1), text, refs, s"$tmp/noseq.bam") === 3)
+    for (path <- Seq(fixture, s"$tmp/noseq.bam")) {
+      val lSeq = readRecords(path).map { case (n, bb) => n -> bb.getInt(16) }
+      assert(lSeq === Map("n1" -> 0, "n2" -> 4, "n3" -> 0), path)
+      val back = spark.read.format("bam").load(path)
+        .select("readName", "sequence", "qual").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+      assert(back === Seq(("n1", "*", "*"), ("n2", "ACGT", "IIII"), ("n3", "*", "*")), path)
+      val both = spark.read.format("bam").load(path).select(recordCols: _*)
+      assert(both.except(src.select(recordCols: _*)).isEmpty, path)
+    }
+    def inflated(path: String): Array[Byte] = {
+      val in = new java.util.zip.GZIPInputStream(
+        java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)))
+      try in.readAllBytes() finally in.close()
+    }
+    assert(java.util.Arrays.equals(inflated(s"$tmp/noseq.bam"), inflated(fixture)))
   }
 
   test("writer refuses out-of-range integer and array tag values") {
