@@ -160,20 +160,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (collect_list/typed aggs) falls back to
-      // SORT-based aggregation after 128 keys by default — a silent 2x on
-      // every collect_list aggregation; per-key state here is tiny
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      // default 100-entry codegen class cache thrashes across a 50+-query
-      // session: every pass re-runs janino compilation and executes cold
-      // classes (static conf — must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val gates = gatesMode
     if (gates) {

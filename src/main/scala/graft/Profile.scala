@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling main: time one named query N times.
   * Usage: runMain graft.Profile <queryName> [sfDir] [reps] */
 object Profile {
@@ -10,20 +8,7 @@ object Profile {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // ObjectHashAggregate (collect_list/typed aggs) falls back to
-      // SORT-based aggregation after 128 keys by default — a silent 2x on
-      // every collect_list aggregation; per-key state here is tiny
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      // default 100-entry codegen class cache thrashes across a 50+-query
-      // session: every pass re-runs janino compilation and executes cold
-      // classes (static conf — must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("graft-profile", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // ad-hoc A/B lever: PROFILE_CONF="k=v;k=v" sets session confs (e.g.
     // spark.graft.scanFanout.target=0 to measure a query without fan-out)

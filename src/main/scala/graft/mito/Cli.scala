@@ -26,28 +26,10 @@ object Cli {
     val threads = opts.getOrElse("threads", "4").toInt
     require(threads > 0, s"--threads must be positive, got $threads")
 
-    val spark = session("graft-mito-classify", threads)
+    val spark = graft.Sessions.local("graft-mito-classify", threads)
     try println(classify(spark, opts))
     finally spark.stop()
   }
-
-  /** The local session every mito CLI runs in. */
-  private[mito] def session(appName: String, threads: Int): SparkSession =
-    SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      // ObjectHashAggregate (collect_list/typed aggs) falls back to
-      // SORT-based aggregation after 128 keys by default — a silent 2x on
-      // every collect_list aggregation; per-key state here is tiny
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      // default 100-entry codegen class cache thrashes across a 50+-query
-      // session: every pass re-runs janino compilation and executes cold
-      // classes (static conf — must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
 
   /** Classifies one sample and returns the line [[main]] prints. The count
     * is the one the sink produced while writing, so nothing runs twice. */
@@ -78,7 +60,7 @@ object FastqToUbamCli {
       opts.getOrElse(k, sys.error(s"missing required option --$k"))
     val threads = opts.getOrElse("threads", "4").toInt
     require(threads > 0, s"--threads must be positive, got $threads")
-    val spark = Cli.session("graft-fastq-to-ubam", threads)
+    val spark = graft.Sessions.local("graft-fastq-to-ubam", threads)
     try {
       val rg = opts.getOrElse("rg", "sample1")
       val n = MitoPipeline.fastqToUbam(spark, req("r1"), req("r2"),

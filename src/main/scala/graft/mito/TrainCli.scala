@@ -19,7 +19,7 @@ object TrainCli {
       opts.getOrElse(k, sys.error(s"missing required option --$k"))
     val threads = opts.getOrElse("threads", "4").toInt
 
-    val spark = Cli.session("graft-mito-train", threads)
+    val spark = graft.Sessions.local("graft-mito-train", threads)
     try {
       def cfg(prefix: String) = MitoPipeline.Config(
         prefix = prefix, out = "", ldFile = req("ld"), numtFile = req("numt"))

@@ -26,9 +26,9 @@ import org.apache.hadoop.conf.Configuration
   * pair a voffset packs, so positioning by chunk start needs no guessing.
   *
   * Pruning model: chunks for a region are a SUPERSET of the records whose
-  * span overlaps it (bin granularity), and the reader widens them further
-  * to whole BGZF members ([[memberRuns]]) to fit the member-granularity
-  * run protocol it shares with the `.gai` path. Every widened-in record
+  * span overlaps it (bin granularity), and the planner widens them further
+  * to whole BGZF members ([[memberRuns]]), the member-granularity runs it
+  * plans partitions from. Every widened-in record
   * is still filtered by the per-record pushed predicate evaluation, so
   * the index only ever SKIPS work, never changes results (BaiIndexSpec
   * pins indexed ≡ unindexed on both single- and multi-split scans).
@@ -80,13 +80,9 @@ object BaiIndex {
     } finally spark.foreach(_.stop())
   }
 
-  /** A usable sidecar exists: present AND at least as new as the BAM
-    * (same staleness rule as BamIndex — a stale index silently misreads). */
-  def exists(bam: String, conf: Configuration = new Configuration()): Boolean = {
-    val side = sidecarPath(bam)
-    HadoopIO.exists(side, conf) && HadoopIO.exists(bam, conf) &&
-      HadoopIO.modTime(side, conf) >= HadoopIO.modTime(bam, conf)
-  }
+  /** A usable sidecar exists ([[HadoopIO.freshSidecar]]). */
+  def exists(bam: String, conf: Configuration = new Configuration()): Boolean =
+    HadoopIO.freshSidecar(bam, sidecarPath(bam), conf)
 
   // ---- binning arithmetic (SAM spec §5.3, 0-based half-open [beg, end))
 
@@ -524,7 +520,7 @@ object BaiIndex {
     Some((refIds.head, beg, math.max(beg, end)))
   }
 
-  /** Chunks → the reader's member-granularity run protocol
+  /** Chunks → member-granularity runs, planned as partitions
     * (startMemberOffset, startUoffset, stopMemberOffset): decode from the
     * chunk's first record, stop at the first member past its records. A
     * chunk end with a nonzero intra-member offset means records extend

@@ -31,6 +31,10 @@ import scala.jdk.CollectionConverters._
   *    sample-sized one on every core: without a `splitsize` option the
   *    split size follows the session's parallelism
   *    ([[SamDataSource.batchSplitSize]]).
+  *  - Sidecar indexes (`.gai`, `.bai`, `.csi`) are used at PLANNING only
+  *    ([[BamScan.streamPlanFile]]): they prune partitions and, where they
+  *    know it, give a partition the exact offset of its first record.
+  *    Readers open no index.
   *  - The payload is `BAM\1`, SAM-text header, reference dictionary, then
   *    length-prefixed alignment records (little-endian) with 4-bit packed
   *    sequence ("=ACMGRSVTWYHKDBN") and typed optional tags.
@@ -134,14 +138,11 @@ class BamTable(properties: Map[String, String]) extends Table with SupportsRead 
       case many => Seq(SamFilters.InRegions(many))
     }
     new BamScanBuilder(SamDataSource.resolvePaths(options),
-      SamDataSource.splitSize(options),
-      Option(options.get("baiplan")).getOrElse("driver"),
-      regionPreds, regions)
+      SamDataSource.splitSize(options), regionPreds, regions)
   }
 }
 
 class BamScanBuilder(paths: Seq[String], splitSize: Option[Long],
-    baiPlanMode: String = "driver",
     regionPreds: Seq[SamFilters.Pred] = Nil,
     regions: Seq[(String, Long, Long)] = Nil) extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
@@ -164,42 +165,42 @@ class BamScanBuilder(paths: Seq[String], splitSize: Option[Long],
   override def pushedPredicates(): Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
     pushed
   override def build(): Scan =
-    new BamScan(paths, splitSize, required, regionPreds ++ preds,
-      baiPlanMode, regions)
+    new BamScan(paths, splitSize, required, regionPreds ++ preds, regions)
 }
 
 object BamScan {
-  /** Driver-planned `.bai` run lists above this size fall back to
-    * executor-side planning: a sorted file's region runs merge to a
-    * handful of entries, but an adversarial chunk layout could make the
-    * list rival the data — per-task closure bytes must stay bounded. */
-  val MaxShippedRuns = 65536
-
-  /** Per-file planner (r15): with a region-constraining predicate set
-    * (pushed batch predicates or the `region` read option) and a
-    * `.bai`/`.csi` sidecar, a file plans only the region's member
-    * runs, chopped at `splitSize` — default byte-range splits otherwise
-    * (incl. the `.gai`-only case, whose per-member stats the reader
-    * consults split-locally). Shared by the BATCH scan and the
-    * landing-dir stream: before r15 the batch scan planned every split
-    * and pruned reader-side (tasks scheduled, opened the index, and
-    * exited) — at estate scale a region query over a 100 TB BAM
-    * directory scheduled millions of no-op tasks. The reader
-    * re-filters per record, so pruning only ever skips bytes no region
-    * record can live in. */
+  /** The per-file planner, shared by the BATCH scan and the landing-dir
+    * stream, and the one place a BAM sidecar is resolved: a fresh `.gai`
+    * first, then `.bai`, then `.csi` ([[HadoopIO.freshSidecar]]). Every
+    * partition says where its first record starts, so readers open no
+    * index:
+    *  - `.gai`, with or without predicates: each byte-range cut plans from
+    *    the per-member stats, and every partition starts at the exact
+    *    first-record offset of its first owned member (no guessing).
+    *    Unpredicated, a cut stays one partition; with predicates, it
+    *    becomes its runs of members that may match
+    *    ([[BamIndex.selectRuns]]), so pruned members schedule no task.
+    *  - `.bai`/`.csi` and a region-constraining predicate set (pushed
+    *    batch predicates or the `region` read option): the region's
+    *    member runs, chopped at `splitSize`
+    *    ([[SamDataSource.runParts]]); run heads start exactly, chopped
+    *    tails sync.
+    *  - otherwise: byte-range splits whose readers sync.
+    * Pruning at planning keeps a region query over a 100 TB BAM directory
+    * from scheduling millions of no-op tasks. The reader re-filters per
+    * record, so pruning only ever skips bytes no matching record can live
+    * in. */
   private[sources] def streamPlanFile(preds: Seq[SamFilters.Pred],
       regions: Seq[(String, Long, Long)] = Nil)(
       p: String, size: Long, splitSize: Long,
       conf: org.apache.hadoop.conf.Configuration): Seq[InputPartition] = {
-    def plain(): Seq[InputPartition] =
-      SamDataSource.byteRanges(p, size, splitSize,
-        SamDataSource.fileCodec(p, conf))
-    if (preds.isEmpty) return plain()
-    // index resolution: (refNames, maxPos, chunks lookup), or None when
-    // only `.gai` exists (its per-member stats are reader-side)
+    val cuts = SamDataSource.byteRanges(p, size, splitSize,
+      SamDataSource.fileCodec(p, conf))
+    if (BamIndex.exists(p, conf)) return gaiParts(p, size, cuts, preds, conf)
+    if (preds.isEmpty) return cuts
+    // (refNames, maxPos, chunks lookup) of a binned index, if any
     val idx: Option[(Array[String], Int, (Int, Int, Int) => Seq[BaiIndex.Chunk])] =
-      if (BamIndex.exists(p, conf)) None // .gai wins reader-side
-      else if (BaiIndex.exists(p, conf)) {
+      if (BaiIndex.exists(p, conf)) {
         val bai = BaiIndex.read(p, conf)
         Some((BamHeader.refNames(p, conf), BaiIndex.MaxPos,
           (r, b, e) => BaiIndex.chunks(bai, r, b, e)))
@@ -210,14 +211,9 @@ object BamScan {
           (r, b, e) => CsiIndex.chunks(csi, r, b, e)))
       } else None
     def runParts(rs: Seq[(Long, Int, Long)]): Seq[InputPartition] =
-      rs.flatMap { case (m0, _, m1) =>
-        val cuts = (m0 until m1 by math.max(splitSize, 1L)) :+ m1
-        cuts.sliding(2).map { case Seq(a, b) =>
-          SamInputPartition(p, a, b, "bgzf")
-        }.toSeq
-      }
+      SamDataSource.runParts(p, rs, splitSize, "bgzf")
     idx match {
-      case None => plain()
+      case None => cuts
       case Some((names, maxPos, chunksOf)) =>
         if (regions.size >= 2) {
           // multi-region: union of the windows' chunks (memberRuns
@@ -241,26 +237,45 @@ object BamScan {
           // in the index's coordinate bins)
           Nil
         } else BaiIndex.region(preds, names, maxPos) match {
-          case None => plain()
+          case None => cuts
           case Some((refId, beg, end)) =>
             runParts(BaiIndex.memberRuns(chunksOf(refId, beg, end)))
         }
     }
   }
+
+  /** A `.gai`-indexed file's partitions: per byte-range cut, its first
+    * member owning a record (unpredicated) or its runs of members the
+    * predicates may match, each starting at that member's exact
+    * first-record offset. A cut that owns no such member plans nothing. */
+  private def gaiParts(p: String, size: Long, cuts: Seq[SamInputPartition],
+      preds: Seq[SamFilters.Pred],
+      conf: org.apache.hadoop.conf.Configuration): Seq[InputPartition] = {
+    val stats = BamIndex.read(p, conf)
+    val names =
+      if (preds.isEmpty) Array.empty[String] else BamHeader.refNames(p, conf)
+    cuts.flatMap { c =>
+      val runs = BamIndex.selectRuns(stats, preds, names, c.start,
+        math.min(c.end, size))
+      if (preds.isEmpty)
+        runs.headOption.map { case (m, u, _) => c.copy(start = m, uoffset = u) }
+      else runs.map { case (m, u, stop) =>
+        c.copy(start = m, end = math.min(stop, c.end), uoffset = u)
+      }
+    }
+  }
 }
 
 class BamScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
-    preds: Seq[SamFilters.Pred], baiPlanMode: String = "driver",
-    regions: Seq[(String, Long, Long)] = Nil)
+    preds: Seq[SamFilters.Pred], regions: Seq[(String, Long, Long)] = Nil)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"bam PushedFilters: [${preds.mkString(", ")}]"
-  /** Byte-range splits per file; with region-constraining preds and a
-    * `.bai`/`.csi` sidecar, only the region's member runs (r15, the VCF
-    * source's r13 design), so pruned members never even schedule a task
-    * ([[BamScan.streamPlanFile]]). */
+  /** Each file's partitions from [[BamScan.streamPlanFile]]: byte-range
+    * splits, or index-planned ones that start exactly and skip pruned
+    * members. */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = HadoopIO.driverConf()
     val (files, split) = SamDataSource.batchTargets(paths, splitSize, conf)
@@ -268,73 +283,41 @@ class BamScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
       BamScan.streamPlanFile(preds, regions)(p, size, split, conf)
     }.toArray
   }
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val confBox = HadoopIO.capture()
-    // Plan `.bai` region runs ONCE on the driver and ship them in the
-    // factory: at cluster scale the alternative is every task re-reading
-    // and re-planning the whole sidecar (an O(tasks × index-size) read
-    // storm against one file). The graft `.gai` path keeps per-task reads
-    // (its per-member stats are consulted split-locally); `.bai` chunks
-    // for a sorted region merge to a few runs, so shipping is ~free.
-    val baiPlans: Map[String, Seq[(Long, Int, Long)]] =
-      if (preds.isEmpty || baiPlanMode != "driver") Map.empty
-      else paths.flatMap(p => HadoopIO.listScanTargets(p, confBox.conf))
-        .map(_._1)
-        .filterNot(HadoopIO.isSidecar)
-        .flatMap { p =>
-          val runs: Option[Seq[(Long, Int, Long)]] =
-            if (BamIndex.exists(p, confBox.conf)) None // .gai wins reader-side
-            else if (BaiIndex.exists(p, confBox.conf))
-              BaiIndex.region(preds, BamHeader.refNames(p, confBox.conf))
-                .map { case (refId, beg, end) =>
-                  BaiIndex.memberRuns(BaiIndex.chunks(
-                    BaiIndex.read(p, confBox.conf), refId, beg, end))
-                }
-            else if (CsiIndex.exists(p, confBox.conf)) {
-              val csi = CsiIndex.read(p, confBox.conf)
-              BaiIndex.region(preds, BamHeader.refNames(p, confBox.conf),
-                  CsiIndex.maxPos(csi.minShift, csi.depth))
-                .map { case (refId, beg, end) =>
-                  BaiIndex.memberRuns(CsiIndex.chunks(csi, refId, beg, end))
-                }
-            } else None
-          runs.filter(_.length <= BamScan.MaxShippedRuns).map(p -> _)
-        }.toMap
-    new BamReaderFactory(required.fieldNames, preds, confBox, baiPlans)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new BamReaderFactory(required.fieldNames, preds, HadoopIO.capture())
   /** Landing-dir micro-batch streaming (r14): per-sample BAMs land in a
     * directory (the other instrument/pipeline drop format next to
-    * `fastq`'s); the shared prefix-offset model plans each batch's
-    * byte-range splits, and predicates stay per-record reader-side.
-    * r15: a `region`-option predicate set additionally PRUNES each
-    * landed file's splits at batch planning through its `.bai`/`.csi`
-    * sidecar ([[BamScan.streamPlanFile]]) — a region-filtered stream no
-    * longer schedules tasks over members the index excludes. */
+    * `fastq`'s); the shared prefix-offset model plans each batch, and
+    * each landed file goes through the batch scan's planner
+    * ([[BamScan.streamPlanFile]]), so a `region`-option stream prunes at
+    * batch planning through the file's sidecar and schedules no tasks
+    * over members the index excludes. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     val fields = required.fieldNames
     val ps = preds
     new LandingDirMicroBatchStream(paths, splitSize, "bam",
       () => new BamReaderFactory(fields, ps, HadoopIO.capture()),
-      planFile = if (ps.isEmpty) null
-        else BamScan.streamPlanFile(ps, regions))
+      BamScan.streamPlanFile(ps, regions))
   }
 }
 
 class BamReaderFactory(fields: Array[String], preds: Seq[SamFilters.Pred],
-    conf: HadoopIO.ConfBox,
-    baiPlans: Map[String, Seq[(Long, Int, Long)]] = Map.empty)
-    extends PartitionReaderFactory {
+    conf: HadoopIO.ConfBox) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SamInputPartition]
-    new BamPartitionReader(p.path, p.start, p.end, fields, preds, conf,
-      baiPlans.get(p.path))
+    new BamPartitionReader(p.path, p.start, p.end, p.uoffset, fields, preds,
+      conf)
   }
 }
 
+/** Decodes the records that start in members before `rangeEnd`. With
+  * `uoffset ≥ 0` the first record starts `uoffset` bytes into the member
+  * at `rangeStart` (the planner read it from an index); otherwise the
+  * split syncs from its first member ([[BamSync.openRange]]). */
 class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
-    fields: Array[String], preds: Seq[SamFilters.Pred], conf: HadoopIO.ConfBox,
-    shippedBaiRuns: Option[Seq[(Long, Int, Long)]] = None)
+    uoffset: Int, fields: Array[String], preds: Seq[SamFilters.Pred],
+    conf: HadoopIO.ConfBox)
     extends PartitionReader[InternalRow] {
 
   private val needSeq = fields.contains("sequence") || fields.contains("line")
@@ -342,118 +325,36 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
   private val needAttrs = fields.contains("attributes") || fields.contains("line")
 
   private val ch = new SeekableFile(path, conf.conf)
-  private val fileLen = ch.size
 
   // --- header + reference dictionary (always parsed from offset 0 —
-  // KB-sized, one member inflate; every split needs the ref dictionary)
-  private var bgzf: BgzfInputStream = new BgzfInputStream(ch, 0L)
-  private var in = new DataInputStream(bgzf)
-
-  private val refNames: Array[String] = BamHeader.parse(bgzf, path).names
+  // KB-sized, one member inflate; every split needs the ref dictionary),
+  // then the stream at this split's first record, or null when it owns
+  // none. The split holding the header end re-opens the header member
+  // there: one ≤64 KB inflate per file.
+  private val (refNames, bgzf) = {
+    val header = new BgzfInputStream(ch, 0L)
+    try {
+      val names = BamHeader.parse(header, path).names
+      val first =
+        if (uoffset >= 0) {
+          val s = new BgzfInputStream(ch, rangeStart)
+          HadoopIO.skipFully(s, uoffset.toLong,
+            s"$path first record at $rangeStart")
+          s
+        } else {
+          val (m, u) = header.virtualPos
+          val hdr = BamHeader.Located(ch.size, names.length, m, u)
+          BamSync.openRange(ch,
+            BamSync.firstMember(ch, rangeStart, hdr.fileLen), rangeEnd, hdr,
+            path).orNull
+        }
+      (names, first)
+    } finally header.close()
+  }
+  private val in = if (bgzf == null) null else new DataInputStream(bgzf)
 
   /** True once this split's range is exhausted (or it owns no records). */
-  private var done = false
-  /** Decode stops at this member offset and jumps to the next index run
-    * (Long.MaxValue when no index / final run — ownership bounds it). */
-  private var runEnd: Long = Long.MaxValue
-  private var runs: Iterator[(Long, Int, Long)] = Iterator.empty
-
-  private def advanceRun(): Boolean =
-    if (!runs.hasNext) false
-    else {
-      val (off, u, end) = runs.next()
-      bgzf.close()
-      if (u >= 0) {
-        bgzf = new BgzfInputStream(ch, off)
-        HadoopIO.skipFully(bgzf, u.toLong, s"$path index run at $off")
-        in = new DataInputStream(bgzf)
-        runEnd = end
-        true
-      } else {
-        // u = -1: a run clipped at this split's boundary — the exact
-        // first-record offset in the clipped-to member isn't in the index,
-        // so re-synchronize by validated guessing (the same machinery the
-        // un-indexed path uses)
-        BamSync.syncToRecord(ch, off, math.min(end, rangeEnd),
-            refNames.length, path) match {
-          case Some(s) =>
-            bgzf = s; in = new DataInputStream(bgzf); runEnd = end; true
-          case None => advanceRun() // no record in this run's clip → next run
-        }
-      }
-    }
-
-  // Position the stream at this split's first record (see Bgzf's split
-  // protocol). With a `.gai` sidecar (BamIndex) the index supplies exact
-  // first-record offsets per member — no guessing — and members that
-  // cannot satisfy the pushed referenceName/start predicates are skipped
-  // without decompression. With only a samtools `.bai` (BaiIndex) and a
-  // region-shaped predicate, the binned index supplies chunk runs instead
-  // (member-widened; runs clipped at this split's boundary guess-sync).
-  // Without either: the split owning the member where records begin
-  // continues straight from the header; later splits guess-sync at their
-  // first member boundary.
-  locally {
-    if (BamIndex.exists(path, conf.conf)) {
-      val stats = BamIndex.read(path, conf.conf)
-      val firstMember =
-        if (rangeStart == 0) 0L
-        else stats.find(_.offset >= rangeStart).map(_.offset).getOrElse(fileLen)
-      runs = BamIndex.selectRuns(stats, preds, refNames,
-        firstMember, math.min(rangeEnd, fileLen)).iterator
-      if (!advanceRun()) done = true
-    } else {
-      // driver-planned runs arrive in the factory (the scale path: one
-      // sidecar read per QUERY, not per task); the executor-side re-plan
-      // remains for oversized run lists and direct reader construction —
-      // `.bai` preferred, `.csi` (long-contig binning) after it
-      val planned: Option[Seq[(Long, Int, Long)]] = shippedBaiRuns.orElse {
-        if (BaiIndex.exists(path, conf.conf))
-          BaiIndex.region(preds, refNames).map { case (refId, beg, end) =>
-            BaiIndex.memberRuns(BaiIndex.chunks(
-              BaiIndex.read(path, conf.conf), refId, beg, end))
-          }
-        else if (CsiIndex.exists(path, conf.conf)) {
-          val csi = CsiIndex.read(path, conf.conf)
-          BaiIndex.region(preds, refNames,
-              CsiIndex.maxPos(csi.minShift, csi.depth))
-            .map { case (refId, beg, end) =>
-              BaiIndex.memberRuns(CsiIndex.chunks(csi, refId, beg, end))
-            }
-        } else None
-      }
-      planned match {
-        case Some(global) =>
-          val firstMember =
-            if (rangeStart == 0) 0L
-            else Bgzf.nextMemberStart(ch, rangeStart, fileLen)
-          val until = math.min(rangeEnd, fileLen)
-          runs = global.iterator
-            .filter { case (off, _, rend) => rend > firstMember && off < until }
-            .map { case (off, u, rend) =>
-              if (off >= firstMember) (off, u, rend) else (firstMember, -1, rend)
-            }
-          if (!advanceRun()) done = true
-        case None =>
-          val (hdrMember, _) = bgzf.virtualPos // records begin exactly here
-          val firstMember =
-            if (rangeStart == 0) 0L
-            else Bgzf.nextMemberStart(ch, rangeStart, fileLen)
-          if (firstMember <= hdrMember) {
-            if (hdrMember >= rangeEnd) done = true // range ends inside the header
-            // else: keep the header stream — it is already at the first record
-          } else if (firstMember >= fileLen || firstMember >= rangeEnd) {
-            done = true
-          } else {
-            bgzf.close()
-            syncToRecord(firstMember) match {
-              case Some(s) => bgzf = s; in = new DataInputStream(bgzf)
-              case None    => done = true
-            }
-          }
-      }
-    }
-  }
+  private var done = bgzf == null
 
   // --- little-endian primitives over the decompressed stream
   private def u8(): Int = {
@@ -481,32 +382,22 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
       // rangeEnd (memberStart is a member boundary, so `>= rangeEnd` is
       // exactly `>= first boundary at-or-after rangeEnd`)
       if (bgzf.memberStart >= rangeEnd) { done = true; current = null; return false }
-      // end of the current index run: jump over pruned members
-      if (bgzf.memberStart >= runEnd) {
-        if (!advanceRun()) { done = true; current = null; return false }
-      } else {
-        // clean end-of-stream is ONLY an EOF before the record's first
-        // byte; an EOF anywhere inside a record is a truncated file and
-        // must fail loudly, never read as a shorter-but-valid BAM
-        val first = in.read()
-        if (first < 0) { done = true; current = null; return false }
-        val r =
-          try decodeRecord(first) // null: pushed filter rejected the record
-          catch {
-            case e: EOFException => throw new java.io.IOException(
-              s"truncated BAM record mid-decode in $path " +
-                s"(member at ${bgzf.memberStart})", e)
-          }
-        if (r != null) { current = r; return true }
-      }
+      // clean end-of-stream is ONLY an EOF before the record's first
+      // byte; an EOF anywhere inside a record is a truncated file and
+      // must fail loudly, never read as a shorter-but-valid BAM
+      val first = in.read()
+      if (first < 0) { done = true; current = null; return false }
+      val r =
+        try decodeRecord(first) // null: pushed filter rejected the record
+        catch {
+          case e: EOFException => throw new java.io.IOException(
+            s"truncated BAM record mid-decode in $path " +
+              s"(member at ${bgzf.memberStart})", e)
+        }
+      if (r != null) { current = r; return true }
     }
     false
   }
-
-  /** Find the first record boundary at-or-after member `from` — shared
-    * validated-guessing machinery in [[BamSync]]. */
-  private def syncToRecord(from: Long): Option[BgzfInputStream] =
-    BamSync.syncToRecord(ch, from, rangeEnd, refNames.length, path)
 
   /** Decodes one record, or returns null if a pushed filter rejects it —
     * rejected records skip straight over the name/cigar/sequence/tag bytes
@@ -663,5 +554,5 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = { bgzf.close(); ch.close() }
+  override def close(): Unit = { if (bgzf != null) bgzf.close(); ch.close() }
 }

@@ -9,9 +9,10 @@ import org.apache.hadoop.conf.Configuration
   * per BGZF member recording where its first record starts and the
   * coordinate range of the records starting in it.
   *
-  * Two wins for the reader:
-  *  - positioning: a split seeks to its first member's `firstRecUoffset`
-  *    directly — no record-boundary guessing;
+  * Two wins for the scan, both taken at planning
+  * ([[BamScan.streamPlanFile]]):
+  *  - positioning: each partition starts at its first member's
+  *    `firstRecUoffset` — no record-boundary guessing;
   *  - pruning: with a pushed `referenceName`/`start` filter and a
   *    coordinate-sorted BAM, members whose [minRef..maxRef] ×
   *    [minPos..maxPos] cannot satisfy the predicate are skipped WITHOUT
@@ -49,14 +50,10 @@ object BamIndex {
     } finally spark.foreach(_.stop())
   }
 
-  /** A usable sidecar exists: present AND at least as new as the BAM —
-    * a stale index (file rewritten after indexing) would silently misread,
-    * so it is ignored and the reader falls back to boundary guessing. */
-  def exists(bam: String, conf: Configuration = new Configuration()): Boolean = {
-    val side = sidecarPath(bam)
-    HadoopIO.exists(side, conf) && HadoopIO.exists(bam, conf) &&
-      HadoopIO.modTime(side, conf) >= HadoopIO.modTime(bam, conf)
-  }
+  /** A usable sidecar exists ([[HadoopIO.freshSidecar]]); a stale one is
+    * ignored and the scan falls back to boundary guessing. */
+  def exists(bam: String, conf: Configuration = new Configuration()): Boolean =
+    HadoopIO.freshSidecar(bam, sidecarPath(bam), conf)
 
   /** Per member, the intra-member offset of the first record starting
     * there (-1 if none) and the min/max (refId, pos) over records starting
@@ -217,13 +214,14 @@ object BamIndex {
 
   /** Runs of consecutive keepable members within [from, until):
     * (runStartOffset, firstRecUoffset of the run's first member,
-    * endOffset = offset of the first non-kept member after the run —
-    * where the reader stops decoding and jumps to the next run;
-    * Long.MaxValue when the run reaches the range end, the reader's
-    * ownership check bounds it there). */
+    * endOffset = offset of the first non-kept member after the run, or
+    * Long.MaxValue when the run reaches the range end). Each run is one
+    * partition ending at min(endOffset, range end). */
   def selectRuns(stats: Array[MemberStat], preds: Seq[SamFilters.Pred],
       refNames: Array[String], from: Long, until: Long): Seq[(Long, Int, Long)] = {
-    val inRange = stats.filter(m => m.offset >= from && m.offset < until)
+    val offsets = stats.view.map(_.offset) // file order: binary-searchable
+    val inRange = stats.slice(offsets.search(from).insertionPoint,
+      offsets.search(until).insertionPoint)
     val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
     var open = -1 // index into runs of the currently-open run
     inRange.foreach { m =>

@@ -5,9 +5,9 @@ package graft.sources
   * /root/reference/src/main/scala/MitoScape/BamReader.scala:172-174):
   * inflate a validation window at a member boundary, try every offset as a
   * record start, and accept when a chain of records decodes with all the
-  * spec's invariants holding. Shared by the `bam` DSv2 reader (un-indexed
-  * splits) and the split walk ([[openRange]] + [[walkRecords]]) that every
-  * BAM sidecar builder runs.
+  * spec's invariants holding. The `bam` DSv2 reader and every BAM sidecar
+  * builder position a split the same way ([[openRange]]); the builders
+  * then walk it with [[walkRecords]].
   */
 object BamSync {
 

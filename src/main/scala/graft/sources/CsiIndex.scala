@@ -25,7 +25,7 @@ import org.apache.hadoop.conf.Configuration
   * IDENTICAL to BAI's six-level scheme — CsiIndexSpec pins that a
   * default-parameter CSI query plans the same member runs as the BAI for
   * the same file. Region queries reuse [[BaiIndex.region]] (predicate →
-  * region) and [[BaiIndex.memberRuns]] (chunks → reader run protocol);
+  * region) and [[BaiIndex.memberRuns]] (chunks → planned member runs);
   * widened-in records are re-filtered per record, so like the other
   * indexes a CSI only ever SKIPS work.
   */
@@ -40,11 +40,8 @@ object CsiIndex {
 
   def sidecarPath(bam: String): String = bam + ".csi"
 
-  def exists(bam: String, conf: Configuration = new Configuration()): Boolean = {
-    val side = sidecarPath(bam)
-    HadoopIO.exists(side, conf) && HadoopIO.exists(bam, conf) &&
-      HadoopIO.modTime(side, conf) >= HadoopIO.modTime(bam, conf)
-  }
+  def exists(bam: String, conf: Configuration = new Configuration()): Boolean =
+    HadoopIO.freshSidecar(bam, sidecarPath(bam), conf)
 
   /** Max coordinate addressable by a (minShift, depth) scheme, clamped to
     * the int32 positions BAM records can hold. */

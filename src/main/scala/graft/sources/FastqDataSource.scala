@@ -150,12 +150,12 @@ class FastqScan(paths: Seq[String], splitSize: Option[Long], required: StructTyp
   * maps to the same files, so checkpoint recovery re-reads exactly the
   * uncommitted tail (the exactly-once half the sink completes).
   *
-  * `planFile` (r15, VERDICT r14 #4) lets a format supply its own
-  * per-file split planner, given the stream's split size — the hook
-  * that makes a pushed region predicate prune each landed file AT BATCH
-  * PLANNING through its sidecar index, the way the batch scans do,
-  * instead of scheduling tasks over every byte of every drop. Null
-  * means the default byte-range splits. Replays stay value-idempotent:
+  * `planFile` (r15, VERDICT r14 #4) is the format's per-file split
+  * planner, given the stream's split size — the hook that makes a
+  * pushed region predicate prune each landed file AT BATCH PLANNING
+  * through its sidecar index, the way the batch scans do, instead of
+  * scheduling tasks over every byte of every drop. It defaults to plain
+  * byte-range splits. Replays stay value-idempotent:
   * an index only ever SKIPS members no region record can live in, and
   * the reader re-filters per record, so a sidecar landing between a
   * batch's first plan and a recovery replay changes task count, never
@@ -168,7 +168,9 @@ class FastqScan(paths: Seq[String], splitSize: Option[Long], required: StructTyp
 class LandingDirMicroBatchStream(paths: Seq[String], splitSize: Option[Long],
     what: String, factory: () => PartitionReaderFactory,
     planFile: (String, Long, Long, org.apache.hadoop.conf.Configuration)
-      => Seq[InputPartition] = null)
+      => Seq[InputPartition] = (p, size, split, conf) =>
+        SamDataSource.byteRanges(p, size, split,
+          SamDataSource.fileCodec(p, conf)))
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -223,9 +225,7 @@ class LandingDirMicroBatchStream(paths: Seq[String], splitSize: Option[Long],
         s"the batch end offset recorded '${e0.last}'")
     val conf = HadoopIO.driverConf()
     ls.slice(s0.n, e0.n).flatMap { case (p, size) =>
-      if (planFile != null) planFile(p, size, split, conf)
-      else SamDataSource.byteRanges(p, size, split,
-        SamDataSource.fileCodec(p, conf))
+      planFile(p, size, split, conf)
     }.toArray
   }
 

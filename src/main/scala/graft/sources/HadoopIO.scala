@@ -82,10 +82,13 @@ object HadoopIO {
     fs(p, conf).exists(p)
   }
 
-  def modTime(pathStr: String, conf: Configuration): Long = {
-    val p = new Path(pathStr)
-    fs(p, conf).getFileStatus(p).getModificationTime
-  }
+  /** A sidecar index is usable when it is present and at least as new as
+    * its data file: a stale one (data rewritten after indexing) would
+    * silently misread, so every index reader ignores it. */
+  def freshSidecar(data: String, side: String, conf: Configuration): Boolean =
+    lenAndMtime(side, conf).exists { case (_, sideTime) =>
+      lenAndMtime(data, conf).exists { case (_, dataTime) => sideTime >= dataTime }
+    }
 
   /** (length, mtime) of `path`, or None when absent — the freshness pair
     * staging caches compare against their source. */

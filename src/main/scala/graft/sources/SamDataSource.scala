@@ -126,6 +126,19 @@ object SamDataSource {
     else (0L until size by splitSize).map(s =>
       SamInputPartition(p, s, math.min(s + splitSize, size), codec))
 
+  /** Index member runs (startMember, startUoffset, stopMember) → one
+    * file's partitions, each run chopped at `splitSize`. Only a run's head
+    * knows its exact first-record offset; the chopped tails sync. Shared
+    * by the bam and vcf planners. */
+  def runParts(p: String, runs: Seq[(Long, Int, Long)], splitSize: Long,
+      codec: String): Seq[SamInputPartition] =
+    runs.flatMap { case (m0, u, m1) =>
+      val cuts = (m0 until m1 by math.max(splitSize, 1L)) :+ m1
+      cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
+        SamInputPartition(p, a, b, codec, if (i == 0) u else -1)
+      }.toSeq
+    }
+
   /** Parse the samtools-style `region` read option — a COMMA-separated
     * list of `"chr1:100-200"` (1-based INCLUSIVE bounds) or `"chr1"`
     * (the whole contig) elements. Each element yields
@@ -312,12 +325,15 @@ class SamScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
   }
 }
 
-/** A byte range [start, end) of one file (shared by the sam and bam
-  * sources; end = Long.MaxValue means "whole file"). `codec` is the
-  * sam-text compression sniffed at planning time ("plain"/"bgzf"/"gzip");
-  * the bam source ignores it (BAM is always BGZF). */
+/** A byte range [start, end) of one file (shared by the sam, bam, vcf
+  * and fastq sources; end = Long.MaxValue means "whole file"). `codec` is
+  * the text compression sniffed at planning time ("plain"/"bgzf"/"gzip");
+  * the bam source ignores it (BAM is always BGZF). `uoffset ≥ 0` means
+  * the first record starts `uoffset` bytes into the BGZF member at
+  * `start` (an index told the planner); -1 means the reader syncs from
+  * the first member at or after `start`. */
 case class SamInputPartition(path: String, start: Long, end: Long,
-    codec: String = "plain") extends InputPartition
+    codec: String = "plain", uoffset: Int = -1) extends InputPartition
 
 class SamReaderFactory(fields: Array[String], preds: Seq[SamFilters.Pred],
     conf: HadoopIO.ConfBox) extends PartitionReaderFactory {

@@ -80,11 +80,8 @@ object Tabix {
 
   def sidecarPath(vcf: String): String = vcf + ".tbi"
 
-  def exists(vcf: String, conf: Configuration = new Configuration()): Boolean = {
-    val side = sidecarPath(vcf)
-    HadoopIO.exists(side, conf) && HadoopIO.exists(vcf, conf) &&
-      HadoopIO.modTime(side, conf) >= HadoopIO.modTime(vcf, conf)
-  }
+  def exists(vcf: String, conf: Configuration = new Configuration()): Boolean =
+    HadoopIO.freshSidecar(vcf, sidecarPath(vcf), conf)
 
   final case class Tbi(names: Array[String], bai: BaiIndex.Bai)
 

@@ -306,13 +306,6 @@ class VcfScanBuilder(paths: Seq[String], splitSize: Option[Long],
     new VcfScan(paths, splitSize, required, regionPreds ++ preds, regions)
 }
 
-/** Partition: byte range of one file; `uoffset ≥ 0` marks an index-run
-  * head whose first record starts exactly `uoffset` bytes into the
-  * member at `start` (no sync needed); -1 means sync by the line
-  * protocol. */
-case class VcfInputPartition(path: String, start: Long, end: Long,
-    codec: String, uoffset: Int = -1) extends InputPartition
-
 class VcfScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
     preds: Seq[VcfFilters.Pred],
     regions: Seq[(String, Long, Long)] = Nil) extends Scan with Batch {
@@ -353,8 +346,7 @@ class VcfScan(paths: Seq[String], splitSize: Option[Long], required: StructType,
     new LandingDirMicroBatchStream(paths, splitSize, "vcf",
       () => new VcfReaderFactory(fields, ps, HadoopIO.capture()),
       planFile = (p, size, split, conf) =>
-        VcfScan.planFile(p, size, split, ps, conf, rgs)
-          .map(x => x: InputPartition))
+        VcfScan.planFile(p, size, split, ps, conf, rgs))
   }
 }
 
@@ -367,11 +359,10 @@ object VcfScan {
   private[sources] def planFile(p: String, size: Long, splitSize: Long,
       preds: Seq[VcfFilters.Pred],
       conf: org.apache.hadoop.conf.Configuration,
-      regions: Seq[(String, Long, Long)] = Nil): Seq[VcfInputPartition] = {
+      regions: Seq[(String, Long, Long)] = Nil): Seq[SamInputPartition] = {
     val codec = SamDataSource.fileCodec(p, conf)
-    def plain(): Seq[VcfInputPartition] =
+    def plain(): Seq[SamInputPartition] =
       SamDataSource.byteRanges(p, size, splitSize, codec)
-        .map(r => VcfInputPartition(p, r.start, r.end, codec))
     if (codec != "bgzf" || preds.isEmpty) plain()
     else {
       val idx: Option[(Array[String], Long, (Int, Long, Long) => Seq[BaiIndex.Chunk])] =
@@ -387,16 +378,8 @@ object VcfScan {
                 CsiIndex.chunks(csi, r, b.toInt, e.toInt))
           }
         } else None
-      def runParts(runs: Seq[(Long, Int, Long)]): Seq[VcfInputPartition] =
-        runs.flatMap { case (m0, u, m1) =>
-          // chop a long run at splitSize boundaries; only the
-          // head knows its exact record offset
-          val cuts = (m0 until m1 by math.max(splitSize, 1L)) :+ m1
-          cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
-            VcfInputPartition(p, a, b, codec,
-              if (i == 0) u else -1)
-          }.toSeq
-        }
+      def runParts(runs: Seq[(Long, Int, Long)]): Seq[SamInputPartition] =
+        SamDataSource.runParts(p, runs, splitSize, codec)
       idx match {
         case None => plain()
         case Some((names, maxPos, chunksOf)) =>
@@ -432,7 +415,7 @@ object VcfScan {
 class VcfReaderFactory(fields: Array[String], preds: Seq[VcfFilters.Pred],
     conf: HadoopIO.ConfBox) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[VcfInputPartition]
+    val p = partition.asInstanceOf[SamInputPartition]
     new VcfPartitionReader(p.path, p.start, p.end, p.codec, p.uoffset,
       fields, preds, conf)
   }

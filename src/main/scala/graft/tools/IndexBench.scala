@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the distributed index builders (r14): synthesize
@@ -21,12 +20,7 @@ object IndexBench {
   def main(args: Array[String]): Unit = {
     val nSites = args.headOption.map(_.toInt).getOrElse(8000000)
     val threads = args.drop(1).headOption.map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-index-bench")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-index-bench", threads)
     spark.sparkContext.setLogLevel("WARN")
     try {
       val out = s"${graft.sources.HadoopIO.scratchDir(spark)}/graft_idxbench/sites.vcf.gz"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` for every declared query (or the named
@@ -9,8 +8,9 @@ import scala.util.control.NonFatal
   *
   * Usage: runMain graft.tools.PlanDump <outDir> [nameSubstring ...]
   *
-  * Uses the same session shape as Bench so the captured plans match the
-  * benched ones (shuffle partitions from SPARK_GRAFT_CPUS, AQE state etc.).
+  * Uses the same session as Bench ([[graft.Sessions.local]]) so the
+  * captured plans match the benched ones (shuffle partitions from
+  * SPARK_GRAFT_CPUS, AQE state etc.).
   * Planning only — nothing is executed, so the sweep is cheap enough to
   * run over all ~230 engine rows.
   */
@@ -20,14 +20,7 @@ object PlanDump {
     val filters = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-plandump", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = SparkEntryNames.names(filters)

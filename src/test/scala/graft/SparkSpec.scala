@@ -40,21 +40,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      // ObjectHashAggregate (collect_list/typed aggs) falls back to
-      // SORT-based aggregation after 128 keys by default — a silent 2x on
-      // every collect_list aggregation; per-key state here is tiny
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 1 << 20)
-      // default 100-entry codegen class cache thrashes across a 50+-query
-      // session: every pass re-runs janino compilation and executes cold
-      // classes (static conf — must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", 10000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("graft-tests", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -96,21 +96,6 @@ class BaiIndexSpec extends SparkSpec {
       }
   }
 
-  test("executor-side bai planning (baiplan=executor) matches driver-planned") {
-    val bam = baiIndexed("mito/sample_sorted.bam")
-    val pred = col("referenceName") === "chr1" && col("start") >= 50000
-    for (split <- Seq(16384, 4096)) {
-      val driverPlanned = spark.read.format("bam").option("splitsize", split)
-        .load(bam).where(pred).select("readName", "start")
-      val executorPlanned = spark.read.format("bam").option("splitsize", split)
-        .option("baiplan", "executor")
-        .load(bam).where(pred).select("readName", "start")
-      assert(driverPlanned.except(executorPlanned).isEmpty &&
-        executorPlanned.except(driverPlanned).isEmpty, s"splitsize=$split")
-      assert(driverPlanned.count() === executorPlanned.count())
-    }
-  }
-
   test("region runs span a minority of the file for a one-ref query") {
     val bam = baiIndexed("mito/sample_sorted.bam")
     val bai = BaiIndex.read(bam)
@@ -153,8 +138,7 @@ class BaiIndexSpec extends SparkSpec {
 
   test("property: 25 seeded random regions all match the brute-force filter") {
     val bam = baiIndexed("mito/sample_sorted.bam")
-    val full = spark.read.format("bam").option("baiplan", "executor")
-      .load(bam) // executor mode never consults runs for UNPUSHED side below
+    val full = spark.read.format("bam").load(bam)
       .select("readName", "start", "referenceName").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
     val rnd = new scala.util.Random(42)

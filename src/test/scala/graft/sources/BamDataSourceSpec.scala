@@ -197,10 +197,26 @@ class BamDataSourceSpec extends SparkSpec {
       .select("readName").collect()
     assert(hits.length === nPerFile)
     assert(hits.forall(_.getString(0).startsWith("f1_r")))
-    // ...and the other files' indexes prove they contribute ZERO runs —
-    // their members are skipped without decompression
+    // ...pruned at PLANNING: only file 1's members become partitions, so
+    // the predicated scan plans fewer of them than the unpredicated one
     val preds = Seq(SamFilters.IntCmp("start", ">=", nPerFile + 1),
       SamFilters.IntCmp("start", "<=", 2 * nPerFile))
+    def planned(ps: Seq[SamFilters.Pred]): Seq[SamInputPartition] =
+      new BamScan(Seq(dir), Some(8192L), SamDataSource.schema, ps)
+        .planInputPartitions().toSeq.map(_.asInstanceOf[SamInputPartition])
+    val all = planned(Nil)
+    val pruned = planned(preds)
+    assert(all.length === expectParts)
+    assert(pruned.nonEmpty && pruned.length < all.length,
+      s"pruned scan planned ${pruned.length} of ${all.length} partitions")
+    assert(pruned.forall(_.path.endsWith("sample_1.bam")))
+    assert(df.where(col("start") >= nPerFile + 1 &&
+      col("start") <= 2 * nPerFile).rdd.getNumPartitions === pruned.length)
+    // every partition of a .gai-indexed file starts at an exact record
+    // offset: no reader guesses
+    assert((all ++ pruned).forall(_.uoffset >= 0))
+    // ...and the other files' indexes prove they contribute ZERO runs —
+    // their members are skipped without decompression
     for (f <- Seq(0, 2)) {
       val stats = BamIndex.read(s"$dir/sample_$f.bam", conf)
       val runs = BamIndex.selectRuns(stats, preds, Array("chrM"),
