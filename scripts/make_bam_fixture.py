@@ -93,15 +93,17 @@ def encode_record(fields, refs, csi_depth=5):
     for t in tags:
         tag, typ, val = t.split(":", 2)
         if typ == "i":
-            # SAM text has one integer type; BAM picks a width. Values in
-            # int32 range stay 'i'; uint32 values past it need 'I'.
+            # SAM text has one integer type; BAM stores the smallest type
+            # that holds the value (htslib sam_parse1): signed for text
+            # starting with '-', unsigned otherwise.
             v = int(val)
-            if -(1 << 31) <= v < (1 << 31):
-                tag_bytes += tag.encode() + b"i" + struct.pack("<i", v)
-            elif v < (1 << 32):
-                tag_bytes += tag.encode() + b"I" + struct.pack("<I", v)
-            else:
+            if not -(1 << 31) <= v < (1 << 32):
                 raise ValueError(f"integer tag out of range: {t}")
+            if val.startswith("-"):
+                code = "c" if v >= -(1 << 7) else "s" if v >= -(1 << 15) else "i"
+            else:
+                code = "C" if v < (1 << 8) else "S" if v < (1 << 16) else "I"
+            tag_bytes += tag.encode() + code.encode() + struct.pack("<" + ARRAY_FORMATS[code], v)
         elif typ == "B":
             # numeric array (spec 4.2.4): subtype, int32 count, values
             sub, _, rest = val.partition(",")

@@ -6,6 +6,7 @@ import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.RFormula
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 import graft.functions.{FlatForest, ForestScoreExpr}
 
@@ -84,12 +85,17 @@ object Classify {
     require(model.numFeatures == Features.length,
       s"Classify.score: the model reads ${model.numFeatures} features; the " +
         s"formula has ${Features.length} (${Features.mkString(", ")})")
+    // two selects, not a Dataset step per column: each step re-runs the
+    // analyzer over the whole feature plan. One select would hold two
+    // copies of the nondeterministic walk, so the struct is split in a
+    // second projection.
     val scored = "__forest_score"
-    df.withColumn(scored,
-        ForestScoreExpr.forestScore(FlatForest(model), Features.map(col)))
-      .withColumn("prediction", col(scored).getField("prediction"))
-      .withColumn("MaxProb", col(scored).getField("MaxProb"))
-      .drop(scored)
+    val in = bridge.analyzed(df).output.map(bridge.toColumn)
+    df.select(in :+
+        ForestScoreExpr.forestScore(FlatForest(model), Features.map(col)).as(scored): _*)
+      .select(in ++ Seq(
+        col(scored).getField("prediction").as("prediction"),
+        col(scored).getField("MaxProb").as("MaxProb")): _*)
   }
 
   /** Post-score filters (reference `MTClassify.scala:170-178`): confidence
@@ -101,10 +107,18 @@ object Classify {
       .select(col("Read"))
 
   /** Output pass (reference `MTClassify.scala:181-193`): left-semi the
-    * alignment records against the predicted-MT keys on readName (J2). */
-  def filterAlignments(alignments: DataFrame, keys: DataFrame): DataFrame =
-    alignments.join(keys,
-      alignments("readName") === keys("Read"), "left_semi")
+    * alignment records against the predicted-MT keys on readName (J2).
+    *
+    * The keys are broadcast explicitly, whatever
+    * `spark.sql.autoBroadcastJoinThreshold` says (also at `-1`), so each
+    * partition of `alignments` is probed in place: the output keeps the
+    * input's partitioning and record order (a coordinate-sorted `_MT`
+    * stays sorted), and the alignments are never shuffled by read name.
+    * The keys are one short string per kept read. */
+  def filterAlignments(alignments: DataFrame, keys: DataFrame): DataFrame = {
+    val k = broadcast(keys)
+    alignments.join(k, alignments("readName") === k("Read"), "left_semi")
+  }
 
   /** Holdout metric (reference `testRFModel` accuracy,
     * `MTClassifierModel.scala:187-222`; `testGBModel` evaluated

@@ -1,6 +1,7 @@
 package graft.mito
 
 import java.io.{ObjectInputStream, ObjectOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,19 +17,19 @@ import graft.sources.HadoopIO
   * entries dropped (`LD.scala:26,47-49`).
   *
   * The table is a dimension (the reference's has 88,237 rows, under 2 MB),
-  * so it is read on the driver with no Spark job, built into one
-  * canonical-pair [[Index]] and broadcast once per run, as the reference
-  * loads it into a driver map and probes it per read (`LD.scala:40-51`,
-  * `BamReader.scala:198-203`). [[score]] is the one scoring path: a read's
-  * variant list summed with `combinations(2)` semantics
-  * (`BamReader.scala:147-153`). Each DISTINCT pair-multiset counts once: a
-  * variant reported by both mates collapses, and a self-pair {v,v} appears
-  * (once) iff v occurs at least twice.
+  * so it is read on the driver with no Spark job, built into one interned
+  * [[Index]] ([[loadIndex]]: the file's rows go straight into the builder)
+  * and broadcast once per run, as the reference loads it into a driver map
+  * and probes it per read (`LD.scala:40-51`, `BamReader.scala:198-203`).
+  * [[score]] is the one scoring path: a read's variant list summed with
+  * `combinations(2)` semantics (`BamReader.scala:147-153`). Each DISTINCT
+  * pair-multiset counts once: a variant reported by both mates collapses,
+  * and a self-pair {v,v} appears (once) iff v occurs at least twice.
   *
   * Duplicate and reversed rows follow the reference's map: within one
   * orientation the last row wins, and (b, a) is probed only when (a, b) is
   * absent. Variant lists arrive sorted, so every probe is (lo, hi) and the
-  * index keeps, per canonical pair, the (lo, hi) row when the table has
+  * index keeps, per unordered pair, the (lo, hi) row when the table has
   * one and the (hi, lo) row otherwise. [[scorePairs]] over [[toMap]] is
   * the map-based reference the specs compare the index against.
   */
@@ -38,19 +39,40 @@ object Ld {
     * loads the LD dim exactly once, not N times. */
   val loadCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The LD reader: headerless TSV → ((Variant1, Variant2), R_q) in file
-    * order, zero R_q dropped. As with Spark's permissive CSV reader, extra
-    * fields are ignored and a row with no parsable R is dropped. */
-  def read(path: String): Vector[((String, String), Int)] = {
+  /** The one LD row parser: hands each row of the headerless TSV at
+    * `path` to `f` as (Variant1, Variant2, R_q), in file order, zero R_q
+    * dropped. As with Spark's permissive CSV reader, extra fields are
+    * ignored and a row with no parsable R is dropped. */
+  private def parse(path: String)(f: (String, String, Int) => Unit): Unit = {
     loadCount.incrementAndGet()
-    HadoopIO.readLines(path, HadoopIO.driverConf()).flatMap { line =>
-      val f = line.split("\t", -1)
-      val rq =
-        if (f.length < 3) 0
-        else try (f(2).toDouble * 100000).toInt
-        catch { case _: NumberFormatException => 0 }
-      if (rq == 0) None else Some((f(0), f(1)) -> rq)
+    HadoopIO.foreachLine(path, HadoopIO.driverConf()) { line =>
+      val t1 = line.indexOf('\t')
+      val t2 = if (t1 < 0) -1 else line.indexOf('\t', t1 + 1)
+      if (t2 >= 0) {
+        val t3 = line.indexOf('\t', t2 + 1)
+        val rq =
+          try (line.substring(t2 + 1, if (t3 < 0) line.length else t3)
+            .toDouble * 100000).toInt
+          catch { case _: NumberFormatException => 0 }
+        if (rq != 0) f(line.substring(0, t1), line.substring(t1 + 1, t2), rq)
+      }
     }
+  }
+
+  /** The LD rows: ((Variant1, Variant2), R_q) in file order, by the
+    * [[parse]] rules. */
+  def read(path: String): Vector[((String, String), Int)] = {
+    val b = Vector.newBuilder[((String, String), Int)]
+    parse(path)((v1, v2, r) => b += ((v1, v2) -> r))
+    b.result()
+  }
+
+  /** The [[Index]] of the LD file at `path`, with no row collection in
+    * between. */
+  def loadIndex(path: String): Index = {
+    val b = new Builder
+    parse(path)(b.add)
+    b.result()
   }
 
   /** [[read]] as a local DataFrame (Variant1, Variant2, R_q). */
@@ -62,55 +84,165 @@ object Ld {
   def toMap(ld: DataFrame): Map[(String, String), Int] =
     ld.collect().map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
 
-  /** Canonical-pair index over LD rows given in file order (or a map). */
+  /** The [[Index]] of LD rows given in file order (or a map). */
   def index(rows: Iterable[((String, String), Int)]): Index = {
-    val t = new java.util.HashMap[String, Integer]()
-    // reversed rows first, so a row in canonical orientation overwrites
-    rows.foreach { case ((a, b), r) => if (a.compareTo(b) > 0) t.put(key(b, a), r) }
-    rows.foreach { case ((a, b), r) => if (a.compareTo(b) <= 0) t.put(key(a, b), r) }
-    new Index(t)
+    val b = new Builder
+    rows.foreach { case ((v1, v2), r) => b.add(v1, v2, r) }
+    b.result()
   }
 
-  private def key(lo: String, hi: String): String = lo + "\t" + hi
+  /** Interns each variant to an int id as rows arrive, then builds the
+    * pair table in two passes: reversed rows (Variant1 > Variant2) first,
+    * so a row in canonical orientation overwrites them, then canonical
+    * rows; within each pass the last row wins. */
+  private final class Builder {
+    private val ids = new java.util.HashMap[String, Integer]()
+    private val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    // one entry per row: the two ids, R_q, and the row's orientation
+    private val a = scala.collection.mutable.ArrayBuilder.make[Int]
+    private val b = scala.collection.mutable.ArrayBuilder.make[Int]
+    private val r = scala.collection.mutable.ArrayBuilder.make[Int]
+    private val reversed = scala.collection.mutable.ArrayBuilder.make[Boolean]
 
-  /** R_q per unordered variant pair. Serialized as a flat (key, R_q)
-    * sequence; the hash table is rebuilt on deserialization. */
+    private def intern(v: String): Int = {
+      val id = ids.get(v)
+      if (id != null) id.intValue
+      else { ids.put(v, names.length); names += v; names.length - 1 }
+    }
+
+    def add(v1: String, v2: String, rq: Int): Unit = {
+      a += intern(v1); b += intern(v2); r += rq
+      reversed += v1.compareTo(v2) > 0
+    }
+
+    def result(): Index = {
+      val (ra, rb, rr, rev) = (a.result(), b.result(), r.result(), reversed.result())
+      val t = new PairTable(ra.length)
+      for (pass <- Seq(true, false); i <- ra.indices if rev(i) == pass)
+        t.put(pairKey(ra(i), rb(i)), rr(i))
+      new Index(names.toArray, ids, t)
+    }
+  }
+
+  /** The unordered pair {x, y} of variant ids as one long. */
+  private def pairKey(x: Int, y: Int): Long =
+    if (x <= y) (x.toLong << 32) | y else (y.toLong << 32) | x
+
+  /** Open-addressing long → int table (linear probing, load ≤ 1/2). Keys
+    * are [[pairKey]]s of non-negative ids, so -1 marks an empty slot. */
+  private[Ld] final class PairTable(expected: Int) {
+    private val mask = Integer.highestOneBit(math.max(2 * expected, 4) - 1) * 2 - 1
+    private val keys = Array.fill(mask + 1)(-1L)
+    private val vals = new Array[Int](mask + 1)
+    private var n = 0
+
+    private def slot(k: Long): Int = {
+      var h = k * 0x9E3779B97F4A7C15L
+      h ^= h >>> 32
+      var i = h.toInt & mask
+      while (keys(i) != -1L && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+
+    def put(k: Long, v: Int): Unit = {
+      val i = slot(k)
+      if (keys(i) == -1L) { keys(i) = k; n += 1 }
+      vals(i) = v
+    }
+
+    /** The value of `k`, 0 when absent. */
+    def get(k: Long): Int = {
+      val i = slot(k)
+      if (keys(i) == -1L) 0 else vals(i)
+    }
+
+    /** Occupied (key, value) pairs as two arrays. */
+    def entries: (Array[Long], Array[Int]) = {
+      val (ks, vs) = (new Array[Long](n), new Array[Int](n))
+      var j = 0
+      var i = 0
+      while (i < keys.length) {
+        if (keys(i) != -1L) { ks(j) = keys(i); vs(j) = vals(i); j += 1 }
+        i += 1
+      }
+      (ks, vs)
+    }
+  }
+
+  /** R_q per unordered variant pair, over interned variant ids. Serialized
+    * as primitive arrays (the names' UTF-8 bytes and end offsets, the pair
+    * keys, the values); the id map and the table are rebuilt on
+    * deserialization. */
   final class Index private[Ld] (
-      @transient private var table: java.util.HashMap[String, Integer])
+      @transient private var names: Array[String],
+      @transient private var ids: java.util.HashMap[String, Integer],
+      @transient private var table: PairTable)
       extends Serializable {
+
+    private def idOf(v: String): Int = {
+      val id = ids.get(v)
+      if (id == null) -1 else id.intValue
+    }
 
     /** R_q of the pair {a, b}; 0 when the table has no row for it. */
     def lookup(a: String, b: String): Int = {
-      val v = table.get(if (a.compareTo(b) <= 0) key(a, b) else key(b, a))
-      if (v == null) 0 else v.intValue
+      val (x, y) = (idOf(a), idOf(b))
+      if (x < 0 || y < 0) 0 else table.get(pairKey(x, y))
     }
 
-    /** Σ over the distinct pair-multisets of `vs` (see the object doc). */
+    /** Σ over the distinct pair-multisets of `vs` (see the object doc).
+      * Each variant is mapped to its id once; a variant the table does not
+      * name is in no row, so it is dropped before pairing. */
     def score(vs: Seq[String]): Int =
       if (vs == null) 0
       else {
-        val d = vs.distinct.toArray
+        val d = new Array[Int](vs.length)
+        var k = 0
+        vs.foreach { v => val id = idOf(v); if (id >= 0) { d(k) = id; k += 1 } }
+        java.util.Arrays.sort(d, 0, k)
+        // dedup in place; a value occurring twice or more adds its
+        // self-pair once
         var s = 0
+        var m = 0
         var i = 0
-        while (i < d.length) {
+        while (i < k) {
           var j = i + 1
-          while (j < d.length) { s += lookup(d(i), d(j)); j += 1 }
+          while (j < k && d(j) == d(i)) j += 1
+          if (j - i > 1) s += table.get(pairKey(d(i), d(i)))
+          d(m) = d(i); m += 1
+          i = j
+        }
+        i = 0
+        while (i < m) {
+          var j = i + 1
+          while (j < m) { s += table.get(pairKey(d(i), d(j))); j += 1 }
           i += 1
         }
-        // a value occurring twice or more adds its self-pair once
-        if (d.length != vs.length) vs.diff(d).distinct.foreach(v => s += lookup(v, v))
         s
       }
 
     private def writeObject(out: ObjectOutputStream): Unit = {
-      out.writeInt(table.size)
-      table.forEach((k, v) => { out.writeUTF(k); out.writeInt(v) })
+      val bytes = names.map(_.getBytes(UTF_8))
+      out.writeObject(bytes.flatten)
+      out.writeObject(bytes.scanLeft(0)(_ + _.length).tail)
+      val (ks, vs) = table.entries
+      out.writeObject(ks)
+      out.writeObject(vs)
     }
 
     private def readObject(in: ObjectInputStream): Unit = {
-      val n = in.readInt()
-      table = new java.util.HashMap[String, Integer](n * 4 / 3 + 1)
-      (0 until n).foreach(_ => table.put(in.readUTF(), in.readInt()))
+      val bytes = in.readObject().asInstanceOf[Array[Byte]]
+      val ends = in.readObject().asInstanceOf[Array[Int]]
+      val ks = in.readObject().asInstanceOf[Array[Long]]
+      val vs = in.readObject().asInstanceOf[Array[Int]]
+      names = Array.tabulate(ends.length) { i =>
+        val from = if (i == 0) 0 else ends(i - 1)
+        new String(bytes, from, ends(i) - from, UTF_8)
+      }
+      ids = new java.util.HashMap[String, Integer](names.length * 2)
+      names.indices.foreach(i => ids.put(names(i), i))
+      table = new PairTable(ks.length)
+      ks.indices.foreach(i => table.put(ks(i), vs(i)))
     }
   }
 

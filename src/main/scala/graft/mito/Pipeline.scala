@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   *   <prefix>_NT.sam     — nuclear-aligned
   *   <prefix>_MT.sam     — mito-aligned, the records to filter & write
   *
-  * Each sample is one feature query over two dimension tables read on the
-  * driver: the NUMT intervals fold into the NT scan as a literal
-  * expression, and the LD index is broadcast once per [[run]] (once per
-  * [[runCohort]]) and probed per read.
+  * Each sample is one SQL execution, the sink's: both feature scans, the
+  * feature join, the forest walk, the semi-join of `<prefix>_MT` against
+  * the broadcast kept-read keys, and the encode. It runs over two
+  * dimension tables read on the driver: the NUMT intervals fold into the
+  * NT scan as a literal expression, and the interned LD index
+  * ([[Ld.loadIndex]]) is broadcast once per [[run]] (once per
+  * [[runCohort]]) and probed per read. Nothing is persisted.
   */
 object MitoPipeline {
 
@@ -33,7 +36,7 @@ object MitoPipeline {
     * the task closure rather than a broadcast, so the returned frame holds
     * no handle that needs releasing. */
   def features(spark: SparkSession, cfg: Config, label: Double): DataFrame = {
-    val ld = Ld.index(Ld.read(cfg.ldFile))
+    val ld = Ld.loadIndex(cfg.ldFile)
     Features.normalizeMapQ(featureFrame(spark, cfg.prefix,
       Numt.load(spark, cfg.numtFile), () => ld, label))
   }
@@ -52,7 +55,7 @@ object MitoPipeline {
   private def withDims[T](spark: SparkSession, ldFile: String,
       numtFile: String)(body: (Seq[Numt.Interval], () => Ld.Index) => T): T = {
     val numts = Numt.load(spark, numtFile)
-    val ld = spark.sparkContext.broadcast(Ld.index(Ld.read(ldFile)))
+    val ld = spark.sparkContext.broadcast(Ld.loadIndex(ldFile))
     try body(numts, () => ld.value)
     finally ld.destroy()
   }
@@ -73,7 +76,16 @@ object MitoPipeline {
 
   /** Steps 6-10 shared by [[run]] and [[runCohort]]: score the feature
     * frame, filter `<prefix>_MT`, write the single-file sink. Returns the
-    * sink's record count. */
+    * sink's record count.
+    *
+    * Features → score → keys → semi-join → sink is ONE SQL execution (the
+    * sink's): nothing is persisted, and the feature plan is not run ahead
+    * of the write. The reference's empty-input pass-through
+    * (`MTClassify.scala:159-161,194-197`: no read has features, so every
+    * `_MT` record is written) is checked after the write instead: only a
+    * write that kept 0 records asks whether the feature frame is empty,
+    * and if so writes `_MT` again unfiltered. `prob <= 0` passes every
+    * record through with no feature query at all. */
   private def classifyAndWrite(spark: SparkSession, features: DataFrame,
       prefix: String, out: String, prob: Double,
       model: org.apache.spark.ml.classification.RandomForestClassificationModel)
@@ -83,30 +95,21 @@ object MitoPipeline {
     val srcIsBam = graft.sources.HadoopIO.exists(srcBam,
       graft.sources.HadoopIO.driverConf())
     val toWrite = Sam.readAuto(spark, srcBase)
-    // persist the feature frame: the empty guard (isEmpty) and the scoring
-    // pass both consume it — without the cache the guard alone executes the
-    // whole scan→agg→join DAG, then scoring runs it again (the reference
-    // had this same double evaluation, F5)
-    val feat = features
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // empty-input / prob=0 pass-through guards (reference
-      // MTClassify.scala:159-161,194-197)
-      val filtered =
-        if (prob <= 0.0 || feat.isEmpty) toWrite
-        else {
-          val keys = Classify.mtReadKeys(Classify.score(model, feat), prob)
-          Classify.filterAlignments(toWrite, keys)
-        }
-      val (headerText, refs) =
-        if (srcIsBam) graft.sources.BamWriter.readHeader(srcBam)
-        else Sam.headerFromSam(spark, Sam.resolveSamText(srcBase))
+    val (headerText, refs) =
+      if (srcIsBam) graft.sources.BamWriter.readHeader(srcBam)
+      else Sam.headerFromSam(spark, Sam.resolveSamText(srcBase))
+    def write(records: DataFrame): Long =
       if (out.endsWith(".bam"))
-        graft.sources.BamWriter.write(filtered, headerText, refs, out)
+        graft.sources.BamWriter.write(records, headerText, refs, out)
       else
         Sam.writeSingleSamWithHeader(
-          headerText.split("\n").filter(_.nonEmpty), filtered, out)
-    } finally feat.unpersist(blocking = false)
+          headerText.split("\n").filter(_.nonEmpty), records, out)
+    if (prob <= 0.0) write(toWrite)
+    else {
+      val keys = Classify.mtReadKeys(Classify.score(model, features), prob)
+      val n = write(Classify.filterAlignments(toWrite, keys))
+      if (n == 0 && features.isEmpty) write(toWrite) else n
+    }
   }
 
   /** Paired FASTQ → unmapped BAM (the picard `FastqToSam` analogue) —

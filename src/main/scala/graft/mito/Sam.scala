@@ -108,12 +108,14 @@ object Sam {
     * predicate consumes. Applies to any frame with a `flag` column
     * (Sam.parse output or the `sam` DataSource V2 scan). */
   def withFlags(df: DataFrame): DataFrame =
-    df
-      .withColumn("readPaired", (col("flag").bitwiseAND(ReadPaired)) =!= 0)
-      .withColumn("properPair", (col("flag").bitwiseAND(ProperPair)) =!= 0)
-      .withColumn("mateMapped", (col("flag").bitwiseAND(MateUnmapped)) === 0)
-      .withColumn("primaryAlignment", (col("flag").bitwiseAND(NotPrimary)) === 0)
-      .withColumn("supplementaryAlignment", (col("flag").bitwiseAND(Supplementary)) =!= 0)
+    // one select, not a withColumn per flag: each Dataset step re-runs the
+    // analyzer over the whole plan
+    df.select(col("*"),
+      (col("flag").bitwiseAND(ReadPaired) =!= 0).as("readPaired"),
+      (col("flag").bitwiseAND(ProperPair) =!= 0).as("properPair"),
+      (col("flag").bitwiseAND(MateUnmapped) === 0).as("mateMapped"),
+      (col("flag").bitwiseAND(NotPrimary) === 0).as("primaryAlignment"),
+      (col("flag").bitwiseAND(Supplementary) =!= 0).as("supplementaryAlignment"))
 
   /** Validity predicate (reference `Feature.scala:115-119`): primary,
     * paired, proper pair, mate mapped, not supplementary.

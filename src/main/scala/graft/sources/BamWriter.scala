@@ -362,13 +362,23 @@ object BamWriter {
       tags.write(tag.charAt(0)); tags.write(tag.charAt(1))
       typ match {
         case "i" =>
-          // SAM text has one integer type; the bam source emits uint32 `I`
-          // values as `i` too, so values in [2^31, 2^32) go back as `I`
+          // SAM text has one integer type, and the bam source emits every
+          // integer type (c C s S i I) as `i`; BAM stores each value at
+          // the smallest type that holds it, by htslib `sam_parse1`'s rule:
+          // a signed type for text starting with '-', unsigned otherwise
           val v = value.toLong
           require(v >= Int.MinValue && v <= 0xffffffffL,
             s"BamWriter: tag '$t' is out of the int32/uint32 range")
-          tags.write(if (v <= Int.MaxValue) 'i' else 'I')
-          le(v.toInt, 4)
+          val (code, width) =
+            if (value.charAt(0) == '-')
+              if (v >= Byte.MinValue) ('c', 1)
+              else if (v >= Short.MinValue) ('s', 2)
+              else ('i', 4)
+            else if (v <= 0xffL) ('C', 1)
+            else if (v <= 0xffffL) ('S', 2)
+            else ('I', 4)
+          tags.write(code)
+          le(v.toInt, width)
         case "Z" | "H" =>
           tags.write(typ.head)
           value.getBytes("US-ASCII").foreach(b => tags.write(b))

@@ -60,6 +60,15 @@ object HadoopIO {
   /** Every line of a small text file, read on the driver. A compressed
     * file is decoded by its extension, as Spark's text sources do. */
   def readLines(pathStr: String, conf: Configuration): Vector[String] = {
+    val b = Vector.newBuilder[String]
+    foreachLine(pathStr, conf)(b += _)
+    b.result()
+  }
+
+  /** [[readLines]] streamed: `f` sees each line in file order, and no
+    * line collection is built. */
+  def foreachLine(pathStr: String, conf: Configuration)(f: String => Unit)
+      : Unit = {
     val p = new Path(pathStr)
     val raw = fs(p, conf).open(p)
     val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
@@ -67,8 +76,10 @@ object HadoopIO {
     val in = if (codec == null) raw else codec.createInputStream(raw)
     val r = new java.io.BufferedReader(new java.io.InputStreamReader(in,
       java.nio.charset.StandardCharsets.UTF_8))
-    try Iterator.continually(r.readLine()).takeWhile(_ != null).toVector
-    finally r.close()
+    try {
+      var line = r.readLine()
+      while (line != null) { f(line); line = r.readLine() }
+    } finally r.close()
   }
 
   /** Create/overwrite an output stream. */

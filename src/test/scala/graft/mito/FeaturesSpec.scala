@@ -136,6 +136,55 @@ class FeaturesSpec extends SparkSpec {
     assert(got === reference(align))
   }
 
+  test("interned Ld.Index == Ld.scorePairs(Ld.toMap(..)) on random tables " +
+      "and variant lists, also after a Java-serialization round trip") {
+    val rnd = new scala.util.Random(11)
+    val known = (1 to 40).map(i => s"${i * 7}${"ACGT"(i % 4)}")
+    val unknown = Seq("999Z", "1A", "70000T")
+    // rows over a small alphabet, so pairs repeat: duplicates with other
+    // R, reversed rows, self-pairs, and R values that quantize to 0
+    val rows = (1 to 600).map { _ =>
+      val a = known(rnd.nextInt(known.size))
+      val b = if (rnd.nextInt(10) == 0) a else known(rnd.nextInt(known.size))
+      val r = if (rnd.nextInt(8) == 0) "0.000001" else f"${rnd.nextDouble() * 2 - 1}%.5f"
+      s"$a\t$b\t$r"
+    }
+    val parsed = rows.map(_.split("\t")).filter(f => (f(2).toDouble * 100000).toInt != 0)
+    assert(parsed.exists(f => f(0) == f(1)), "no self-pair row")
+    assert(parsed.exists(f => f(0) > f(1)), "no reversed row")
+    assert(parsed.map(f => (f(0), f(1))).distinct.size < parsed.size, "no duplicate row")
+    assert(parsed.exists(f => parsed.exists(g => g(0) == f(1) && g(1) == f(0) && f(0) != f(1))),
+      "no pair present in both orientations")
+    val path = java.nio.file.Files.createTempFile("ld", ".tsv")
+    java.nio.file.Files.write(path, rows.mkString("", "\n", "\n").getBytes("US-ASCII"))
+    val m = Ld.toMap(Ld.load(spark, path.toString))
+    val built = Ld.loadIndex(path.toString)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bytes)
+    oos.writeObject(built); oos.close()
+    val shipped = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+      .asInstanceOf[Ld.Index]
+    val fromRows = Ld.index(Ld.read(path.toString))
+    // lists arrive sorted (mtPerRead's sort_array); repeats and unknown
+    // variants included
+    val lists = Seq(Seq.empty[String], Seq("999Z"), Seq(known.head, known.head)) ++
+      (1 to 400).map { _ =>
+        Seq.fill(rnd.nextInt(12)) {
+          if (rnd.nextInt(6) == 0) unknown(rnd.nextInt(unknown.size))
+          else known(rnd.nextInt(12)) // a narrow range, so values repeat
+        }.sorted
+      }
+    assert(lists.count(vs => vs.distinct.size < vs.size) > 50)
+    for (vs <- lists; idx <- Seq(built, shipped, fromRows))
+      assert(idx.score(vs) === Ld.scorePairs(m, vs), vs)
+    assert(lists.count(vs => Ld.scorePairs(m, vs) != 0) > 100)
+    for (a <- known ++ unknown; b <- known ++ unknown; idx <- Seq(built, shipped)) {
+      val (lo, hi) = if (a <= b) (a, b) else (b, a)
+      assert(idx.lookup(a, b) === Ld.lookup(m, lo, hi), (a, b))
+    }
+  }
+
   test("combinations(2) semantics: duplicate variants across mates collapse") {
     // both mates of rD report 7G (an overlapping read pair sharing a SNP);
     // reference computeR uses variants.flatten.combinations(2), which

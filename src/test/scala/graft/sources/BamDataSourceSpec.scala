@@ -61,10 +61,11 @@ class BamDataSourceSpec extends SparkSpec {
     val split = resource("mito/sample_split.bam")
     val whole = spark.read.format("bam").load(split)
     assert(whole.rdd.getNumPartitions === 1)
-    // 32 KB ranges over a ~256 KB file → 9 byte-range partitions, each
-    // guess-syncing to a record boundary mid-file
+    // 32 KB ranges over a ~250 KB file → one byte-range partition per
+    // started 32 KB (8), each guess-syncing to a record boundary mid-file
     val parts = spark.read.format("bam").option("splitsize", 32768).load(split)
-    assert(parts.rdd.getNumPartitions === 9)
+    val ranges = (java.nio.file.Files.size(java.nio.file.Paths.get(split)) + 32767) / 32768
+    assert(ranges >= 8 && parts.rdd.getNumPartitions === ranges)
     assert(parts.count() === 3000)
     val cols = Seq("readName", "flag", "referenceName", "start", "mapQ",
       "cigar", "rnext", "pnext", "tlen", "sequence", "qual",
