@@ -81,22 +81,22 @@ object Sam {
       .getOrElse(base + ".sam")
 
   /** Reference dictionary + header text from a SAM text header (for
-    * writing BAM output when the inputs were SAM text). */
+    * writing BAM output when the inputs were SAM text): a driver-side
+    * stream read of the leading `@` lines, which are KB-sized and live at
+    * the file head. `.gz`/`.bgz` text inflates on the way: BGZF IS gzip,
+    * and the JDK's GZIPInputStream walks concatenated members, so one
+    * reader covers bgzip and plain gzip. */
   def headerFromSam(spark: SparkSession, path: String): (String, Seq[(String, Int)]) = {
-    val lines: Array[String] =
-      if (path.endsWith(".gz") || path.endsWith(".bgz")) {
-        // driver-side stream decode: the header is KB-sized and lives at
-        // the file head; BGZF IS gzip, and the JDK's GZIPInputStream walks
-        // concatenated members, so one reader covers bgzip and plain gzip
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          new java.util.zip.GZIPInputStream(graft.sources.HadoopIO.open(
-            path, graft.sources.HadoopIO.driverConf())), "UTF-8"))
-        try Iterator.continually(in.readLine())
-          .takeWhile(l => l != null && l.startsWith("@")).toArray
-        finally in.close()
-      } else spark.read.text(path)
-        .where(col("value").startsWith("@"))
-        .collect().map(_.getString(0))
+    val raw = graft.sources.HadoopIO.open(path,
+      spark.sparkContext.hadoopConfiguration)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      if (path.endsWith(".gz") || path.endsWith(".bgz"))
+        new java.util.zip.GZIPInputStream(raw)
+      else raw, "UTF-8"))
+    val lines =
+      try Iterator.continually(in.readLine())
+        .takeWhile(l => l != null && l.startsWith("@")).toArray
+      finally in.close()
     val refs = lines.filter(_.startsWith("@SQ")).map { l =>
       val kv = l.split("\t").drop(1).map(_.split(":", 2)).map(a => a(0) -> a(1)).toMap
       (kv("SN"), kv("LN").toInt)
@@ -155,37 +155,12 @@ object Sam {
   def tagOrDefault(m: Column, tag: String, default: Int): Column =
     coalesce(element_at(m, tag).cast(IntegerType), lit(default))
 
-  /** Write alignments as a single SAM text file (reference sink K1,
-    * `MTClassify.scala:204` wrote one BAM). Header lines are read from the
-    * source SAM (driver-side, header is KB-sized) and prepended. The
-    * records coalesce to one partition only at the very end — every
-    * upstream stage stays parallel. */
-  def writeSingleSam(spark: SparkSession, src: String, records: DataFrame,
-      out: String): Unit = {
-    val header = spark.read.text(src)
-      .where(col("value").startsWith("@"))
-      .collect().map(_.getString(0))
-    writeSingleSamWithHeader(header, records, out)
-  }
-
-  /** As [[writeSingleSam]] but with an explicit header (e.g. reconstructed
-    * from a BAM dictionary when no SAM source exists). All commit-side I/O
-    * goes through the Hadoop FileSystem, so the single file can land on
-    * HDFS/S3 like every other sink; the records stay distributed until the
-    * final text write, whose part files are concatenated byte-for-byte.
-    *
-    * An `out` ending in `.gz`/`.bgz` writes BGZF-compressed text — the
-    * sink symmetric to the `sam` source's compressed reader: each task
-    * deflates its partition as a self-contained run of BGZF members
-    * straight to a part-file (the CPU cost stays in executors, bounded
-    * memory — one ≤60 KB member buffer), and the driver concatenates
-    * member runs plus a header member and the spec's EOF marker. BGZF is
-    * concatenation-safe, so the result is one valid bgzip file that the
-    * compressed reader (and any gzip tool) scans — WITH intra-file
-    * splits. Both plain and compressed go through
-    * [[graft.sources.TextSink]], so every task streams its own partition —
-    * no `coalesce(1)` collapsing the upstream compute to one task.
-    * Returns the number of records written. */
+  /** Write alignments as one SAM text file (reference sink K1,
+    * `MTClassify.scala:204`, wrote one BAM) under an explicit header (e.g.
+    * reconstructed from a BAM dictionary), through the distributed
+    * [[graft.sources.TextSink]] commit: no `coalesce(1)`, and an `out`
+    * ending `.gz`/`.bgz` lands as BGZF text that the `sam` source scans
+    * with intra-file splits. Returns the number of records written. */
   def writeSingleSamWithHeader(header: Seq[String], records: DataFrame,
       out: String): Long =
     graft.sources.TextSink.write(header, records.select(col("line")), out)

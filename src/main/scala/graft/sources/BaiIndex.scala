@@ -383,25 +383,22 @@ object BaiIndex {
     (bins, linear, noCoor, n, stats)
   }
 
-  /** Shift every virtual offset in a task accumulation by `byteShift`
-    * raw file bytes — how a PART-LOCAL accumulation (offsets relative to
-    * a task's own part file) relocates to the concatenated single file
-    * (BGZF members concatenate verbatim, so member offsets translate by
-    * the preceding bytes and intra-member offsets are unchanged;
-    * voffset = (member << 16) | u, so the shift is `byteShift << 16`).
-    * Keys (refId, pos) and counts are position-independent. */
-  private[sources] def shiftTask(p: TaskBai, byteShift: Long): TaskBai = {
-    val d = byteShift << 16
+  /** A PART-LOCAL accumulation (offsets relative to one commit task's
+    * part file) relocated into the committed single file: chunk begins,
+    * linear minima and pseudo-bin begins shift, chunk and pseudo-bin
+    * ends also take the part-tail rule ([[TextSink.Relocation]]). Keys
+    * (refId, pos) and counts are position-independent. */
+  private[sources] def relocate(p: TaskBai, at: TextSink.Relocation)
+      : TaskBai =
     TaskBai(
       p.bins.map { case (k, cs) =>
-        (k, cs.map(c => Chunk(c.beg + d, c.end + d)))
+        (k, cs.map(c => Chunk(at.pos(c.beg), at.end(c.end))))
       },
-      p.linear.map { case (k, v) => (k, v + d) },
+      p.linear.map { case (k, v) => (k, at.pos(v)) },
       p.firstKey, p.lastKey, p.noCoor, p.n,
       p.stats.map { case (k, st) =>
-        (k, st.copy(offBeg = st.offBeg + d, offEnd = st.offEnd + d))
+        (k, st.copy(offBeg = at.pos(st.offBeg), offEnd = at.end(st.offEnd)))
       })
-  }
 
   /** One range's record walk: own the members starting in [start, end),
     * sync to the first record (exact header end when this range holds

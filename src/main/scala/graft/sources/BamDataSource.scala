@@ -439,16 +439,9 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
       return null
     }
     val readName = cstr(lReadName)
-    val cigar = if (nCigar == 0) "*" else {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < nCigar) {
-        val v = i32()
-        sb.append(v >>> 4).append(CigarOps(v & 0xf))
-        i += 1
-      }
-      sb.toString
-    }
+    val cigarWords = new Array[Int](nCigar)
+    var c = 0
+    while (c < nCigar) { cigarWords(c) = i32(); c += 1 }
     val packed = bytes((lSeq + 1) / 2) // must consume regardless of pruning
     val seq = if (!needSeq) "" else if (lSeq == 0) "*" else {
       val sb = new StringBuilder(lSeq)
@@ -479,7 +472,18 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
       }
     }
     val tagBytes = bytes((blockSize - geom).toInt) // consume the record tail
-    val attrs = if (needAttrs) decodeTags(tagBytes) else ""
+    // SAM spec §4.2.2: `<l_seq>S<refLen>N` stands for a CIGAR of more
+    // than 65535 ops, which its CG:B:I tag holds; that tag reads back as
+    // the CIGAR, not as an attribute
+    var longCigar: Array[Int] = null
+    val attrs =
+      if (nCigar == 2 && cigarWords(0) == ((lSeq << 4) | 4) &&
+          (cigarWords(1) & 0xf) == 3) {
+        val a = decodeTags(tagBytes, ops => longCigar = ops)
+        if (needAttrs) a else ""
+      } else if (needAttrs) decodeTags(tagBytes)
+      else ""
+    val cigar = cigarText(if (longCigar == null) cigarWords else longCigar)
     val rname = rname0
     val start = pos + 1
     // RNEXT text form: '*' unavailable, '=' same reference, else the name
@@ -509,30 +513,50 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
     }.toIndexedSeq)
   }
 
+  /** SAM CIGAR text of BAM CIGAR words; `*` for none. */
+  private def cigarText(words: Array[Int]): String =
+    if (words.isEmpty) "*"
+    else {
+      val sb = new StringBuilder
+      var i = 0
+      while (i < words.length) {
+        sb.append(words(i) >>> 4).append(CigarOps(words(i) & 0xf))
+        i += 1
+      }
+      sb.toString
+    }
+
   /** Typed optional tags → the SAM text form "TAG:TYPE:VALUE ..."
     * (whitespace-joined — the attribute convention the feature pipeline's
-    * attrMap consumes; all integer widths normalize to SAM type `i`). */
-  private def decodeTags(raw: Array[Byte]): String = {
+    * attrMap consumes; all integer widths normalize to SAM type `i`).
+    * With `longCigar` set, a `CG:B:I` tag goes to it instead of the
+    * text. */
+  private def decodeTags(raw: Array[Byte],
+      longCigar: Array[Int] => Unit = null): String = {
     val bb = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val out = new StringBuilder
     while (bb.remaining() > 0) {
       val tag = "" + bb.get().toChar + bb.get().toChar
       val typ = bb.get().toChar
-      if (out.nonEmpty) out.append(' ')
-      typ match {
-        case 'A' => out.append(s"$tag:A:${bb.get().toChar}")
-        case 'c' => out.append(s"$tag:i:${bb.get()}")
-        case 'C' => out.append(s"$tag:i:${bb.get() & 0xff}")
-        case 's' => out.append(s"$tag:i:${bb.getShort()}")
-        case 'S' => out.append(s"$tag:i:${bb.getShort() & 0xffff}")
-        case 'i' => out.append(s"$tag:i:${bb.getInt()}")
-        case 'I' => out.append(s"$tag:i:${bb.getInt() & 0xffffffffL}")
-        case 'f' => out.append(s"$tag:f:${bb.getFloat()}")
+      val text = typ match {
+        case 'A' => s"$tag:A:${bb.get().toChar}"
+        case 'c' => s"$tag:i:${bb.get()}"
+        case 'C' => s"$tag:i:${bb.get() & 0xff}"
+        case 's' => s"$tag:i:${bb.getShort()}"
+        case 'S' => s"$tag:i:${bb.getShort() & 0xffff}"
+        case 'i' => s"$tag:i:${bb.getInt()}"
+        case 'I' => s"$tag:i:${bb.getInt() & 0xffffffffL}"
+        case 'f' => s"$tag:f:${bb.getFloat()}"
         case 'Z' | 'H' =>
           val sb = new StringBuilder
           var c = bb.get()
           while (c != 0) { sb.append(c.toChar); c = bb.get() }
-          out.append(s"$tag:$typ:$sb")
+          s"$tag:$typ:$sb"
+        case 'B' if longCigar != null && tag == "CG" &&
+            bb.get(bb.position()) == 'I' =>
+          bb.get()
+          longCigar(Array.fill(bb.getInt())(bb.getInt()))
+          null
         case 'B' =>
           val sub = bb.get().toChar
           val n = bb.getInt()
@@ -547,7 +571,11 @@ class BamPartitionReader(path: String, rangeStart: Long, rangeEnd: Long,
               case 'f' => bb.getFloat().toString
             }
           }
-          out.append(s"$tag:B:$sub,${vals.mkString(",")}")
+          s"$tag:B:$sub,${vals.mkString(",")}"
+      }
+      if (text != null) {
+        if (out.nonEmpty) out.append(' ')
+        out.append(text)
       }
     }
     out.toString

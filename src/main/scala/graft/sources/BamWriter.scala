@@ -7,19 +7,15 @@ import org.apache.spark.sql.{DataFrame, Row}
 
 /** Single-file BAM sink (reference K1 parity: `saveAsSam(..., BAM,
   * asSingleFile=true)`, `MTClassify.scala:204`), written from the SAM/BAM
-  * v1.6 spec.
-  *
-  * BGZF is concatenation-safe (independent gzip members), so the encode +
-  * deflate — the actual CPU cost — runs in EXECUTORS: each task streams
-  * its partition as one self-contained run of BGZF members straight to a
-  * part-file on the output's filesystem (bounded memory: one ~60 KB member
-  * buffer, never a whole-partition array), and the driver only
-  * concatenates the part-files in partition order and appends the
-  * file-level EOF marker — the same commit shape as the SAM sink
-  * ([[graft.mito.Sam.writeSingleSamWithHeader]]) and as hadoop-bam's
-  * part-file merge the reference relied on. No record bytes ever transit
-  * the driver, so partition size is bounded by store capacity, not by
-  * executor/driver heap or `spark.driver.maxResultSize`. */
+  * v1.6 spec. It commits through [[TextSink.commit]] in BGZF form: encode
+  * and deflate, the actual CPU cost, run in executors, each task
+  * streaming its partition as one self-contained run of BGZF members to
+  * its own part file, and the driver only concatenates the parts behind
+  * the header and appends the EOF marker (hadoop-bam's part-file merge,
+  * which the reference relied on). No record bytes transit the driver.
+  * What is BAM-specific lives here: the header payload, the record
+  * [[encode]], the index accumulator feed and the `.bai`/`.csi`
+  * choice. */
 object BamWriter {
 
   /** 4-bit base code by ASCII char; any other char encodes as `N` (15). */
@@ -120,180 +116,84 @@ object BamWriter {
 
   private def cigarRefLen(cigar: String): Int = refLen(cigarOps(cigar))
 
-  /** Write `records` (the sam/bam source schema) as one BAM file.
-    *
-    * Encode + deflate run distributed: each task streams its partition as
-    * one self-contained run of BGZF members to
-    * `<out>.parts/part-<pid>-<attempt>` via the Hadoop FS (only the
-    * current ≤60 KB member is ever buffered — never a whole-partition
-    * array); the driver then writes the header members, concatenates the
-    * part-files of the SUCCESSFUL attempts in partition order (byte copy,
-    * no decode), appends the file-level EOF marker, and drops the scratch
-    * dir. Failed/zombie task attempts write distinct part names the driver
-    * never reads, so retries and speculation are safe.
+  /** Write `records` (the sam/bam source schema) as one BAM file
+    * through [[TextSink.commit]]; returns the record count.
     *
     * With `index = true` (requires coordinate-sorted input —
     * [[sortAndWrite]]'s contract, enforced loudly per task and across
-    * part seams) the write ALSO emits the `.bai` sidecar FROM THE WRITE
-    * ITSELF: each task feeds its records to the same accumulator the
-    * post-hoc split walk uses ([[BaiIndex.BamAcc]]) at write-side
-    * virtual positions ([[BgzfOutputStream.virtualPos]]); the driver
-    * shifts the results by the parts' byte offsets in the concatenated
-    * file and reuses the build's merge + encoder. The sidecar is
-    * BYTE-IDENTICAL to [[BaiIndex.build]] re-run over the finished file
-    * (BamWriterSpec pins it) — index-on-write saves the full re-read a
-    * just-written cohort-scale BAM would otherwise pay before its first
-    * region query. A dictionary whose longest contig exceeds BAI's 2^29
-    * cap emits a `.csi` instead (byte-identical to [[CsiIndex.build]] at
-    * the same (min_shift, depth) — BamWriterCsiSpec pins it), matching
-    * samtools' long-reference indexing behavior. The `index = false` loop
-    * does no accumulator work per record. */
+    * part seams) the write ALSO emits the index FROM THE WRITE ITSELF:
+    * each task feeds its records to the accumulator the post-hoc split
+    * walk uses ([[BaiIndex.BamAcc]]) at write-side virtual offsets, and
+    * the driver relocates the parts ([[BaiIndex.relocate]]) and reuses the
+    * build's merge and encoder. The sidecar is BYTE-IDENTICAL to
+    * [[BaiIndex.build]] re-run over the finished file (BamWriterSpec pins
+    * it), without the full re-read. `.bai` addresses [0, 2^29) only, so a
+    * dictionary with a longer contig (wheat chromosomes, concatenated
+    * pangenome contigs) gets a `.csi` instead, samtools' long-reference
+    * behaviour, at min_shift 14 and the smallest depth covering the
+    * longest contig: byte-identical to [[CsiIndex.build]] at the same
+    * (min_shift, depth) (BamWriterCsiSpec pins it). The accumulation is
+    * scheme-agnostic (CSI at min_shift 14 shares BAI's 16 kb window), so
+    * only the bin function and the encoder differ. */
   def write(records: DataFrame, headerText: String,
       refs: Seq[(String, Int)], out: String, index: Boolean = false): Long = {
-    import org.apache.hadoop.fs.Path
     val refIndex = refs.map(_._1).zipWithIndex.toMap
-    val confBox = HadoopIO.capture()
-    val partsDir = out + ".parts"
-    val doIndex = index
-    // index FORMAT auto-selection (VERDICT r15 #4): `.bai` addresses
-    // [0, 2^29) only, so a dictionary with any contig longer than that
-    // (wheat chromosomes, concatenated pangenome contigs) gets a `.csi`
-    // instead — samtools' own long-reference behavior — at min_shift 14
-    // and the smallest depth covering the longest contig. The task-side
-    // accumulation is scheme-agnostic (bin ids + 16 kb linear minima;
-    // CSI at min_shift 14 shares the window width), so only the bin
-    // function and the encoder differ.
     val maxContigLen = if (refs.isEmpty) 0 else refs.map(_._2).max
-    val useCsi = doIndex && maxContigLen > BaiIndex.MaxPos
-    var csiDepth = 5
-    while (maxContigLen > CsiIndex.maxPos(14, csiDepth)) csiDepth += 1
+    val useCsi = index && maxContigLen > BaiIndex.MaxPos
+    var depth = 5
+    while (maxContigLen > CsiIndex.maxPos(14, depth)) depth += 1
+    val csiDepth = depth // stable local for the task closures
     val scheme =
       if (useCsi) BaiIndex.BinScheme.bamCsi(14, csiDepth)
       else BaiIndex.BinScheme.Bai
     val nRef = refs.size
-    val csiDepthB = csiDepth // stable local for the task closure
-
-    import org.apache.spark.sql.Encoders
-    val parts = records.select("readName", "flag", "referenceName",
-      "start", "mapQ", "cigar", "rnext", "pnext", "tlen", "sequence",
-      "qual", "attributes")
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
-        else {
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val path = f"$partsDir/part-$pid%05d-a${tc.attemptNumber()}"
-          val os = new java.io.BufferedOutputStream(
-            HadoopIO.create(path, confBox.conf), 1 << 16)
-          var n = 0L
-          val acc =
-            if (doIndex) new BaiIndex.BamAcc(scheme, nRef, out) else null
-          var tailV = 0L
-          try {
-            val pz = new BgzfOutputStream(os)
-            while (rows.hasNext) {
-              val r = rows.next()
-              if (!doIndex) pz.write(encode(r, refIndex, csiDepthB))
-              else {
-                val (m0, u0) = pz.virtualPos
-                pz.write(encode(r, refIndex, csiDepthB))
-                val (m1, u1) = pz.virtualPos
-                val pos = r.getInt(3) - 1
-                val flag = r.getInt(1)
-                acc.add(refIndex.getOrElse(r.getString(2), -1), pos,
-                  BaiIndex.endPos(pos, flag, cigarRefLen(r.getString(5))),
-                  flag, (m0 << 16) | u0, (m1 << 16) | u1)
-              }
-              n += 1
-            }
-            if (doIndex) {
-              val (tm, tu) = pz.virtualPos
-              tailV = (tm << 16) | tu
-            }
-            pz.flushBlock() // members only — the EOF marker is file-level
-          } finally os.close()
-          val blob =
-            if (!doIndex) Array.emptyByteArray
-            else {
-              val b = new java.io.ByteArrayOutputStream()
-              val oo = new java.io.ObjectOutputStream(b)
-              oo.writeObject((acc.result, tailV))
-              oo.close()
-              b.toByteArray
-            }
-          Iterator((pid, n, path, blob))
+    val indexer: () => TextSink.PartIndexer[BaiIndex.TaskBai] =
+      if (!index) null
+      else () => new TextSink.PartIndexer[BaiIndex.TaskBai] {
+        private val acc = new BaiIndex.BamAcc(scheme, nRef, out)
+        def add(r: Row, vBeg: Long, vEnd: Long): Unit = {
+          val pos = r.getInt(3) - 1
+          val flag = r.getInt(1)
+          acc.add(refIndex.getOrElse(r.getString(2), -1), pos,
+            BaiIndex.endPos(pos, flag, cigarRefLen(r.getString(5))),
+            flag, vBeg, vEnd)
         }
-      }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
-        Encoders.STRING, Encoders.BINARY))
-      .collect() // task METADATA only (+ KB-sized index accumulations)
-      .sortBy(_._1)
-
-    val conf = records.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new Path(out).getFileSystem(conf)
-    val os = fs.create(new Path(out), true)
-    var headerLen = 0L
-    val partLens = new Array[Long](parts.length)
-    try {
-      // header payload (driver-side, KB-sized), as its own member run
-      val bgzf = new BgzfOutputStream(os)
-      val text = headerText.getBytes("US-ASCII")
-      bgzf.writeLe32(0x014d4142) // "BAM\1" little-endian
-      bgzf.writeLe32(text.length)
-      bgzf.write(text)
-      bgzf.writeLe32(refs.size)
-      refs.foreach { case (name, len) =>
-        val nb = (name + "\u0000").getBytes("US-ASCII")
-        bgzf.writeLe32(nb.length); bgzf.write(nb); bgzf.writeLe32(len)
+        def result: BaiIndex.TaskBai = acc.result
       }
-      bgzf.flushBlock()
-      headerLen = os.getPos
-
-      parts.zipWithIndex.foreach { case ((_, _, p, _), i) =>
-        val in = fs.open(new Path(p))
-        try partLens(i) = in.transferTo(os) finally in.close()
-      }
-      os.write(BgzfOutputStream.EofMarker)
-    } finally {
-      os.close()
-      fs.delete(new Path(partsDir), true)
-    }
-
-    if (doIndex) {
-      // relocate each part's accumulation to the concatenated layout;
-      // read-side member-boundary convention: a record ending exactly at
-      // its part's last payload byte is reported by BgzfInputStream as
-      // ending at the NEXT member's start (the next part's first member,
-      // or the EOF marker), so the chunk ends equal to the part's tail
-      // voffset rewrite to that global offset
-      var shift = headerLen
-      val shifted = parts.zipWithIndex.map { case ((_, _, _, blob), i) =>
-        val (t, tailV) = new java.io.ObjectInputStream(
-          new java.io.ByteArrayInputStream(blob)).readObject()
-          .asInstanceOf[(BaiIndex.TaskBai, Long)]
-        val s0 = shift
-        shift += partLens(i)
-        val st = BaiIndex.shiftTask(t, s0)
-        val shiftedTail = tailV + (s0 << 16)
-        // next member after the part: the next part's first member — or,
-        // past the LAST part, the reader skips the empty EOF member and
-        // reports end-of-file itself (fileLen = eofOffset + 28)
-        val globalNext = (shift + (if (i == parts.length - 1)
-          BgzfOutputStream.EofMarker.length.toLong else 0L)) << 16
-        st.copy(bins = st.bins.map { case (k, cs) =>
-          (k, cs.map(c =>
-            if (c.end == shiftedTail) c.copy(end = globalNext) else c))
-        }, stats = st.stats.map { case (k, rs) =>
-          (k, if (rs.offEnd == shiftedTail) rs.copy(offEnd = globalNext)
-              else rs)
-        })
-      }
-      val (bins, linear, noCoor, _, stats) =
-        BaiIndex.mergeTasks(shifted.toArray, refs.size, out)
+    val (n, parts) = TextSink.commit(
+      records.select("readName", "flag", "referenceName", "start", "mapQ",
+        "cigar", "rnext", "pnext", "tlen", "sequence", "qual", "attributes"),
+      out, headerPayload(headerText, refs), bgzf = true,
+      r => encode(r, refIndex, csiDepth), indexer)
+    if (index) {
+      val conf = records.sparkSession.sparkContext.hadoopConfiguration
+      val (bins, linear, noCoor, _, stats) = BaiIndex.mergeTasks(
+        parts.map { case (t, at) => BaiIndex.relocate(t, at) }.toArray,
+        nRef, out)
       if (useCsi) CsiIndex.writeCsi(out, conf, 14, csiDepth, bins, linear,
         noCoor, stats)
       else BaiIndex.writeBai(out, conf, bins, linear, noCoor, stats)
     }
-    parts.map(_._2).sum
+    n
+  }
+
+  /** The BAM header payload (SAM spec §4.2): magic, text, dictionary. */
+  private def headerPayload(headerText: String, refs: Seq[(String, Int)])
+      : Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream()
+    def le32(v: Int): Unit = {
+      b.write(v); b.write(v >>> 8); b.write(v >>> 16); b.write(v >>> 24)
+    }
+    val text = headerText.getBytes("US-ASCII")
+    le32(0x014d4142) // "BAM\1" little-endian
+    le32(text.length)
+    b.write(text)
+    le32(refs.size)
+    refs.foreach { case (name, len) =>
+      val nb = (name + "\u0000").getBytes("US-ASCII")
+      le32(nb.length); b.write(nb); le32(len)
+    }
+    b.toByteArray
   }
 
   /** The record's `bin` field (SAM spec §4.2.1): reg2bin over
@@ -341,8 +241,23 @@ object BamWriter {
       case nm  => refIdOf(nm) // same loud-unknown-contig discipline
     }
 
+    // fixed-width fields refuse a value they cannot hold: a wrapped
+    // l_read_name corrupts the record, a wrapped MAPQ or FLAG misreads
+    def refuse(what: String): Nothing = throw new IllegalArgumentException(
+      s"BamWriter: read '$readName' $what")
     val name = (readName + "\u0000").getBytes("US-ASCII")
-    val ops = cigarOps(cigar)
+    if (name.length > 0xff) refuse(s"has a ${readName.length}-char QNAME " +
+      "(l_read_name holds at most 254 chars and the NUL)")
+    if (mapq < 0 || mapq > 0xff) refuse(s"has MAPQ $mapq (uint8)")
+    if (flag < 0 || flag > 0xffff) refuse(s"has FLAG $flag (uint16)")
+    // n_cigar is 16 bits: a longer CIGAR is stored as `<l_seq>S<refLen>N`
+    // with the real ops in a trailing CG:B:I tag (SAM spec §4.2.2); the
+    // placeholder spans the same reference length, so `bin` is unchanged
+    val realOps = cigarOps(cigar)
+    val longCigar = realOps.length > 0xffff
+    val ops =
+      if (!longCigar) realOps
+      else Array((seq.length << 4) | 4, (refLen(realOps) << 4) | 3)
     val packed = new Array[Byte]((seq.length + 1) / 2)
     var i = 0
     while (i < seq.length) {
@@ -359,6 +274,8 @@ object BamWriter {
     }
     attrs.split("\\s+").filter(_.nonEmpty).foreach { t =>
       val Array(tag, typ, value) = t.split(":", 3)
+      if (longCigar && tag == "CG") refuse(s"has ${realOps.length} CIGAR " +
+        "ops and its own CG tag, where the real ops must go")
       tags.write(tag.charAt(0)); tags.write(tag.charAt(1))
       typ match {
         case "i" =>
@@ -417,6 +334,11 @@ object BamWriter {
           }
         case other => sys.error(s"unsupported tag type $other in $t")
       }
+    }
+    if (longCigar) {
+      tags.write('C'); tags.write('G'); tags.write('B'); tags.write('I')
+      le(realOps.length, 4)
+      realOps.foreach(le(_, 4))
     }
 
     val body = java.nio.ByteBuffer.allocate(

@@ -386,16 +386,11 @@ object Tabix {
     acc.result
   }
 
-  // ---- index-on-write (VERDICT r14 #1-missing / next-round #3): emit
-  // the sidecar FROM THE WRITE ITSELF. Each TextSink task accumulates
-  // tabix state at write-side virtual positions
-  // ([[BgzfOutputStream.virtualPos]] — BamWriter's .bai-on-write
-  // precedent); the driver shifts every part by its byte offset in the
-  // concatenated file, rewrites part-tail chunk ends to the read side's
-  // member-boundary rounding, and reuses [[mergeParts]] + the shared
-  // encoders — so the sidecar is provably byte-identical to a post-hoc
-  // [[build]]/[[buildCsi]] over the finished file, without the full
-  // re-read a just-written cohort VCF would otherwise pay.
+  // ---- index-on-write: each [[TextSink]] commit task feeds tabix state
+  // at write-side virtual offsets, and the driver relocates every part
+  // into the committed file and reuses [[mergeParts]] and the shared
+  // encoders, so the sidecar is byte-identical to a post-hoc
+  // [[build]]/[[buildCsi]] over the finished file, without the re-read.
 
   /** The one per-record tabix rule for one bin scheme: contiguous contig
     * blocks, sorted positions within a block, the scheme's cap, bin
@@ -454,38 +449,20 @@ object Tabix {
       bins.toSeq.map { case (k, v) => (k, v.toSeq) }, linear.toSeq, n)
   }
 
-  /** [[TextSink.LineIndexer]] for VCF: parse each rendered record line
+  /** [[TextSink.PartIndexer]] for VCF: parse each rendered record line
     * with the post-hoc builders' [[interval]] and feed every requested
-    * scheme's [[WriteAcc]]. Header lines never reach the indexer
-    * (TextSink writes the header on the driver), but '#' is guarded
+    * scheme's [[WriteAcc]]. Header lines never reach the indexer (the
+    * commit writes the header on the driver), but '#' is guarded
     * anyway. */
   private final class VcfWriteIndexer(schemes: Seq[BaiIndex.BinScheme],
-      out: String) extends TextSink.LineIndexer {
+      out: String) extends TextSink.PartIndexer[Seq[TaskTbx]] {
     private val accs = schemes.map(new WriteAcc(_, out))
-    override def add(line: String, vBeg: Long, vEnd: Long): Unit = {
-      val rec = interval(line, s" written to $out")
+    override def add(row: org.apache.spark.sql.Row, vBeg: Long,
+        vEnd: Long): Unit = {
+      val rec = interval(row.getString(0), s" written to $out")
       if (rec != null) accs.foreach(_.add(rec._1, rec._2, rec._3, vBeg, vEnd))
     }
-    override def blob(tailV: Long): Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      val oo = new java.io.ObjectOutputStream(b)
-      oo.writeObject((accs.map(_.result), tailV))
-      oo.close()
-      b.toByteArray
-    }
-  }
-
-  private def schemesFor(tbi: Boolean, csi: Boolean,
-      minShift: Int = 14, depth: Int = 5): Seq[BaiIndex.BinScheme] =
-    (if (tbi) Seq(BaiIndex.BinScheme.Bai) else Nil) ++
-      (if (csi) Seq(csiScheme(minShift, depth)) else Nil)
-
-  /** Per-task indexer factory for [[TextSink.writeIndexed]] — one pass
-    * accumulates every requested sidecar form. */
-  private[sources] def writeIndexer(out: String, tbi: Boolean, csi: Boolean,
-      minShift: Int = 14, depth: Int = 5): () => TextSink.LineIndexer = {
-    val schemes = schemesFor(tbi, csi, minShift, depth)
-    () => new VcfWriteIndexer(schemes, out)
+    override def result: Seq[TaskTbx] = accs.map(_.result)
   }
 
   /** [[TextSink.write]] + index-on-write in one call: stream `lines`
@@ -502,50 +479,35 @@ object Tabix {
     require(out.endsWith(".gz") || out.endsWith(".bgz"),
       s"writeIndexedVcf: '$out' is plain text — tabix virtual offsets " +
         "only exist inside BGZF members")
-    val (n, parts, headerLen, fileLen) = TextSink.writeIndexed(
-      header, lines, out, writeIndexer(out, tbi, csi, minShift, depth))
-    finishIndexOnWrite(out, HadoopIO.driverConf(), parts, headerLen,
-      fileLen, tbi, csi, minShift, depth)
+    val schemes = (if (tbi) Seq(BaiIndex.BinScheme.Bai) else Nil) ++
+      (if (csi) Seq(csiScheme(minShift, depth)) else Nil)
+    val (n, parts) = TextSink.writeLines(header, lines, out,
+      () => new VcfWriteIndexer(schemes, out))
+    finishIndexOnWrite(out, HadoopIO.driverConf(), parts, schemes,
+      minShift, depth)
     n
   }
 
-  /** Driver-side finisher: shift each part's accumulation into the
-    * concatenated file's layout and encode the sidecar(s).
-    * Read-side member-boundary convention: a record ending exactly at
-    * its part's last payload byte is reported by BgzfInputStream as
-    * ending at the NEXT member's start (the next part's first member —
-    * or, past the LAST part, the reader skips the empty EOF member and
-    * reports end-of-file, which is what `fileLen` is), so chunk ends
-    * equal to the part's tail voffset rewrite to that global offset. */
-  private[sources] def finishIndexOnWrite(vcf: String, conf: Configuration,
-      parts: Seq[(Array[Byte], Long)], headerLen: Long, fileLen: Long,
-      tbi: Boolean, csi: Boolean, minShift: Int = 14, depth: Int = 5): Unit = {
-    val decoded: Seq[(Seq[TaskTbx], Long)] = parts.map { case (blob, _) =>
-      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(blob))
-        .readObject().asInstanceOf[(Seq[TaskTbx], Long)]
-    }
-    val starts = parts.map(_._2).scanLeft(headerLen)(_ + _)
-    val schemes = schemesFor(tbi, csi, minShift, depth)
+  /** Driver-side finisher: relocate each part's accumulations into the
+    * committed file ([[TextSink.Relocation]]: chunk begins and linear
+    * minima shift, chunk ends also take the part-tail rule) and encode
+    * one sidecar per scheme. */
+  private def finishIndexOnWrite(vcf: String, conf: Configuration,
+      parts: Seq[(Seq[TaskTbx], TextSink.Relocation)],
+      schemes: Seq[BaiIndex.BinScheme], minShift: Int, depth: Int): Unit =
     schemes.zipWithIndex.foreach { case (scheme, si) =>
-      val shifted = decoded.zipWithIndex.map { case ((ts, tailV), i) =>
-        val sh = starts(i) << 16
-        val shiftedTail = tailV + sh
-        val nextV = (if (i == parts.length - 1) fileLen
-          else starts(i + 1)) << 16
+      val acc = mergeParts(vcf, parts.map { case (ts, at) =>
         val t = ts(si)
         TaskTbx(t.blocks,
-          t.bins.map { case (k, cs) => (k, cs.map { c =>
-            val e = c.end + sh
-            Chunk(c.beg + sh, if (e == shiftedTail) nextV else e)
-          }) },
-          t.linear.map { case (k, v) => (k, v + sh) },
+          t.bins.map { case (k, cs) =>
+            (k, cs.map(c => Chunk(at.pos(c.beg), at.end(c.end))))
+          },
+          t.linear.map { case (k, v) => (k, at.pos(v)) },
           t.n)
-      }
-      val acc = mergeParts(vcf, shifted)
+      })
       if (scheme.csi) writeCsiTabix(vcf, conf, acc, minShift, depth)
       else writeTbi(vcf, conf, acc)
     }
-  }
 
   def read(vcf: String, conf: Configuration = new Configuration()): Tbi = {
     val file = new SeekableFile(sidecarPath(vcf), conf)

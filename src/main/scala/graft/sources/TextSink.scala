@@ -1,105 +1,131 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 
-/** Distributed single-file TEXT sink — the generic form of the commit
-  * shape [[BamWriter]] established for binary BAM: every task streams its
-  * partition's lines straight to an attempt-suffixed part file through the
-  * Hadoop FileSystem (bounded memory, retry/speculation-safe — a task
-  * re-attempt writes a fresh part name and only the successful attempt's
-  * path reaches the driver), and the driver concatenates header + part
-  * BYTES in partition order into one file. Line order in the output is
-  * exactly the frame's partition-major order, so a range-partitioned +
-  * sorted-within-partitions frame lands as one globally sorted text file.
+/** Distributed single-file sinks: one part-file commit behind every
+  * writer that lands a frame as ONE file (text, SAM, VCF, FASTQ, BED,
+  * FASTA and [[BamWriter]]'s BAM).
   *
-  * An `out` ending `.gz`/`.bgz` deflates each partition as a run of
-  * self-contained BGZF members (the bgzip framing SAM/VCF tooling expects:
-  * concatenation-safe, tabix/intra-file-split friendly) and finishes with
-  * the spec EOF marker; plain extensions write raw bytes. Either way the
-  * only driver-side work is metadata-sized: (partition, path) pairs and a
-  * byte copy through the FS — no `coalesce(1)` collapsing upstream
-  * compute to one task, which is what a naive single-file text write
-  * costs at scale.
+  * [[commit]] lets every task encode its partition's rows and stream the
+  * bytes straight to an attempt-suffixed part file
+  * (`<out>.parts/part-<pid>-a<attempt>`) through the Hadoop FileSystem:
+  * bounded memory, and retry- and speculation-safe, because a task
+  * re-attempt writes a fresh part name and only the successful attempt's
+  * path reaches the driver. The driver then writes the header, copies the
+  * part BYTES in partition order, and deletes `.parts`. Row order in the
+  * output is exactly the frame's partition-major order, so a
+  * range-partitioned, sorted-within-partitions frame lands as one
+  * globally sorted file. No `coalesce(1)` collapses upstream compute to
+  * one task, and only metadata-sized results reach the driver.
+  *
+  * In the BGZF form every part is a run of self-contained BGZF members
+  * (concatenation-safe: the bgzip framing SAM/VCF/BAM tooling expects,
+  * intra-file-split friendly), the header is its own member run, and the
+  * file ends with the spec EOF marker. A [[PartIndexer]] then sees every
+  * row at its part-local virtual offsets, and the commit returns each
+  * part's accumulation with the [[Relocation]] that maps those offsets
+  * into the committed file: the one index-on-write path of the `.bai`,
+  * `.csi` and `.tbi` sidecars.
   */
 object TextSink {
 
-  /** Per-task index-accumulation hook for index-on-write over the BGZF
-    * text form: `add` observes every written line with its PART-LOCAL
-    * write-side virtual positions (member byte offset << 16 |
-    * intra-member offset, [[BgzfOutputStream.virtualPos]]); `blob`
-    * returns the task's serialized accumulation (KB-sized — bins and
-    * window minima, never record bytes) for the driver's shift-merge,
-    * `tailV` being the part's final virtual position so part-tail chunk
-    * ends can be rewritten to the read side's member-boundary rounding.
-    * The BamWriter `.bai`-on-write machinery, generalized to any
-    * line-rendered format with a sidecar index. */
-  trait LineIndexer {
-    def add(line: String, vBeg: Long, vEnd: Long): Unit
-    def blob(tailV: Long): Array[Byte]
+  /** Task-side index hook: `add` sees every written row with its
+    * PART-LOCAL write-side virtual offsets (member byte offset << 16 |
+    * intra-member offset, [[BgzfOutputStream.virtualPos]]); `result` is
+    * the task's serializable accumulation (KB-sized: bins and window
+    * minima, never row bytes). */
+  private[sources] trait PartIndexer[T] {
+    def add(row: Row, vBeg: Long, vEnd: Long): Unit
+    def result: T
+  }
+
+  /** Where one part's part-local virtual offsets land in the committed
+    * file. [[pos]] shifts an offset by the part's byte start (BGZF
+    * members concatenate verbatim, so only the member offset moves).
+    * [[end]] does the same except at the part's tail offset: the read
+    * side reports a record ending exactly at its part's last payload byte
+    * as ending at the NEXT member's start, which is the next part's first
+    * member or, past the last part, end of file (the reader skips the
+    * empty EOF member), so the tail rewrites to that global offset. */
+  private[sources] final case class Relocation(shift: Long, tail: Long,
+      next: Long) {
+    def pos(v: Long): Long = v + shift
+    def end(v: Long): Long = if (v == tail) next else v + shift
   }
 
   /** Write `lines` (single string column `line`) as one text file at
-    * `out`, prefixed by `header` lines. Returns the line count. */
+    * `out`, prefixed by `header` lines; an `out` ending `.gz`/`.bgz` is
+    * BGZF. Returns the line count. */
   def write(header: Seq[String], lines: DataFrame, out: String): Long =
-    writeIndexed(header, lines, out, null)._1
+    writeLines(header, lines, out)._1
 
-  /** [[write]] plus index-on-write plumbing: `indexerF` (may be null)
-    * builds one [[LineIndexer]] per task, fed every line as it streams
-    * through the part's [[BgzfOutputStream]]. Returns (line count,
-    * per-part (index blob, part byte length) in partition order, header
-    * byte length, total file byte length) — everything a sidecar
-    * finisher needs to shift part-local virtual offsets to the
-    * concatenated file's layout. */
-  def writeIndexed(header: Seq[String], lines: DataFrame, out: String,
-      indexerF: () => LineIndexer)
-      : (Long, Seq[(Array[Byte], Long)], Long, Long) = {
+  /** [[write]] with an optional per-task [[PartIndexer]] over the lines
+    * (BGZF form only). Returns the line count and, per non-empty part in
+    * file order, its accumulation and relocation. */
+  private[sources] def writeLines[T](header: Seq[String], lines: DataFrame,
+      out: String, indexer: () => PartIndexer[T] = null)
+      : (Long, Seq[(T, Relocation)]) = {
     val gz = out.endsWith(".gz") || out.endsWith(".bgz")
-    require(indexerF == null || gz,
+    require(indexer == null || gz,
       s"TextSink: index-on-write needs the BGZF form — '$out' is plain " +
         "text (virtual offsets only exist inside bgzip members)")
+    // per-line suffix, not mkString's unconditional one: an empty header
+    // must contribute zero bytes, not a lone newline
+    val headerBytes = header.map(_ + "\n").mkString.getBytes("UTF-8")
+    commit(lines.select(col("line")), out, headerBytes, gz,
+      r => (r.getString(0) + "\n").getBytes("UTF-8"), indexer)
+  }
+
+  /** The single-file commit: `encode` renders each row of `rows` in a
+    * task, `header` is written by the driver ahead of the parts (in BGZF
+    * form as its own member run; zero bytes write none), and `indexer`
+    * (may be null, BGZF only) accumulates per part. Returns the row count
+    * and, when indexing, each non-empty part's result with its
+    * [[Relocation]], in file order. */
+  private[sources] def commit[T](rows: DataFrame, out: String,
+      header: Array[Byte], bgzf: Boolean, encode: Row => Array[Byte],
+      indexer: () => PartIndexer[T] = null)
+      : (Long, Seq[(T, Relocation)]) = {
     val confBox = HadoopIO.capture()
     val partsDir = out + ".parts"
-    val parts = lines.select(col("line"))
-      .mapPartitions { rows =>
-        if (!rows.hasNext) Iterator.empty
+    val parts = rows.mapPartitions { it =>
+        if (!it.hasNext) Iterator.empty
         else {
           val tc = org.apache.spark.TaskContext.get()
           val pid = tc.partitionId()
           val path = f"$partsDir/part-$pid%05d-a${tc.attemptNumber()}"
           val os = new java.io.BufferedOutputStream(
             HadoopIO.create(path, confBox.conf), 1 << 16)
+          val ix = if (indexer == null) null else indexer()
           var n = 0L
           var blob = Array.emptyByteArray
           try {
-            val sink: java.io.OutputStream =
-              if (gz) new BgzfOutputStream(os) else os
-            val indexer = if (indexerF == null) null else indexerF()
-            val bz = sink match {
-              case b: BgzfOutputStream => b
-              case _ => null
-            }
+            val bz = if (bgzf) new BgzfOutputStream(os) else null
+            val sink = if (bgzf) bz else os
             def vpos(): Long = {
               val (m, u) = bz.virtualPos
               (m << 16) | u
             }
-            while (rows.hasNext) {
-              val line = rows.next().getString(0)
-              if (indexer == null)
-                sink.write((line + "\n").getBytes("UTF-8"))
+            while (it.hasNext) {
+              val r = it.next()
+              if (ix == null) sink.write(encode(r))
               else {
                 val v0 = vpos()
-                sink.write((line + "\n").getBytes("UTF-8"))
-                indexer.add(line, v0, vpos())
+                sink.write(encode(r))
+                ix.add(r, v0, vpos())
               }
               n += 1
             }
-            if (indexer != null) blob = indexer.blob(vpos())
-            sink match {
-              case bzo: BgzfOutputStream => bzo.flushBlock() // EOF is file-level
-              case _ => sink.flush()
+            if (ix != null) {
+              val b = new java.io.ByteArrayOutputStream()
+              val oo = new java.io.ObjectOutputStream(b)
+              oo.writeObject((ix.result, vpos()))
+              oo.close()
+              blob = b.toByteArray
             }
+            if (bz != null) bz.flushBlock() // the EOF marker is file-level
           } finally os.close()
           Iterator((pid, path, n, blob))
         }
@@ -107,33 +133,38 @@ object TextSink {
         Encoders.scalaLong, Encoders.BINARY))
       .collect() // task METADATA only (+ KB-sized index accumulations)
       .sortBy(_._1)
-    val conf = HadoopIO.driverConf()
+
+    val conf = rows.sparkSession.sparkContext.hadoopConfiguration
     val fs = new Path(out).getFileSystem(conf)
     val os = fs.create(new Path(out), true)
-    var headerLen = 0L
+    val starts = new Array[Long](parts.length + 1) // part byte offsets
     var fileLen = 0L
-    val partLens = new Array[Long](parts.length)
     try {
-      // per-line suffix, not mkString's unconditional one: an empty header
-      // must contribute zero bytes, not a lone newline
-      val headerBytes = header.map(_ + "\n").mkString.getBytes("UTF-8")
-      if (gz) {
+      if (bgzf) {
         val bz = new BgzfOutputStream(os)
-        bz.write(headerBytes)
-        bz.flushBlock() // header as its own member run (zero bytes → none)
-      } else os.write(headerBytes)
-      headerLen = os.getPos
+        bz.write(header)
+        bz.flushBlock()
+      } else os.write(header)
+      starts(0) = os.getPos
       parts.zipWithIndex.foreach { case ((_, p, _, _), i) =>
         val in = fs.open(new Path(p))
-        try partLens(i) = in.transferTo(os) finally in.close()
+        try starts(i + 1) = starts(i) + in.transferTo(os) finally in.close()
       }
-      if (gz) os.write(BgzfOutputStream.EofMarker)
+      if (bgzf) os.write(BgzfOutputStream.EofMarker)
       fileLen = os.getPos
     } finally {
       os.close()
       fs.delete(new Path(partsDir), true)
     }
-    (parts.map(_._3).sum,
-      parts.map(_._4).zip(partLens.toSeq), headerLen, fileLen)
+    val located =
+      if (indexer == null) Nil
+      else parts.indices.map { i =>
+        val (result, tail) = new java.io.ObjectInputStream(
+          new java.io.ByteArrayInputStream(parts(i)._4)).readObject()
+          .asInstanceOf[(T, Long)]
+        val next = if (i == parts.length - 1) fileLen else starts(i + 1)
+        (result, Relocation(starts(i) << 16, tail, next << 16))
+      }
+    (parts.map(_._3).sum, located)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
   * boundaries, radius 0, empty B, duplicate identities collapsing). The
   * driver gate (q106) replays the first [[Fuzz.GateSeeds]] seeds against
   * DuckDB; this spec covers the longer tail. */
-class FuzzSpec extends SparkSpec {
+class FuzzSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
   // fixed fixture pairs — the same values feed the Spark side (as a
@@ -16,6 +16,10 @@ class FuzzSpec extends SparkSpec {
   private val pairs: Seq[(Long, Long)] =
     (0 until 48).map(i => ((i * 97L + 13) % 467, (i * 61L + 29) % 379))
   private lazy val base = pairs.toDF("pk", "sk").persist()
+
+  // the session is shared by every suite: release the cached fixture
+  override def afterAll(): Unit =
+    try base.unpersist(blocking = true) finally super.afterAll()
 
   private def synth(nC: Long, m1: Long, m2: Long, modN: Long,
       stride: Long, width: Long, phase: Long, empty: Boolean)

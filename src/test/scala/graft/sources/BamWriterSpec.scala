@@ -446,6 +446,77 @@ class BamWriterSpec extends SparkSpec {
     }
   }
 
+  test("writer refuses a QNAME, MAPQ or FLAG its BAM field cannot hold, " +
+      "naming the read") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("bamwidth").toString
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val long = "q" * 255
+    for (((name, mapq, flag), i) <- Seq((long, 60, 0), ("m256", 256, 0),
+        ("mneg", -1, 0), ("f65536", 60, 65536)).zipWithIndex) {
+      val rec = Seq((name, flag, "chrM", 1, mapq, "4M", "*", 0, 0, "ACGT",
+        "*", "NM:i:0"))
+        .toDF("readName", "flag", "referenceName", "start", "mapQ", "cigar",
+          "rnext", "pnext", "tlen", "sequence", "qual", "attributes")
+      val e = intercept[Exception](BamWriter.write(rec, "@HD\tVN:1.6\n",
+        Seq("chrM" -> 16569), s"$tmp/bad$i.bam"))
+      assert(msgs(e).exists(_.contains(s"read '$name'")), e.toString)
+    }
+    // the widest legal values still write and read back
+    val edge = Seq(("q" * 254, 65535, "chrM", 1, 255, "4M", "*", 0, 0,
+      "ACGT", "*", "NM:i:0"))
+      .toDF("readName", "flag", "referenceName", "start", "mapQ", "cigar",
+        "rnext", "pnext", "tlen", "sequence", "qual", "attributes")
+    BamWriter.write(edge, "@HD\tVN:1.6\n", Seq("chrM" -> 16569),
+      s"$tmp/edge.bam")
+    val back = spark.read.format("bam").load(s"$tmp/edge.bam")
+      .select("readName", "flag", "mapQ").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSeq
+    assert(back === Seq(("q" * 254, 65535, 255)))
+  }
+
+  test("a CIGAR of more than 65535 ops round-trips through the CG tag " +
+      "(SAM spec 4.2.2), with the bin and the write-side .bai of its span") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("bamcg").toString
+    val longCigar = "1M1I" * 33000 + "5M" // 66001 ops, 33005 reference bases
+    val seq = "A" * 66005
+    val recs = Seq(
+      ("a", 0, "chr1", 100, 60, "10M", "*", 0, 0, "C" * 10, "*", "NM:i:0"),
+      ("long", 0, "chr1", 200, 60, longCigar, "*", 0, 0, seq, "*",
+        "NM:i:0 XZ:Z:x"),
+      ("b", 0, "chr1", 50000, 60, "10M", "*", 0, 0, "G" * 10, "*", "NM:i:1"))
+      .toDF("readName", "flag", "referenceName", "start", "mapQ", "cigar",
+        "rnext", "pnext", "tlen", "sequence", "qual", "attributes")
+      .coalesce(1)
+    val out = s"$tmp/cg.bam"
+    assert(BamWriter.write(recs, "@HD\tVN:1.6\tSO:coordinate\n" +
+      "@SQ\tSN:chr1\tLN:100000\n", Seq("chr1" -> 100000), out,
+      index = true) === 3)
+    // on disk: the placeholder CIGAR, the span's bin, the ops in CG:B:I
+    val body = readRecords(out)("long")
+    assert((body.getShort(12) & 0xffff) === 2)
+    val nameLen = body.get(8) & 0xff
+    assert(body.getInt(32 + nameLen) === (66005 << 4 | 4))
+    assert(body.getInt(36 + nameLen) === (33005 << 4 | 3))
+    assert((body.getShort(10) & 0xffff) === BaiIndex.reg2bin(199, 199 + 33005))
+    // read back: the real CIGAR, and no CG among the attributes
+    val back = spark.read.format("bam").load(out)
+      .select(recordCols: _*)
+    assert(back.except(recs.select(recordCols: _*)).isEmpty &&
+      recs.select(recordCols: _*).except(back).isEmpty)
+    assert(spark.read.format("bam").load(out).where(col("readName") === "long")
+      .select("attributes").head().getString(0) === "NM:i:0 XZ:Z:x")
+    // the write-side index spans the placeholder's reference length too
+    val side = java.nio.file.Paths.get(out + ".bai")
+    val fromWrite = java.nio.file.Files.readAllBytes(side)
+    java.nio.file.Files.delete(side)
+    assert(BaiIndex.build(out) === 3)
+    assert(java.util.Arrays.equals(fromWrite,
+      java.nio.file.Files.readAllBytes(side)))
+  }
+
   test("writer refuses records with unsupported tag types") {
     import spark.implicits._
     val bad = Seq(("r1", 0, "chrM", 1, 60, "4M", "*", 0, 0, "ACGT", "*", "XX:Q:weird"))
